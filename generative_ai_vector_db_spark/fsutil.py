@@ -6,12 +6,14 @@ not just the driver's local POSIX view. This matters on a real cluster:
 
 from __future__ import annotations
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import SparkSession
 
 
 def _hadoop_path_and_fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    # the class by its full name: ``spark._jvm.org.apache...`` would
+    # resolve each package segment with its own py4j round trip
+    hpath = JavaClass("org.apache.hadoop.fs.Path", spark._jvm._gateway_client)(path)
     fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return hpath, fs
 
@@ -21,27 +23,19 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def dir_bytes(spark: SparkSession, path: str, suffix: str = ".parquet") -> int:
-    """Total bytes of files under ``path`` whose name ends with
-    ``suffix`` (recursive)."""
-    hpath, fs = _hadoop_path_and_fs(spark, path)
-    it = fs.listFiles(hpath, True)
-    total = 0
-    while it.hasNext():
-        status = it.next()
-        if status.getPath().getName().endswith(suffix):
-            total += status.getLen()
-    return total
-
-
-def count_files(spark: SparkSession, path: str, suffix: str = ".parquet") -> int:
-    hpath, fs = _hadoop_path_and_fs(spark, path)
-    it = fs.listFiles(hpath, True)
-    n = 0
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(suffix):
-            n += 1
-    return n
+def parquet_stats(spark: SparkSession, *paths: str) -> tuple[int, int]:
+    """(files, bytes) of the ``.parquet`` files under ``paths``
+    (recursive)."""
+    files = size = 0
+    for path in paths:
+        hpath, fs = _hadoop_path_and_fs(spark, path)
+        it = fs.listFiles(hpath, True)
+        while it.hasNext():
+            status = it.next()
+            if status.getPath().getName().endswith(".parquet"):
+                files += 1
+                size += status.getLen()
+    return files, size
 
 
 def rename_dir(spark: SparkSession, src: str, dst: str) -> None:
@@ -50,40 +44,10 @@ def rename_dir(spark: SparkSession, src: str, dst: str) -> None:
     format (Delta/Iceberg commit) replaces this step.
 
     NOTE: a crash between the delete and the rename leaves NEITHER
-    copy at ``dst``. Callers that must survive that window use
-    ``swap_dir`` (two-rename discipline) instead."""
+    copy at ``dst``."""
     spath, fs = _hadoop_path_and_fs(spark, src)
     dpath, _ = _hadoop_path_and_fs(spark, dst)
     if fs.exists(dpath):
         fs.delete(dpath, True)
     if not fs.rename(spath, dpath):
         raise IOError(f"rename {src} -> {dst} failed")
-
-
-OLD_SUFFIX = "._old"
-
-
-def swap_dir(spark: SparkSession, src: str, dst: str) -> None:
-    """Crash-safe directory swap via TWO renames (r14 verdict item 3):
-    ``dst`` -> ``dst._old``, then ``src`` -> ``dst``, then drop the
-    ``._old`` copy. Unlike ``rename_dir`` (delete-then-rename), no
-    instant in this sequence has BOTH copies gone: a crash between the
-    renames leaves the prior copy at ``dst._old`` and the complete new
-    copy at ``src``, so a read-side recovery pass can restore either
-    (``operators.indexes._recover_components``). HDFS renames are
-    atomic; on object stores a table-format commit replaces this."""
-    spath, fs = _hadoop_path_and_fs(spark, src)
-    dpath, _ = _hadoop_path_and_fs(spark, dst)
-    opath, _ = _hadoop_path_and_fs(spark, dst + OLD_SUFFIX)
-    if fs.exists(opath):
-        fs.delete(opath, True)
-    if fs.exists(dpath):
-        if not fs.rename(dpath, opath):
-            raise IOError(f"rename {dst} -> {dst + OLD_SUFFIX} failed")
-    if not fs.rename(spath, dpath):
-        raise IOError(
-            f"rename {src} -> {dst} failed; prior copy preserved at"
-            f" {dst + OLD_SUFFIX}"
-        )
-    if fs.exists(opath):
-        fs.delete(opath, True)

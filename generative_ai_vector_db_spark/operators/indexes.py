@@ -26,132 +26,56 @@ Iceberg at production — an environment binding, not a design change):
     ab_monitor     daily_partials(src_file, day, n, k)     (q367 family)
     drift_monitor  daily_partials(src_file, day, n, s, ..) (q368 family)
 
-The kind is recorded in a one-row ``_meta`` parquet component at
-create time, so ``append``/``query`` dispatch without the caller
-restating it. ``neardup`` is a document index: its absorb classifies
-AND absorbs (results land in the index's ``results`` component), and
-``query_index`` is undefined for it by design — probing without
-absorbing is the batch op q322. The two monitor kinds (r15, VERDICT
-r14 item 4) are EVENT indexes: their absorb reduces a micro-batch of
-events to per-day integer partials, and their read face is
-``read_index`` — the full anytime e-process table (q367/q368) over
-everything absorbed so far; ``query_index`` is undefined for them.
+Index state lives in one versioned JSON manifest per index
+(``manifest.py``). Create, append and compact each commit version n+1
+with one manifest write (temp file, no-overwrite rename); garbage
+collection after the commit deletes every tagged subdirectory that
+neither n+1 nor n lists, unless it targets a later version. Every call
+below reads the manifest through Hadoop FileSystem calls — no Spark
+job — and opens only the subdirectories it lists, so a reader racing
+an append or a compaction sees one committed version and a crash at
+any point leaves the previous version readable.
+
+``neardup`` is a document index: its absorb classifies AND absorbs
+(results land in the index's ``results`` table), and ``query_index``
+is undefined for it by design — probing without absorbing is the
+batch op q322. The two monitor kinds (r15, VERDICT r14 item 4) are
+EVENT indexes: their absorb reduces a micro-batch of events to per-day
+integer partials, and their read face is ``read_index`` — the full
+anytime e-process table (q367/q368) over everything absorbed so far;
+``query_index`` is undefined for them.
 
 Scale: every operation below is a thin dispatcher over the streaming
-faces, which are each O(batch) per trigger with read-side dedup /
-degree bounds; nothing here adds a corpus rescan.
+faces, which are O(batch) per trigger with read-side dedup / degree
+bounds, with two O(store) exceptions in the near-dup absorb
+(``streaming/ingest_stream.py::_neardup_batch``): the band-cap regroup
+``_pmh_kept_bands`` over every stored band row, and the ``results``
+sink, which reads and rewrites the whole results table per batch.
 """
 
 from __future__ import annotations
 
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .. import manifest
+from ..fsutil import _hadoop_path_and_fs, parquet_stats
 from ..fsutil import path_exists as _path_exists
 
-_COMPONENTS = {
-    "ivfpq": ("codes", "vectors"),
-    "hyperplane": ("buckets", "vectors"),
-    "graph": ("edges", "vectors"),
-    "neardup": ("bands", "shingles"),
-    "ab_monitor": ("daily_partials",),
-    "drift_monitor": ("daily_partials",),
-}
-
-_VECTOR_KINDS = ("ivfpq", "hyperplane", "graph")
+_KINDS = ("ivfpq", "hyperplane", "graph", "neardup", "ab_monitor", "drift_monitor")
 _MONITOR_KINDS = ("ab_monitor", "drift_monitor")
-
-_COMPACT_SUFFIX = "._compacting"
-
-# a base-present staging dir younger than this is treated as a LIVE
-# compactor's and left alone; crash remnants age past it and are
-# swept by a later catalog call (see _recover_components)
-COMPACT_STALE_MS = 3_600_000
 
 
 def _index_path(root: str, name: str) -> str:
     return os.path.join(root, name)
 
 
-def _meta_path(root: str, name: str) -> str:
-    return os.path.join(_index_path(root, name), "_meta")
-
-
-def _recover_components(spark: SparkSession, root: str, name: str) -> None:
-    """Read-side recovery for a crash inside ``compact_index``'s
-    two-rename swap (r14 verdict item 3). Every catalog operation
-    passes through here (via ``index_kind``), so a component is never
-    observed missing:
-
-    - base present  + ``._old``/``._compacting`` leftover -> the swap
-      completed (or the staging write died early); drop the leftover.
-    - base MISSING + committed ``._compacting`` (has _SUCCESS — the
-      swap only starts after the staging write commits) -> the crash
-      hit between the two renames; roll FORWARD by renaming the staged
-      copy into place (compaction is answer-preserving, so forward ==
-      back for readers).
-    - base MISSING + ``._old`` only -> roll BACK the prior copy.
-
-    Committed-``._compacting`` entries are processed first so the
-    between-renames state (both leftovers present) deterministically
-    rolls forward. Cost: one listStatus of the index dir per call.
-
-    Concurrency (r15 review): recovery runs on EVERY catalog call, so
-    a reader racing an in-flight ``compact_index`` would otherwise
-    delete the compactor's LIVE staging dir (worst case: the compact
-    fails; the store itself stays intact via rollback). A
-    base-present ``._compacting`` is therefore only swept once its
-    mtime is older than ``COMPACT_STALE_MS`` — a live compactor's
-    staging is always fresh, while genuine crash remnants age past the
-    threshold and get collected by a later call. Roll-forward /
-    roll-back (base MISSING) stay immediate: readers need the
-    component back NOW, and a live compactor can only be mid-swap
-    there, where both interleavings converge (rename/delete of an
-    already-moved path is a no-op failure, not data loss)."""
-    from ..fsutil import OLD_SUFFIX, _hadoop_path_and_fs
-
-    path = _index_path(root, name)
-    hpath, fs = _hadoop_path_and_fs(spark, path)
-    if not fs.exists(hpath):
-        return
-    leftovers = []
-    mtimes = {}
-    for st in fs.listStatus(hpath):
-        n = st.getPath().getName()
-        if n.endswith(OLD_SUFFIX) or n.endswith(_COMPACT_SUFFIX):
-            leftovers.append(n)
-            mtimes[n] = st.getModificationTime()
-    now_ms = int(time.time() * 1000)
-    for n in sorted(leftovers, key=lambda x: not x.endswith(_COMPACT_SUFFIX)):
-        suffix = _COMPACT_SUFFIX if n.endswith(_COMPACT_SUFFIX) else OLD_SUFFIX
-        base = os.path.join(path, n[: -len(suffix)])
-        lpath = os.path.join(path, n)
-        lp, _ = _hadoop_path_and_fs(spark, lpath)
-        committed = suffix == OLD_SUFFIX or _path_exists(
-            spark, os.path.join(lpath, "_SUCCESS")
-        )
-        if _path_exists(spark, base) or not committed:
-            if (
-                suffix == _COMPACT_SUFFIX
-                and _path_exists(spark, base)
-                and now_ms - mtimes[n] < COMPACT_STALE_MS
-            ):
-                continue  # possibly a LIVE compactor's staging dir
-            fs.delete(lp, True)
-        else:
-            bp, _ = _hadoop_path_and_fs(spark, base)
-            if not fs.rename(lp, bp):
-                raise IOError(f"recovery rename {lpath} -> {base} failed")
-
-
 def index_kind(spark: SparkSession, root: str, name: str) -> str:
-    meta = _meta_path(root, name)
-    if not _path_exists(spark, meta):
+    m = manifest.latest(spark, _index_path(root, name))
+    if m is None:
         raise ValueError(f"index {name!r} does not exist under {root!r}")
-    _recover_components(spark, root, name)
-    return spark.read.parquet(meta).first()["kind"]
+    return m.kind
 
 
 def create_index(
@@ -162,31 +86,25 @@ def create_index(
     one-time backfill before append/stream maintenance takes over."""
     from ..streaming import ingest_stream as ist
 
-    if kind not in _COMPONENTS:
+    if kind not in _KINDS:
         raise ValueError(f"unknown index kind {kind!r}")
-    # Refuse to clobber: a re-create of a different kind would
-    # overwrite _meta but orphan the old kind's components on disk
-    # (seeds overwrite only their OWN components), leaving a catalog
-    # entry whose directory mixes two families. Growing an existing
-    # index is append_index / run_index_stream — the reference's
-    # create-or-append (helper/multiple_document_upload.py:161-168)
-    # is that explicit caller decision, not a silent overwrite.
-    if _path_exists(spark, _meta_path(root, name)):
+    # Refuse to clobber: growing an existing index is append_index /
+    # run_index_stream — the reference's create-or-append
+    # (helper/multiple_document_upload.py:161-168) is that explicit
+    # caller decision, not a silent overwrite.
+    path = _index_path(root, name)
+    if manifest.latest(spark, path) is not None:
         raise ValueError(
             f"index {name!r} already exists under {root!r}; use"
             " append_index / run_index_stream to grow it"
         )
-    path = _index_path(root, name)
-    # A directory WITHOUT _meta is invisible garbage by the drop
+    # A directory WITHOUT a manifest is invisible garbage by the drop
     # contract (drop deletes _meta first, so a crash mid-drop leaves
     # exactly this state). Clear it before seeding so stale components
-    # from the half-dropped index can't leak into the new one via
-    # open/describe/compact (r14 advice).
-    if _path_exists(spark, path):
-        from ..fsutil import _hadoop_path_and_fs
-
-        hpath, fs = _hadoop_path_and_fs(spark, path)
-        fs.delete(hpath, True)
+    # from the half-dropped index can't leak into the new one (r14
+    # advice).
+    hpath, fs = _hadoop_path_and_fs(spark, path)
+    fs.delete(hpath, True)
     if kind == "ivfpq":
         ist.seed_vector_index(spark, df, path)
     elif kind == "hyperplane":
@@ -199,9 +117,6 @@ def create_index(
         ist._drift_monitor_batch(df, path)
     else:
         ist.seed_neardup_index(spark, df, path)
-    spark.createDataFrame([(name, kind)], "name string, kind string").coalesce(
-        1
-    ).write.mode("overwrite").parquet(_meta_path(root, name))
 
 
 def append_index(
@@ -319,47 +234,53 @@ def read_index(spark: SparkSession, root: str, name: str) -> DataFrame:
     )
 
 
+def _manifest(spark: SparkSession, root: str, name: str) -> manifest.Manifest:
+    index_kind(spark, root, name)  # raises on unknown names
+    return manifest.latest(spark, _index_path(root, name))
+
+
 def open_index(
     spark: SparkSession, root: str, name: str
 ) -> dict[str, DataFrame]:
-    """R15 analog: open every existing component of a named index."""
-    kind = index_kind(spark, root, name)
+    """R15 analog: open every committed component of a named index,
+    plus its near-dup ``results`` table when there is one."""
+    m = _manifest(spark, root, name)
     path = _index_path(root, name)
-    out = {}
-    for comp in _COMPONENTS[kind] + ("results",):
-        cpath = os.path.join(path, comp)
-        if _path_exists(spark, cpath):
-            out[comp] = spark.read.parquet(cpath)
+    out = {comp: manifest.read(spark, path, m, comp) for comp in m.components}
+    if _path_exists(spark, os.path.join(path, "results")):
+        out["results"] = spark.read.parquet(os.path.join(path, "results"))
     return out
 
 
 def describe_index(spark: SparkSession, root: str, name: str) -> DataFrame:
-    """One row per component: (name, kind, component, n_rows)."""
-    kind = index_kind(spark, root, name)
-    comps = open_index(spark, root, name)
-    rows = [
-        (name, kind, comp, df.count()) for comp, df in sorted(comps.items())
-    ]
+    """One row per component: (name, kind, component, n_rows, version,
+    files, bytes). ``version`` is the committed manifest version;
+    ``files``/``bytes`` are the parquet files the component's listed
+    subdirectories hold (the ``results`` table's own, for neardup)."""
+    m = _manifest(spark, root, name)
+    path = _index_path(root, name)
+    rows = []
+    for comp, df in sorted(open_index(spark, root, name).items()):
+        dirs = manifest.paths(path, m, comp) or [os.path.join(path, comp)]
+        files, size = parquet_stats(spark, *dirs)
+        rows.append((name, m.kind, comp, df.count(), m.version, files, size))
     return spark.createDataFrame(
-        rows, "name string, kind string, component string, n_rows bigint"
+        rows,
+        "name string, kind string, component string, n_rows bigint,"
+        " version bigint, files bigint, bytes bigint",
     )
 
 
 def list_indexes(spark: SparkSession, root: str) -> DataFrame:
     """Catalog listing: every named index under ``root``."""
-    from ..fsutil import _hadoop_path_and_fs
-
     rows = []
     if _path_exists(spark, root):
         hpath, fs = _hadoop_path_and_fs(spark, root)
         for st in fs.listStatus(hpath):
-            if not st.isDirectory():
-                continue
             name = st.getPath().getName()
-            meta = _meta_path(root, name)
-            if _path_exists(spark, meta):
-                kind = spark.read.parquet(meta).first()["kind"]
-                rows.append((name, kind))
+            m = st.isDirectory() and manifest.latest(spark, _index_path(root, name))
+            if m:
+                rows.append((name, m.kind))
     return spark.createDataFrame(
         sorted(rows), "name string, kind string"
     )
@@ -370,25 +291,22 @@ def compact_index(spark: SparkSession, root: str, name: str) -> DataFrame:
     the absorb faces defer to): rewrite each component to its
     READ-SIDE-CANONICAL view — vectors/codes/buckets deduped by key,
     graph edges pruned to the per-src degree bound that queries already
-    apply — via a staging write + the TWO-RENAME swap (``swap_dir``,
-    r14 verdict item 3): the staged copy commits (with _SUCCESS)
-    before the live component moves aside, so NO instant of the swap
-    has both copies gone. A crash anywhere in the sequence leaves a
-    state ``_recover_components`` repairs on the next catalog call —
-    partial stage with base intact: stage dropped; between the
-    renames: committed stage rolls forward; after the second rename:
-    stale ``._old`` dropped. Query results are unchanged by
+    apply — into fresh subdirectories, then commit ONE manifest version
+    that lists only those. A crash before the commit leaves the
+    previous version served and the staged rows unread, for the next
+    commit's garbage collection. Query results are unchanged by
     construction (the rewrite IS the read-side view); only storage and
-    probe-scan width shrink. Returns one row per compacted component:
-    (name, component, rows_before, rows_after).
+    probe-scan width shrink. The near-dup ``results`` table is left
+    alone: its sink rewrites it whole, keep-first by doc_id, per batch.
+    Returns one row per compacted component: (name, component,
+    rows_before, rows_after).
 
     Scale: one shuffle per component on its key — the same cost as one
     absorb over the whole store, scheduled offline (nightly / when the
     append tail exceeds a fraction of the base), never per trigger."""
-    from ..fsutil import swap_dir
     from ..streaming.ingest_stream import _graph_index_edges
 
-    kind = index_kind(spark, root, name)
+    m = _manifest(spark, root, name)
     path = _index_path(root, name)
     dedup_keys = {
         "vectors": ["vec_id"],
@@ -396,25 +314,21 @@ def compact_index(spark: SparkSession, root: str, name: str) -> DataFrame:
         "buckets": ["vec_id", "tbl"],
         "bands": ["doc_id", "band"],
         "shingles": ["doc_id"],
-        "results": ["doc_id"],
         "daily_partials": ["src_file", "day"],
     }
-    rows = []
-    for comp in _COMPONENTS[kind] + ("results",):
-        cpath = os.path.join(path, comp)
-        if not _path_exists(spark, cpath):
-            continue
-        before = spark.read.parquet(cpath)
-        n_before = before.count()
-        if kind == "graph" and comp == "edges":
-            canonical = _graph_index_edges(spark, path)
-        else:
-            canonical = before.dropDuplicates(dedup_keys[comp])
-        tmp = cpath + _COMPACT_SUFFIX
-        canonical.write.mode("overwrite").parquet(tmp)
-        n_after = spark.read.parquet(tmp).count()
-        swap_dir(spark, tmp, cpath)
-        rows.append((name, comp, n_before, n_after))
+    before = {c: manifest.read(spark, path, m, c) for c in sorted(m.components)}
+    n_before = {c: df.count() for c, df in before.items()}
+    canonical = {
+        c: _graph_index_edges(spark, path, m)
+        if c == "edges"
+        else df.dropDuplicates(dedup_keys[c])
+        for c, df in before.items()
+    }
+    done = manifest.write(spark, path, m.kind, m, canonical, replace=True)
+    rows = [
+        (name, c, n, manifest.read(spark, path, done, c).count())
+        for c, n in n_before.items()
+    ]
     return spark.createDataFrame(
         rows,
         "name string, component string, rows_before bigint,"
@@ -431,11 +345,10 @@ def drop_index(spark: SparkSession, root: str, name: str) -> None:
     deletes ``_meta`` FIRST — a crash mid-drop then leaves a
     directory the catalog no longer lists (invisible garbage, never
     a half-readable index)."""
-    from ..fsutil import _hadoop_path_and_fs
-
     # raises ValueError on unknown names
     index_kind(spark, root, name)
-    mpath, fs = _hadoop_path_and_fs(spark, _meta_path(root, name))
+    path = _index_path(root, name)
+    mpath, fs = _hadoop_path_and_fs(spark, os.path.join(path, manifest.META))
     fs.delete(mpath, True)
-    hpath, fs = _hadoop_path_and_fs(spark, _index_path(root, name))
+    hpath, fs = _hadoop_path_and_fs(spark, path)
     fs.delete(hpath, True)

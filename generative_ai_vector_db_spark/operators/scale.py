@@ -127,13 +127,13 @@ def compact(
     paths — no driver-local ``os.walk``."""
     import math
 
-    from ..fsutil import count_files, dir_bytes
+    from ..fsutil import parquet_stats
 
     df = spark.read.parquet(src_path)
-    total_bytes = dir_bytes(spark, src_path)
+    total_bytes = parquet_stats(spark, src_path)[1]
     n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
     df.repartition(n_files).write.mode("overwrite").parquet(dst_path)
-    return count_files(spark, dst_path)
+    return parquet_stats(spark, dst_path)[0]
 
 
 # ---------------------------------------------------------------------------

@@ -648,10 +648,10 @@ ORACLE: dict[str, str] = {
 # lane by lane on int64 (same %/div arithmetic, non-negative ids,
 # < 2^63/1700 — no wrap), and u = cast-to-double / HASH_MOD compares
 # against the same _POIS literals, so every multiplicity is the
-# bit-identical integer; the 8-dp round before ranking absorbs the
-# partial-sum association order exactly as it already absorbed Spark's
-# partition-order sum. Final rows verified equal vs the fan-out form
-# at sf0.001/0.01/0.1 + the synthetic events decade.
+# bit-identical integer. The 8-dp round before ranking absorbed the
+# partial-sum association order on the fixtures, as it absorbs Spark's
+# partition-order sum — verified, not proven: final rows equal the
+# fan-out form at sf0.001/0.01/0.1 + the synthetic events decade.
 # ---------------------------------------------------------------------------
 from ..functions.hashing import (
     HASH_MOD,
@@ -701,6 +701,12 @@ def q305_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
             eid_all = pdf["event_id"].to_numpy(dtype=np.int64)
             val_all = pdf["value"].to_numpy(dtype=np.float64)
             et_all = pdf["event_type"].to_numpy()
+            # SOURCE CONTRACT: the lane math equals mix_spark only for
+            # event_id >= 0 (numpy's floor mod and Spark's truncating %
+            # part ways below zero), and np.unique cannot rank a null
+            # event_type among strings — fail loudly, never diverge
+            if (eid_all < 0).any() or pd.isna(et_all).any():
+                raise ValueError("q305 needs event_id >= 0, event_type set")
             types, codes = np.unique(et_all, return_inverse=True)
             smv = np.zeros((len(types), B), dtype=np.float64)
             sm = np.zeros((len(types), B), dtype=np.int64)

@@ -3471,11 +3471,11 @@ def _nng_topr(scored: DataFrame) -> DataFrame:
     rule is preserved exactly — and slice keeps the NNG_R best.
     Map-side partial aggregation replaces the partition sort; the
     per-group sort touches <= ~NNG_R*(NNG_R+2) structs. collect_set
-    also makes the (u, v)-dedup contract explicit (identical pairs
-    collapse; callers pre-dedup so this is belt-and-braces, not a
-    semantics change). Edge list verified bit-identical vs the window
-    form at sf0.001/0.01/0.1 + the synthetic decade; test-locked in
-    test_round16_ops."""
+    also collapses identical (u, v) pairs; both callers in _nng_graph
+    dedup on (u, v) first (the ring init repeats a v whenever
+    max(vec_id)+1 divides d*NNG_STRIDE for some d < NNG_R). Edge list
+    verified bit-identical vs the window form at sf0.001/0.01/0.1 + the
+    synthetic decade; test-locked in test_round16_ops."""
     top = scored.groupBy("u").agg(
         F.slice(
             F.array_sort(
@@ -3542,6 +3542,7 @@ def _nng_graph(codes: DataFrame) -> DataFrame:
         )
         .where(F.col("u") != F.col("v"))
         .join(ids.select(F.col("vec_id").alias("v")), "v", "semi")
+        .dropDuplicates(["u", "v"])
     )
     g = _nng_topr(_nng_score(init, codes)).localCheckpoint()
     for _ in range(NNG_ROUNDS):

@@ -18,11 +18,10 @@ maxFilesPerTrigger.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import manifest
 from ..fsutil import path_exists as _path_exists
 from ..operators.chunker import chunk_udf
 from ..sources.embedding_stage import embed_text
@@ -218,15 +217,25 @@ def run_upsert_stream(
 #   - the probe excludes self-matches (dup != doc), so a replayed doc
 #     does not classify as a duplicate of its own absorbed rows;
 #   - results merge keep-first by doc_id, so replays converge to the
-#     identical results table (tested by replay-equivalence).
+#     identical results table (tested by replay-equivalence);
+#   - band and shingle rows land in ONE manifest commit, so a crash
+#     never leaves bands without their shingles.
 # Unlike q322's fixture arithmetic (doc_id % 10 == 7 marks the batch),
 # store membership here is POSITIONAL — a row is store iff it came
 # from the persisted index — which is what production semantics need.
 # ---------------------------------------------------------------------------
-def _neardup_index_paths(index_path: str) -> tuple[str, str]:
-    return os.path.join(index_path, "bands"), os.path.join(
-        index_path, "shingles"
-    )
+def _commit(
+    spark: SparkSession, index_path: str, kind: str, frames: dict, replace=False
+) -> None:
+    """Commit ``frames`` on top of the latest version — or, for a
+    backfill (``replace``), as the index's whole content."""
+    base = manifest.latest(spark, index_path)
+    manifest.write(spark, index_path, kind, base, frames, replace)
+
+
+def _vectors(spark: SparkSession, index_path: str, m) -> DataFrame:
+    # dedup read-side: a seed corpus may repeat a vec_id
+    return manifest.read(spark, index_path, m, "vectors").dropDuplicates(["vec_id"])
 
 
 def _neardup_batch(
@@ -244,18 +253,13 @@ def _neardup_batch(
     docs = batch.select("doc_id", "text")
     shingled = _pmh_shingle_sigs(docs).localCheckpoint()
     bands_b = _pmh_bands(shingled.select("doc_id", "sigs"))
-    bands_path, shing_path = _neardup_index_paths(index_path)
-
-    if _path_exists(spark, bands_path):
-        store_bands = spark.read.parquet(bands_path)
-        store_sh = spark.read.parquet(shing_path)
-    else:
-        store_bands = spark.createDataFrame(
-            [], "doc_id bigint, band int, key bigint"
-        )
-        store_sh = spark.createDataFrame(
-            [], "doc_id bigint, shingles array<bigint>"
-        )
+    m = manifest.latest(spark, index_path)
+    store_bands = manifest.read(
+        spark, index_path, m, "bands", "doc_id bigint, band int, key bigint"
+    )
+    store_sh = manifest.read(
+        spark, index_path, m, "shingles", "doc_id bigint, shingles array<bigint>"
+    )
 
     # --- classify: positional store membership (_st flag), q322's
     #     probe shape otherwise ---
@@ -376,23 +380,13 @@ def _neardup_batch(
     rename_dir(spark, tmp, results_path)
 
     # --- absorb: append ONLY unseen doc_ids (replay-idempotent) ---
-    if _path_exists(spark, bands_path):
-        seen = spark.read.parquet(bands_path).select("doc_id").distinct()
-        new_bands = bands_b.join(seen, "doc_id", "left_anti")
-        new_sh = shingled.select("doc_id", "shingles").join(
+    seen = store_bands.select("doc_id").distinct()
+    manifest.write(spark, index_path, "neardup", m, {
+        "bands": bands_b.join(seen, "doc_id", "left_anti"),
+        "shingles": shingled.select("doc_id", "shingles").join(
             seen, "doc_id", "left_anti"
-        )
-    else:
-        new_bands, new_sh = bands_b, shingled.select("doc_id", "shingles")
-    # shingles BEFORE bands: `seen` derives from the band store, so a
-    # crash between the two writes re-absorbs the doc next run (band
-    # rows stay exactly-once); a duplicated shingle row from that
-    # re-absorb is neutralized by the read-side dropDuplicates above.
-    # The reverse order would leave bands WITHOUT shingles — a doc the
-    # probe can match but the verify silently cannot confirm.
-    new_sh = new_sh.localCheckpoint()  # pin before the band write flips `seen`
-    new_sh.write.mode("append").parquet(shing_path)
-    new_bands.write.mode("append").parquet(bands_path)
+        ),
+    })
 
 
 def seed_neardup_index(
@@ -402,14 +396,11 @@ def seed_neardup_index(
     corpus (the one-time backfill before the stream takes over)."""
     from ..operators.dedup import _pmh_bands, _pmh_shingle_sigs
 
-    bands_path, shing_path = _neardup_index_paths(index_path)
     shingled = _pmh_shingle_sigs(docs.select("doc_id", "text")).localCheckpoint()
-    _pmh_bands(shingled.select("doc_id", "sigs")).write.mode(
-        "overwrite"
-    ).parquet(bands_path)
-    shingled.select("doc_id", "shingles").write.mode("overwrite").parquet(
-        shing_path
-    )
+    _commit(spark, index_path, "neardup", {
+        "bands": _pmh_bands(shingled.select("doc_id", "sigs")),
+        "shingles": shingled.select("doc_id", "shingles"),
+    }, replace=True)
 
 
 def run_neardup_stream(
@@ -458,17 +449,10 @@ def run_neardup_stream(
 # testable equality (test_round13_ops), not a design claim.
 #
 # At-least-once safety (the _neardup_batch discipline): absorb is
-# vec_id-anti-joined against the code store, embeddings write BEFORE
-# codes (a crash between the two re-absorbs the vector next run;
-# duplicated embedding rows are neutralized read-side by
-# dropDuplicates), so replays converge to the identical index.
+# vec_id-anti-joined against the code store and commits vectors and
+# codes in one manifest version, so replays converge to the identical
+# index.
 # ---------------------------------------------------------------------------
-def _vector_index_paths(index_path: str) -> tuple[str, str]:
-    return os.path.join(index_path, "codes"), os.path.join(
-        index_path, "vectors"
-    )
-
-
 def _vector_index_batch(batch: DataFrame, index_path: str) -> None:
     from ..operators.vector import _int8_codes, _ivf_assign, _pq_encode
 
@@ -481,19 +465,13 @@ def _vector_index_batch(batch: DataFrame, index_path: str) -> None:
     emb = batch.select("vec_id", "embedding").dropDuplicates(["vec_id"])
     codes = _int8_codes(emb).select("vec_id", "code")
     entries = _ivf_assign(emb).join(_pq_encode(codes), "vec_id")
-    codes_path, emb_path = _vector_index_paths(index_path)
-    if _path_exists(spark, codes_path):
-        seen = spark.read.parquet(codes_path).select("vec_id").distinct()
-        new_entries = entries.join(seen, "vec_id", "left_anti")
-        new_emb = emb.join(seen, "vec_id", "left_anti")
-    else:
-        new_entries, new_emb = entries, emb
-    # vectors BEFORE codes: `seen` derives from the code store, so a
-    # crash between the writes re-absorbs the vector next run; pin the
-    # vector frame first so the code write cannot flip `seen` under it
-    new_emb = new_emb.localCheckpoint()
-    new_emb.write.mode("append").parquet(emb_path)
-    new_entries.write.mode("append").parquet(codes_path)
+    m = manifest.latest(spark, index_path)
+    seen = manifest.read(spark, index_path, m, "codes", "vec_id bigint")
+    seen = seen.select("vec_id").distinct()
+    manifest.write(spark, index_path, "ivfpq", m, {
+        "vectors": emb.join(seen, "vec_id", "left_anti"),
+        "codes": entries.join(seen, "vec_id", "left_anti"),
+    })
 
 
 def seed_vector_index(
@@ -506,9 +484,9 @@ def seed_vector_index(
     emb = emb.select("vec_id", "embedding")
     codes = _int8_codes(emb).select("vec_id", "code")
     entries = _ivf_assign(emb).join(_pq_encode(codes), "vec_id")
-    codes_path, emb_path = _vector_index_paths(index_path)
-    emb.write.mode("overwrite").parquet(emb_path)
-    entries.write.mode("overwrite").parquet(codes_path)
+    _commit(spark, index_path, "ivfpq", {
+        "vectors": emb, "codes": entries,
+    }, replace=True)
 
 
 def run_vector_index_stream(
@@ -563,9 +541,9 @@ def query_vector_index(
         _pq_qtable,
     )
 
-    codes_path, emb_path = _vector_index_paths(index_path)
-    idx = spark.read.parquet(codes_path)
-    store_emb = spark.read.parquet(emb_path).dropDuplicates(["vec_id"])
+    m = manifest.latest(spark, index_path)
+    idx = manifest.read(spark, index_path, m, "codes")
+    store_emb = _vectors(spark, index_path, m)
     qc = _int8_codes(q_emb).select("vec_id", "code")
     qdots = qc.select(
         F.posexplode(_ivf_dots(F.col("code"))).alias("cell", "qdot")
@@ -624,35 +602,25 @@ def query_vector_index(
 #
 # At-least-once safety (the _vector_index_batch discipline): the
 # incoming micro-batch is vec_id-deduped, absorb is anti-joined
-# against the BUCKET store, vectors write BEFORE buckets (a crash
-# between the two re-absorbs the vector next run; duplicated vector
-# rows are neutralized read-side by dropDuplicates).
+# against the BUCKET store and commits vectors and buckets in one
+# manifest version.
 # Scale: per trigger O(batch) bucket rows appended; a query probes
 # only the flip neighborhood of the query's buckets — the persisted
 # corpus is never rescanned or re-encoded.
 # ---------------------------------------------------------------------------
-def _hyperplane_index_paths(index_path: str) -> tuple[str, str]:
-    return os.path.join(index_path, "buckets"), os.path.join(
-        index_path, "vectors"
-    )
-
-
 def _hyperplane_index_batch(batch: DataFrame, index_path: str) -> None:
     from ..operators.vector import _hyperplane_buckets
 
     spark = batch.sparkSession
     emb = batch.select("vec_id", "embedding").dropDuplicates(["vec_id"])
     buckets = _hyperplane_buckets(emb)
-    buckets_path, emb_path = _hyperplane_index_paths(index_path)
-    if _path_exists(spark, buckets_path):
-        seen = spark.read.parquet(buckets_path).select("vec_id").distinct()
-        new_buckets = buckets.join(seen, "vec_id", "left_anti")
-        new_emb = emb.join(seen, "vec_id", "left_anti")
-    else:
-        new_buckets, new_emb = buckets, emb
-    new_emb = new_emb.localCheckpoint()
-    new_emb.write.mode("append").parquet(emb_path)
-    new_buckets.write.mode("append").parquet(buckets_path)
+    m = manifest.latest(spark, index_path)
+    seen = manifest.read(spark, index_path, m, "buckets", "vec_id bigint")
+    seen = seen.select("vec_id").distinct()
+    manifest.write(spark, index_path, "hyperplane", m, {
+        "vectors": emb.join(seen, "vec_id", "left_anti"),
+        "buckets": buckets.join(seen, "vec_id", "left_anti"),
+    })
 
 
 def seed_hyperplane_index(
@@ -663,9 +631,9 @@ def seed_hyperplane_index(
     from ..operators.vector import _hyperplane_buckets
 
     emb = emb.select("vec_id", "embedding")
-    buckets_path, emb_path = _hyperplane_index_paths(index_path)
-    emb.write.mode("overwrite").parquet(emb_path)
-    _hyperplane_buckets(emb).write.mode("overwrite").parquet(buckets_path)
+    _commit(spark, index_path, "hyperplane", {
+        "vectors": emb, "buckets": _hyperplane_buckets(emb),
+    }, replace=True)
 
 
 def run_hyperplane_index_stream(
@@ -716,9 +684,9 @@ def query_hyperplane_index(
         _hyperplane_buckets,
     )
 
-    buckets_path, emb_path = _hyperplane_index_paths(index_path)
-    idx = spark.read.parquet(buckets_path)
-    store_emb = spark.read.parquet(emb_path).dropDuplicates(["vec_id"])
+    m = manifest.latest(spark, index_path)
+    idx = manifest.read(spark, index_path, m, "buckets")
+    store_emb = _vectors(spark, index_path, m)
     probes = _hyperplane_buckets(q_emb).select(
         F.col("tbl").alias("p_tbl"),
         F.explode(
@@ -791,24 +759,21 @@ def query_hyperplane_index(
 GRAPH_ABSORB_ROUNDS = 2
 
 
-def _graph_index_paths(index_path: str) -> tuple[str, str]:
-    return os.path.join(index_path, "edges"), os.path.join(
-        index_path, "vectors"
-    )
-
-
-def _graph_index_edges(spark: SparkSession, index_path: str) -> DataFrame:
+def _graph_index_edges(
+    spark: SparkSession, index_path: str, m: manifest.Manifest | None = None
+) -> DataFrame:
     """Read-side degree bound: the append-only edge store may hold
     superseded reverse edges; keep the best G+2 per src (G k-NN slots
-    plus the batch build's 2 long-range slots)."""
+    plus the batch build's 2 long-range slots). Reads version ``m``,
+    the latest by default."""
     from pyspark.sql import Window
 
     from ..operators.graph_ann import GRAPH_DEGREE
 
-    edges_path, _ = _graph_index_paths(index_path)
+    m = m or manifest.latest(spark, index_path)
     w = Window.partitionBy("src").orderBy(F.col("sim").desc(), F.col("dst"))
     return (
-        spark.read.parquet(edges_path)
+        manifest.read(spark, index_path, m, "edges")
         .dropDuplicates(["src", "dst"])
         .withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= GRAPH_DEGREE + 2)
@@ -833,22 +798,23 @@ def _graph_index_batch(batch: DataFrame, index_path: str) -> None:
 
     spark = batch.sparkSession
     new = batch.select("vec_id", "embedding").dropDuplicates(["vec_id"])
-    edges_path, emb_path = _graph_index_paths(index_path)
-    if not _path_exists(spark, edges_path):
+    m = manifest.latest(spark, index_path)
+    if not manifest.paths(index_path, m, "edges"):
         # bootstrap: a full batch build — the one-batch stream and the
         # batch build are the SAME code path (tested equal)
         new = new.localCheckpoint()
-        new.write.mode("append").parquet(emb_path)
-        build_knn_graph(spark, new).write.mode("append").parquet(edges_path)
+        manifest.write(spark, index_path, "graph", m, {
+            "vectors": new, "edges": build_knn_graph(spark, new),
+        })
         return
 
-    seen = spark.read.parquet(edges_path).select(
+    seen = manifest.read(spark, index_path, m, "edges").select(
         F.col("src").alias("vec_id")
     ).distinct()
     new = new.join(seen, "vec_id", "left_anti").localCheckpoint()
-    old_emb = spark.read.parquet(emb_path).dropDuplicates(["vec_id"])
+    old_emb = _vectors(spark, index_path, m)
     all_emb = old_emb.unionByName(new).dropDuplicates(["vec_id"])
-    edges = _graph_index_edges(spark, index_path).localCheckpoint()
+    edges = _graph_index_edges(spark, index_path, m).localCheckpoint()
 
     # init candidates: deterministic entry points (the query face's
     # rule, over the EXISTING corpus) plus the new nodes' multi-salt
@@ -903,16 +869,13 @@ def _graph_index_batch(batch: DataFrame, index_path: str) -> None:
         )
         best = _scored_topg(cand, all_emb, GRAPH_DEGREE).localCheckpoint()
 
-    # vectors BEFORE edges: `seen` derives from the edge store, so a
-    # crash between the writes re-absorbs the node next run; replays
-    # anti-join to nothing and converge (duplicated vector rows are
-    # neutralized read-side by dropDuplicates)
-    new.write.mode("append").parquet(emb_path)
     rev = best.select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), "sim"
     )
-    out_edges = best.unionByName(rev).dropDuplicates(["src", "dst"])
-    out_edges.write.mode("append").parquet(edges_path)
+    manifest.write(spark, index_path, "graph", m, {
+        "vectors": new,
+        "edges": best.unionByName(rev).dropDuplicates(["src", "dst"]),
+    })
 
 
 def seed_graph_index(
@@ -923,9 +886,9 @@ def seed_graph_index(
     from ..operators.graph_ann import build_knn_graph
 
     emb = emb.select("vec_id", "embedding")
-    edges_path, emb_path = _graph_index_paths(index_path)
-    emb.write.mode("overwrite").parquet(emb_path)
-    build_knn_graph(spark, emb).write.mode("overwrite").parquet(edges_path)
+    _commit(spark, index_path, "graph", {
+        "vectors": emb, "edges": build_knn_graph(spark, emb),
+    }, replace=True)
 
 
 def run_graph_index_stream(
@@ -976,10 +939,10 @@ def query_graph_index(
     )
     from ..operators.vector import K
 
-    edges = _graph_index_edges(spark, index_path).select("src", "dst")
+    m = manifest.latest(spark, index_path)
+    edges = _graph_index_edges(spark, index_path, m).select("src", "dst")
     edges = edges.localCheckpoint()
-    _, emb_path = _graph_index_paths(index_path)
-    emb = spark.read.parquet(emb_path).dropDuplicates(["vec_id"])
+    emb = _vectors(spark, index_path, m)
     qv = q_emb.select(F.col("embedding").alias("q_emb"))
 
     entries = (
@@ -1060,10 +1023,6 @@ def query_graph_index(
 # recompute over the partials store, which grows with days x batches
 # (tiny integers), not with events; the raw stream is never rescanned.
 # ---------------------------------------------------------------------------
-def _monitor_partials_path(monitor_path: str) -> str:
-    return os.path.join(monitor_path, "daily_partials")
-
-
 def _monitor_src_key():
     """Partials key column: file-backed rows keep their file name
     (idempotent re-absorption — a re-streamed or backfilled-then-
@@ -1082,22 +1041,22 @@ def _monitor_src_key():
     )
 
 
+def _monitor_batch(kind, daily_frame, batch: DataFrame, monitor_path: str):
+    keyed = batch.withColumn("src_file", _monitor_src_key())
+    partials = daily_frame(keyed, extra_keys=("src_file",))
+    _commit(batch.sparkSession, monitor_path, kind, {"daily_partials": partials})
+
+
 def _ab_monitor_batch(batch: DataFrame, monitor_path: str) -> None:
     from ..operators.stats import ab_daily_frame
 
-    ab_daily_frame(
-        batch.withColumn("src_file", _monitor_src_key()),
-        extra_keys=("src_file",),
-    ).write.mode("append").parquet(_monitor_partials_path(monitor_path))
+    _monitor_batch("ab_monitor", ab_daily_frame, batch, monitor_path)
 
 
 def _drift_monitor_batch(batch: DataFrame, monitor_path: str) -> None:
     from ..operators.stats import drift_daily_frame
 
-    drift_daily_frame(
-        batch.withColumn("src_file", _monitor_src_key()),
-        extra_keys=("src_file",),
-    ).write.mode("append").parquet(_monitor_partials_path(monitor_path))
+    _monitor_batch("drift_monitor", drift_daily_frame, batch, monitor_path)
 
 
 _EVENTS_STREAM_SCHEMA = (
@@ -1169,18 +1128,13 @@ def _merged_partials(
     # dedup on (src_file, day): re-processing a file under ANY
     # checkpoint re-appends the same deterministic partial row;
     # distinct files legitimately contribute separate partials for
-    # one day and merge by sum/min/max
-    from ..fsutil import path_exists
-
-    partials = _monitor_partials_path(monitor_path)
-    if not path_exists(spark, partials):
-        # cold start (r14 advice): a monitor deployed against a source
-        # dir with zero files fires no micro-batch, so the partials
-        # path does not exist yet — read as empty, don't throw. The
-        # documented contract "empty before any matching event" then
-        # holds from deployment, not just from the first absorbed file.
-        return spark.createDataFrame([], schema)
-    return spark.read.parquet(partials).dropDuplicates(["src_file", "day"])
+    # one day and merge by sum/min/max. Cold start (r14 advice): a
+    # monitor deployed against a source dir with zero files fires no
+    # micro-batch and commits nothing, so it reads as empty — the
+    # contract "empty before any matching event" holds from deployment.
+    m = manifest.latest(spark, monitor_path)
+    partials = manifest.read(spark, monitor_path, m, "daily_partials", schema)
+    return partials.dropDuplicates(["src_file", "day"])
 
 
 def read_ab_monitor(spark: SparkSession, monitor_path: str) -> DataFrame:

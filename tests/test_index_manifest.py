@@ -1,0 +1,90 @@
+"""The index manifest (manifest.py): catalog lookups read one small
+JSON file through the Hadoop FileSystem API and start no Spark job,
+and a reader pinned to a committed version keeps answering from it
+while appends and compactions commit newer ones."""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from generative_ai_vector_db_spark import manifest
+from generative_ai_vector_db_spark.operators import indexes as ix
+from generative_ai_vector_db_spark.operators import vector
+from generative_ai_vector_db_spark.tables import load
+
+
+def _embeddings(spark, sf_dir):
+    return load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+
+def test_catalog_lookups_start_no_spark_job(spark, sf_dir, tmp_path):
+    root = str(tmp_path / "root")
+    ix.create_index(spark, root, "vec", "hyperplane", _embeddings(spark, sf_dir))
+
+    sc = spark.sparkContext
+    group = "catalog-lookups-start-no-spark-job"
+    sc.setJobGroup(group, "index_kind + list_indexes")
+    try:
+        kind = ix.index_kind(spark, root, "vec")
+        listed = ix.list_indexes(spark, root)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert kind == "hyperplane"
+    assert [tuple(r) for r in listed.collect()] == [("vec", "hyperplane")]
+
+
+def test_manifest_commit_refuses_a_taken_version(spark, sf_dir, tmp_path):
+    """Two writers that read the same version race for the next one:
+    the loser's commit fails instead of overwriting, and its staged
+    rows are collected by the winner's next commit."""
+    root = str(tmp_path / "root")
+    path = os.path.join(root, "vec")
+    emb = _embeddings(spark, sf_dir)
+    ix.create_index(spark, root, "vec", "ivfpq", emb)
+    base = manifest.latest(spark, path)
+    none = {"codes": manifest.read(spark, path, base, "codes").limit(0)}
+    won = manifest.write(spark, path, "ivfpq", base, none)
+    with pytest.raises(FileExistsError):
+        manifest.write(spark, path, "ivfpq", base, none)
+    assert manifest.latest(spark, path) == won
+    lost = [
+        d
+        for d in os.listdir(os.path.join(path, "codes"))
+        if d not in won.components["codes"]
+    ]
+    assert len(lost) == 1
+    manifest.write(spark, path, "ivfpq", won, none)
+    assert not os.path.exists(os.path.join(path, "codes", lost[0]))
+
+
+def test_reader_keeps_its_version_across_append_and_compact(
+    spark, sf_dir, tmp_path
+):
+    """A query frame built at version n, collected only after an
+    append and a compaction committed n+1 and n+2, returns the
+    version-n answer; a fresh query returns the grown index's answer."""
+    root = str(tmp_path / "root")
+    emb = _embeddings(spark, sf_dir)
+    is_late = F.col("vec_id") % 10 == 3
+    q_emb = emb.where(F.col("vec_id") == vector.BINARY_Q_ID)
+    ix.create_index(spark, root, "vec", "ivfpq", emb.where(~is_late))
+
+    def answer(frame):
+        return [(r["vec_id"], r["rn"]) for r in frame.collect()]
+
+    want_n = answer(ix.query_index(spark, root, "vec", q_emb, vector.BINARY_Q_ID))
+    pinned = ix.query_index(spark, root, "vec", q_emb, vector.BINARY_Q_ID)
+
+    ix.append_index(spark, root, "vec", emb.where(is_late))
+    ix.compact_index(spark, root, "vec")
+    assert manifest.latest(spark, os.path.join(root, "vec")).version == 3
+
+    assert answer(pinned) == want_n
+    fresh = answer(ix.query_index(spark, root, "vec", q_emb, vector.BINARY_Q_ID))
+    want_full = answer(vector.q362_portable_ivfpq_ann(spark, sf_dir))
+    assert fresh == want_full
+    assert fresh != want_n  # the late rows do change this answer

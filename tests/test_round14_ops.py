@@ -7,6 +7,8 @@ reference guard)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -312,13 +314,23 @@ def test_index_catalog_roundtrip_all_kinds(spark, sf_dir_t2, tmp_path):
     exact = _exact_topk_ids(spark, emb, vector.BINARY_Q_ID, vector.K)
     assert len(got_g & exact) / vector.K >= 0.6
 
-    # describe: every declared component present with sane counts
-    desc = {
-        r["component"]: r["n_rows"]
-        for r in ix.describe_index(spark, root, "vec_planes").collect()
-    }
+    # describe: every declared component present with sane counts, at
+    # the manifest version create + one append committed, with the
+    # parquet files and bytes its listed subdirectories hold on disk
+    rows = ix.describe_index(spark, root, "vec_planes").collect()
+    desc = {r["component"]: r["n_rows"] for r in rows}
     assert desc["vectors"] == emb.count()
     assert desc["buckets"] == 2 * emb.count()
+    for r in rows:
+        assert r["version"] == 2
+        on_disk = [
+            os.path.join(d, f)
+            for d, _, fs in os.walk(f"{root}/vec_planes/{r['component']}")
+            for f in fs
+            if f.endswith(".parquet")
+        ]
+        assert r["files"] == len(on_disk) > 0
+        assert r["bytes"] == sum(os.path.getsize(f) for f in on_disk)
     comps = ix.open_index(spark, root, "doc_neardup")
     assert set(comps) >= {"bands", "shingles"}
 

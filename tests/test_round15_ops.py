@@ -1,6 +1,6 @@
-"""Round-15 operator tests: the compact_index crash window closed via
-the two-rename swap + read-side recovery (VERDICT r14 item 3), the
-monitor kinds inside the unified index catalog (item 4), bench.py's
+"""Round-15 operator tests: crash injection into the index manifest
+commit (compaction and absorb crash windows, unlisted garbage, a live
+writer's staging), the monitor kinds inside the unified index catalog (item 4), bench.py's
 rep-relative contention verdict (item 2), and regression locks for the
 r14 ADVICE fixes (half-dropped dir cannot leak stale components into a
 re-created index; monitor cold-start reads as empty instead of
@@ -9,7 +9,6 @@ throwing)."""
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -98,10 +97,11 @@ def test_steal_jiffies_ground_truth(tmp_path, monkeypatch):
 
 
 # --------------------------------------------------------------------------
-# compact_index crash windows (VERDICT r14 item 3): the old
-# delete-then-rename swap had an instant with BOTH copies gone; the
-# two-rename swap never does, and _recover_components (invoked by
-# every catalog call via index_kind) repairs any crash state.
+# Crash injection into the manifest protocol (manifest.py): every
+# writer stages tagged subdirectories, then commits version n+1 with
+# one temp-file-then-rename manifest write; readers open only what the
+# latest manifest lists, and the commit's garbage collection removes
+# whatever no version n+1 or n lists unless it targets a later version.
 # --------------------------------------------------------------------------
 def _ivfpq_answer(spark, root, name, emb):
     from generative_ai_vector_db_spark.operators import indexes as ix
@@ -115,137 +115,151 @@ def _ivfpq_answer(spark, root, name, emb):
     ]
 
 
-def test_compact_crash_between_renames_recovers(
+def _n_rows(spark, root, name):
+    from generative_ai_vector_db_spark.operators import indexes as ix
+
+    return {
+        r["component"]: r["n_rows"]
+        for r in ix.describe_index(spark, root, name).collect()
+    }
+
+
+def test_compact_crash_before_commit_keeps_prior_version(
     spark, sf_dir_t2, tmp_path, monkeypatch
 ):
-    """Kill the swap BETWEEN its two renames — the exact window the
-    r14 delete-then-rename left unreadable — and verify the next
-    catalog call still reads the component with pre-crash answers."""
-    from generative_ai_vector_db_spark import fsutil
+    """Kill compact_index after its staged write but BEFORE the
+    manifest commit: the next catalog call answers exactly as before
+    the crash, the staged rows are never read, and a later compaction
+    runs clean and removes them."""
+    from generative_ai_vector_db_spark import manifest
     from generative_ai_vector_db_spark.operators import indexes as ix
 
     root = str(tmp_path / "root")
+    path = os.path.join(root, "vec")
     emb = load(spark, sf_dir_t2, "embeddings").select("vec_id", "embedding")
     ix.create_index(spark, root, "vec", "ivfpq", emb)
     # append a duplicate slice so compaction has real work to do
     ix.append_index(spark, root, "vec", emb.where(F.col("vec_id") % 7 == 0))
     want = _ivfpq_answer(spark, root, "vec", emb)
     assert len(want) == vector.K
+    rows_before = _n_rows(spark, root, "vec")
+    v = manifest.latest(spark, path).version
 
-    def crashing_swap(s, src, dst):
-        # first rename only: live component moved aside, staged copy
-        # NOT yet renamed into place — then the process "dies"
-        dpath, fs = fsutil._hadoop_path_and_fs(s, dst)
-        opath, _ = fsutil._hadoop_path_and_fs(s, dst + fsutil.OLD_SUFFIX)
-        assert fs.rename(dpath, opath)
-        raise RuntimeError("injected crash between the two renames")
+    def crash(*_args):
+        raise RuntimeError("injected crash before the manifest commit")
 
-    monkeypatch.setattr(fsutil, "swap_dir", crashing_swap)
+    monkeypatch.setattr(manifest, "commit", crash)
     with pytest.raises(RuntimeError, match="injected crash"):
         ix.compact_index(spark, root, "vec")
     monkeypatch.undo()
 
-    # the crash state is real: some component base dir is missing,
-    # with its ._old and committed ._compacting leftovers present
-    comp_dirs = os.listdir(os.path.join(root, "vec"))
-    assert any(d.endswith("._old") for d in comp_dirs)
-    assert any(d.endswith("._compacting") for d in comp_dirs)
-    crashed = [d[: -len("._old")] for d in comp_dirs if d.endswith("._old")]
-    assert crashed and all(c not in comp_dirs for c in crashed)
-
-    # next catalog call recovers (rolls the committed stage FORWARD)
-    # and answers exactly as before the crash
-    assert _ivfpq_answer(spark, root, "vec", emb) == want
-    comp_dirs = os.listdir(os.path.join(root, "vec"))
-    assert not any(
-        d.endswith("._old") or d.endswith("._compacting") for d in comp_dirs
-    )
-    # the rolled-forward component is the COMPACTED copy: the
-    # duplicate appends are gone
-    codes = spark.read.parquet(os.path.join(root, "vec", crashed[0]))
+    # the crash state is real: each component holds a staged copy for
+    # version v+1, and no manifest lists it
+    staged = {
+        c: [d for d in os.listdir(os.path.join(path, c)) if d.startswith(f"v={v + 1:08d}-")]
+        for c in ("codes", "vectors")
+    }
+    assert all(len(d) == 1 for d in staged.values())
+    assert manifest.latest(spark, path).version == v
+    # the staged copy is the COMPACTED one: the duplicate appends are gone
+    codes = spark.read.parquet(os.path.join(path, "codes", staged["codes"][0]))
     assert codes.count() == codes.dropDuplicates(["vec_id"]).count()
 
-    # a real compact afterwards still runs clean end-to-end
+    # next catalog call reads version v only, and answers as before
+    assert _n_rows(spark, root, "vec") == rows_before
+    assert _ivfpq_answer(spark, root, "vec", emb) == want
+
+    # a real compact afterwards still runs clean end-to-end and its
+    # commit's garbage collection removes the crashed stage
     res = {
         r["component"]: (r["rows_before"], r["rows_after"])
         for r in ix.compact_index(spark, root, "vec").collect()
     }
     assert set(res) == {"codes", "vectors"}
     assert _ivfpq_answer(spark, root, "vec", emb) == want
+    assert not any(
+        os.path.exists(os.path.join(path, c, d[0])) for c, d in staged.items()
+    )
 
 
-def test_compact_crash_during_staging_write(spark, sf_dir_t2, tmp_path):
-    """A staging write that dies before committing (no _SUCCESS) with
-    the base intact must be swept away, never rolled forward."""
+def test_unlisted_partial_parquet_is_never_read(spark, sf_dir_t2, tmp_path):
+    """A half-written subdirectory that no manifest lists — garbage
+    parquet, no _SUCCESS, tagged with a version already committed (its
+    writer crashed or lost the race) — is never read, and garbage
+    collection removes it."""
+    from generative_ai_vector_db_spark import manifest
     from generative_ai_vector_db_spark.operators import indexes as ix
 
     root = str(tmp_path / "root")
+    path = os.path.join(root, "vec")
     emb = load(spark, sf_dir_t2, "embeddings").select("vec_id", "embedding")
     ix.create_index(spark, root, "vec", "hyperplane", emb)
+    q_emb = emb.where(F.col("vec_id") == vector.BINARY_Q_ID)
     want = [
         (r["vec_id"], r["rn"])
         for r in ix.query_index(
-            spark,
-            root,
-            "vec",
-            emb.where(F.col("vec_id") == vector.BINARY_Q_ID),
-            vector.BINARY_Q_ID,
+            spark, root, "vec", q_emb, vector.BINARY_Q_ID
         ).collect()
     ]
 
-    # fake a died-mid-write stage: partial dir, no _SUCCESS marker.
-    # Aged past COMPACT_STALE_MS — a FRESH base-present staging dir is
-    # deliberately left alone (it may belong to a live compactor).
-    stage = os.path.join(root, "vec", "buckets._compacting")
+    m = manifest.latest(spark, path)
+    stage = os.path.join(path, "buckets", f"v={m.version:08d}-deadbeef")
     os.makedirs(stage)
     with open(os.path.join(stage, "part-00000.parquet"), "wb") as f:
         f.write(b"\x00garbage")
-    from generative_ai_vector_db_spark.operators import indexes as ixmod
-
-    old = time.time() - (ixmod.COMPACT_STALE_MS / 1000.0) - 60
-    os.utime(stage, (old, old))
 
     got = [
         (r["vec_id"], r["rn"])
         for r in ix.query_index(
-            spark,
-            root,
-            "vec",
-            emb.where(F.col("vec_id") == vector.BINARY_Q_ID),
-            vector.BINARY_Q_ID,
+            spark, root, "vec", q_emb, vector.BINARY_Q_ID
         ).collect()
     ]
     assert got == want
+    manifest.gc(spark, path, m)
     assert not os.path.exists(stage)
 
 
-def test_recovery_rolls_back_old_when_stage_uncommitted(
-    spark, sf_dir_t2, tmp_path
+def test_manifest_crash_before_rename_serves_prior_version(
+    spark, sf_dir_t2, tmp_path, monkeypatch
 ):
-    """The other crash shape: base missing, prior copy at ._old, stage
-    absent or uncommitted (no _SUCCESS) — recovery must roll the prior
-    copy BACK, never forward a partial stage."""
-    import shutil
-
+    """Kill an absorb between the manifest temp write and its rename:
+    the index keeps serving the previous version (the temp manifest
+    and the staged rows are never read), and the next commit removes
+    the leftovers."""
+    from generative_ai_vector_db_spark import manifest
     from generative_ai_vector_db_spark.operators import indexes as ix
 
     root = str(tmp_path / "root")
+    path = os.path.join(root, "vec")
     emb = load(spark, sf_dir_t2, "embeddings").select("vec_id", "embedding")
-    ix.create_index(spark, root, "vec", "ivfpq", emb)
+    is_late = F.col("vec_id") % 10 == 3
+    ix.create_index(spark, root, "vec", "ivfpq", emb.where(~is_late))
     want = _ivfpq_answer(spark, root, "vec", emb)
+    rows_before = _n_rows(spark, root, "vec")
+    v = manifest.latest(spark, path).version
 
-    codes = os.path.join(root, "vec", "codes")
-    shutil.move(codes, codes + "._old")
-    # an uncommitted stage alongside (simulates the staging write
-    # itself having died after the first rename of a PRIOR swap)
-    os.makedirs(codes + "._compacting")
-    with open(os.path.join(codes + "._compacting", "part-0.parquet"), "wb") as f:
-        f.write(b"\x00junk")
+    def crash(*_args):
+        raise RuntimeError("injected crash before the manifest rename")
 
+    monkeypatch.setattr(manifest, "_publish", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ix.append_index(spark, root, "vec", emb.where(is_late))
+    monkeypatch.undo()
+
+    meta = os.path.join(path, manifest.META)
+    tmp = [n for n in os.listdir(meta) if n.endswith(".tmp")]
+    assert len(tmp) == 1 and tmp[0].startswith(f"v{v + 1:08d}.")
+    assert manifest.latest(spark, path).version == v
+    assert _n_rows(spark, root, "vec") == rows_before
     assert _ivfpq_answer(spark, root, "vec", emb) == want
-    assert os.path.exists(codes)
-    assert not os.path.exists(codes + "._old")
-    assert not os.path.exists(codes + "._compacting")
+
+    # the replayed absorb commits v+1 and collects the leftovers
+    ix.append_index(spark, root, "vec", emb.where(is_late))
+    assert manifest.latest(spark, path).version == v + 1
+    assert not any(n.endswith(".tmp") for n in os.listdir(meta))
+    for c in ("codes", "vectors"):
+        assert len(os.listdir(os.path.join(path, c))) == 2  # seed + absorb
+    assert _n_rows(spark, root, "vec")["codes"] == emb.count()
 
 
 def test_create_index_clears_half_dropped_dir(spark, sf_dir_t2, tmp_path):
@@ -383,24 +397,30 @@ def test_q303_bucket_range_local_join(spark, sf_dir):
 # describe/compact/drop lifecycle and test contract as the four index
 # kinds.
 # --------------------------------------------------------------------------
-def test_fresh_staging_dir_is_left_alone(spark, sf_dir_t2, tmp_path):
-    """A base-present ._compacting dir YOUNGER than COMPACT_STALE_MS
-    may belong to a live compactor — recovery must skip it (and the
-    index must keep answering from the intact base), not delete it
-    out from under the compactor (r15 review)."""
+def test_live_writer_staging_survives_catalog_and_gc(
+    spark, sf_dir_t2, tmp_path
+):
+    """A staged subdirectory tagged with the NEXT version belongs to a
+    live writer: a concurrent catalog call and garbage collection must
+    leave it alone while the index keeps answering from its committed
+    version (r15 review: no time threshold decides this any more)."""
+    from generative_ai_vector_db_spark import manifest
     from generative_ai_vector_db_spark.operators import indexes as ix
 
     root = str(tmp_path / "root")
+    path = os.path.join(root, "vec")
     emb = load(spark, sf_dir_t2, "embeddings").select("vec_id", "embedding")
     ix.create_index(spark, root, "vec", "hyperplane", emb)
 
-    stage = os.path.join(root, "vec", "buckets._compacting")
+    m = manifest.latest(spark, path)
+    stage = os.path.join(path, "buckets", f"v={m.version + 1:08d}-0live000")
     os.makedirs(stage)
     with open(os.path.join(stage, "part-00000.parquet"), "wb") as f:
         f.write(b"\x00live")
 
     assert ix.index_kind(spark, root, "vec") == "hyperplane"
-    assert os.path.exists(stage)  # fresh: spared as a live stage
+    manifest.gc(spark, path, m)
+    assert os.path.exists(stage)  # spared as a live stage
     rows = ix.query_index(
         spark,
         root,

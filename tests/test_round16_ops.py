@@ -382,6 +382,50 @@ def test_q347_fused_topr_equals_window_reference(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
+# ADVICE r16: the ring init repeats a candidate whenever max(vec_id)+1
+# divides d*NNG_STRIDE for some d < NNG_R. With 2*NNG_STRIDE ids,
+# offsets j and j+2 land on the same v, so every node draws one v three
+# times; _nng_graph must still equal the set-semantics reference.
+# ---------------------------------------------------------------------------
+def test_nng_graph_dedups_colliding_ring_init(spark):
+    from collections import defaultdict
+
+    import numpy as np
+
+    n, R, S = 2 * vector.NNG_STRIDE, vector.NNG_R, vector.NNG_STRIDE
+    C = np.random.default_rng(7).integers(-127, 128, size=(n, 8))
+    codes = spark.createDataFrame(
+        [(u, [int(x) for x in C[u]]) for u in range(n)],
+        "vec_id bigint, code array<bigint>",
+    )
+    ring = [(u + j * S) % n for u in range(n) for j in range(1, R + 1)]
+    ring = [(u, v) for u, v in zip(np.repeat(range(n), R), ring) if u != v]
+    assert len(ring) > len(set(ring))  # the collision is real
+
+    def topr(cand):
+        return {
+            u: sorted(vs, key=lambda v: (-int(C[u] @ C[v]), v))[:R]
+            for u, vs in cand.items()
+        }
+
+    init = defaultdict(set)
+    for u, v in ring:
+        init[u].add(v)
+    g = topr(init)
+    for _ in range(vector.NNG_ROUNDS):
+        cand = defaultdict(set)
+        for u, vs in g.items():
+            for m in vs:
+                cand[u].add(m)
+                cand[m].add(u)
+                cand[u].update(v for v in g.get(m, []) if v != u)
+        g = topr(cand)
+    want = sorted((int(u), int(v)) for u, vs in g.items() for v in vs)
+    got = sorted((r.u, r.v) for r in vector._nng_graph(codes).collect())
+    assert got == want
+
+
+# ---------------------------------------------------------------------------
 # ADVICE r15: _nng_score's array<tinyint> narrowing is exact only for
 # _int8_codes output — lock the [-127, 127] range invariant.
 # ---------------------------------------------------------------------------
