@@ -11,7 +11,7 @@ test as one surface:
     create_index(spark, root, "prod", "ivfpq", emb)   # seed/backfill
     append_index(spark, root, "prod", batch)          # incremental absorb
     run_index_stream(spark, root, "prod", src, ck)    # continuous absorb
-    query_index(spark, root, "prod", q_emb, q_id)     # probe, never rescans
+    query_index(spark, root, "prod", q_emb, q_id)     # top-K probe
     open_index / describe_index / list_indexes        # catalog surface
     compact_index(spark, root, "prod")                # offline rewrite
     drop_index(spark, root, "prod")                   # R22 analog
@@ -35,6 +35,13 @@ below reads the manifest through Hadoop FileSystem calls — no Spark
 job — and opens only the subdirectories it lists, so a reader racing
 an append or a compaction sees one committed version and a crash at
 any point leaves the previous version readable.
+
+``query_index`` on ``ivfpq`` and ``hyperplane`` answers on the driver
+in numpy from a cache keyed by manifest subdirectory
+(``streaming/ingest_stream.py``, driver-side probe): each committed
+subdirectory is decoded once, and at a stable version an ask runs one
+Spark job, the collect of its query row. ``graph`` asks stay a Spark
+plan over the persisted edges.
 
 ``neardup`` is a document index: its absorb classifies AND absorbs
 (results land in the index's ``results`` table), and ``query_index``
@@ -190,8 +197,12 @@ def query_index(
     spark: SparkSession, root: str, name: str, q_emb: DataFrame, q_id: int
 ) -> DataFrame:
     """Top-K probe of a vector index against its PERSISTED structure
-    (never rescans or re-encodes the corpus). Output shape matches the
-    family's batch op: (vec_id, cos_sim, rn)."""
+    (never re-encodes the corpus). ``q_emb`` holds one (vec_id,
+    embedding) row. ``ivfpq`` and ``hyperplane`` answer on the driver
+    from the cached decoded components and return a local frame (empty
+    for no query row; more than one raises ValueError); ``graph``
+    returns a Spark plan. Output shape matches the family's batch op:
+    (vec_id, cos_sim, rn)."""
     from ..streaming import ingest_stream as ist
 
     kind = index_kind(spark, root, name)

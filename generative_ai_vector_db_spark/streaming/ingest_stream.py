@@ -18,6 +18,9 @@ maxFilesPerTrigger.
 
 from __future__ import annotations
 
+import os
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -444,9 +447,10 @@ def run_neardup_stream(
 # is int8-coded, IVF-cell-assigned and PQ-encoded (the q362 pinned
 # artifacts — numpy mapInPandas, bit-identical to the graded batch
 # op), then APPENDED to the persisted index; the corpus is never
-# re-encoded. Queries probe the persisted codes exactly like q362
-# probes its in-plan encode, so stream-built == batch-built is a
-# testable equality (test_round13_ops), not a design claim.
+# re-encoded. Queries probe the persisted codes on the driver (the
+# driver-side probe below) with q362's arithmetic and tie rules, so
+# stream-built == batch-built is a testable equality
+# (test_round13_ops), not a design claim.
 #
 # At-least-once safety (the _neardup_batch discipline): absorb is
 # vec_id-anti-joined against the code store and commits vectors and
@@ -520,75 +524,171 @@ def run_vector_index_stream(
     )
 
 
+# ---------------------------------------------------------------------------
+# Driver-side probe (the ivfpq and hyperplane query faces). An ask
+# returns K rows, so it is answered on the driver in numpy: a per-ask
+# Spark plan takes seconds to build (16 x 64 literal pivot columns)
+# before it runs. Each committed subdirectory is decoded ONCE, by
+# Spark's own parquet reader (any scheme Spark reads), into the arrays
+# _PROBE_CACHE holds under the subdirectory's path. A committed
+# subdirectory never changes and its name carries a random token, so
+# an entry is never stale; a probe only evicts the entries of its
+# index component that the latest manifest no longer lists
+# (compaction, drop + re-create). Probes in several threads need no
+# lock: a probe works on the arrays it took, and a race costs at most
+# a refill, or an unlisted entry kept until the next probe of that
+# component. At a stable version an ask runs one Spark job: the
+# collect of its query row. Memory: ~350 B per vector per ivfpq index
+# (codes 80 B + float32 vectors 264 B), ~300 B per hyperplane index.
+#
+# Every step keeps Spark's arithmetic, so answers equal the Spark-plan
+# reference in tests/test_driver_probe.py bit for bit: int8 codes as
+# _int8_codes, integer cell dots, ADC and sign buckets, cosine as
+# cosine_arrow (float64, summed left to right), Spark's HALF_UP
+# round(., 4), and the order (cos_sim DESC NULLS LAST, vec_id). A
+# zero-norm vector scores null, which Spark gives only with ANSI off
+# (ANSI division raises DIVIDE_BY_ZERO).
+# ---------------------------------------------------------------------------
+_PROBE_CACHE: dict[str, dict[str, np.ndarray]] = {}
+
+
+def _probe_parts(
+    spark: SparkSession, index_path: str, m, comp: str, cols: tuple
+) -> list[dict[str, np.ndarray]]:
+    """Decoded ``cols`` of every non-empty subdirectory that ``m``
+    lists for ``comp``, in manifest order."""
+    listed = manifest.paths(index_path, m, comp)
+    prefix = os.path.join(index_path, comp, "")
+    for key in list(_PROBE_CACHE):
+        if key.startswith(prefix) and key not in listed:
+            _PROBE_CACHE.pop(key, None)
+    parts = []
+    for d in listed:
+        arrays = _PROBE_CACHE.get(d)
+        if arrays is None:
+            table = spark.read.parquet(d).select(*cols).toArrow()
+            arrays = _PROBE_CACHE[d] = {
+                c: _np_column(table.column(c)) for c in cols
+            }
+        if len(arrays[cols[0]]):  # an absorb of only seen ids commits none
+            parts.append(arrays)
+    return parts
+
+
+def _np_column(col) -> np.ndarray:
+    """An Arrow column as numpy; a fixed-length list column as 2-D."""
+    import pyarrow as pa
+
+    arr = col.combine_chunks()
+    if pa.types.is_list(arr.type):
+        flat = arr.flatten().to_numpy(zero_copy_only=False)
+        return flat.reshape(len(arr), -1) if len(arr) else flat
+    return arr.to_numpy(zero_copy_only=False)
+
+
+def _concat(parts: list, col: str) -> np.ndarray:
+    return np.concatenate([p[col] for p in parts])
+
+
+def _query_vector(q_emb: DataFrame) -> np.ndarray | None:
+    """The query embedding widened to float64; None for no row."""
+    rows = q_emb.select("embedding").collect()
+    if len(rows) > 1:
+        raise ValueError(f"q_emb must hold one query row, not {len(rows)}")
+    return np.array(rows[0][0], dtype=np.float64) if rows else None
+
+
+def _int8_code(x: np.ndarray) -> np.ndarray:
+    """operators/vector.py::_int8_codes for one float64 vector."""
+    mx = np.abs(x).max()
+    if mx == 0:
+        return np.zeros(len(x), dtype=np.int64)
+    return np.floor(x * (127.0 / mx) + 0.5).astype(np.int64)
+
+
+def _stored_vectors(parts: list, wanted: np.ndarray):
+    """(vec_ids, float32 rows) of ``wanted`` against the first stored
+    copy of each vec_id (the read-side dedup); ids with no stored
+    vector drop out, repeated ids repeat (an inner join)."""
+    vid = _concat(parts, "vec_id")
+    uniq, first = np.unique(vid, return_index=True)
+    pos = np.searchsorted(uniq, wanted).clip(max=len(uniq) - 1)
+    found = uniq[pos] == wanted
+    return wanted[found], _concat(parts, "embedding")[first[pos[found]]]
+
+
+def _round4(x: float) -> float:
+    """Spark's round(x, 4) on a double: HALF_UP on its shortest
+    decimal form (BigDecimal.valueOf); -0.0 comes back as 0.0."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    q = Decimal(repr(x)).quantize(Decimal("0.0001"), rounding=ROUND_HALF_UP)
+    return float(q) + 0.0
+
+
+def _hits(spark: SparkSession, q, ids: np.ndarray, vecs) -> DataFrame:
+    """Top-K of ``ids`` by round(cosine(q, row), 4) DESC NULLS LAST,
+    vec_id ASC, as a local (vec_id, cos_sim, rn) frame."""
+    import pyarrow as pa
+
+    from ..operators.vector import K
+
+    cos = np.zeros(len(ids))
+    null = np.zeros(len(ids), dtype=bool)
+    if len(ids):
+        V = vecs.astype(np.float64)
+        dot = np.cumsum(V * q, axis=1)[:, -1]
+        den = np.sqrt(np.cumsum(q * q)[-1]) * np.sqrt(
+            np.cumsum(V * V, axis=1)[:, -1]
+        )
+        null = den == 0
+        with np.errstate(divide="ignore", invalid="ignore"):
+            raw = (dot / den).tolist()
+        cos = np.array([0.0 if n else _round4(c) for n, c in zip(null, raw)])
+    top = np.lexsort((ids, -cos, null))[:K]
+    table = pa.table({
+        "vec_id": pa.array(ids[top], pa.int64()),
+        "cos_sim": pa.array(cos[top], pa.float64(), mask=null[top]),
+        "rn": pa.array(np.arange(1, len(top) + 1), pa.int64()),
+    })
+    return spark.createDataFrame(table, "vec_id bigint, cos_sim double, rn bigint")
+
+
 def query_vector_index(
     spark: SparkSession, index_path: str, q_emb: DataFrame, q_id: int
 ) -> DataFrame:
-    """q362's probe pipeline against the PERSISTED index: probe the
-    IVF_NPROBE nearest pinned cells, ADC-score the cells' PQ codes
-    against the broadcast query table, exact-re-rank the shortlist.
-    Floats are fetched from the vector store only for the shortlist;
-    the corpus is never re-encoded."""
-    from pyspark.sql import Window
-
-    from ..functions import vectors as V
+    """q362's probe against the PERSISTED index, on the driver: probe
+    the IVF_NPROBE cells with the largest query dots (ties to the lower
+    cell), ADC-score their code rows against the query's PQ table, keep
+    the PPQ_SHORTLIST lowest (adc, vec_id) rows and re-rank them by
+    exact cosine. ``q_emb`` holds at most one (vec_id, embedding) row;
+    ``q_id`` is excluded from the answer."""
     from ..operators.vector import (
         IVF_NPROBE,
-        K,
         PPQ_M,
         PPQ_SHORTLIST,
-        _int8_codes,
-        _ivf_dots,
-        _pq_qtable,
+        PPQ_SUB,
+        _ivf_pivots,
+        _pq_codebooks,
     )
 
     m = manifest.latest(spark, index_path)
-    idx = manifest.read(spark, index_path, m, "codes")
-    store_emb = _vectors(spark, index_path, m)
-    qc = _int8_codes(q_emb).select("vec_id", "code")
-    qdots = qc.select(
-        F.posexplode(_ivf_dots(F.col("code"))).alias("cell", "qdot")
-    )
-    w = Window.orderBy(F.col("qdot").desc(), "cell")
-    probed = (
-        qdots.withColumn("pr", F.row_number().over(w))
-        .where(F.col("pr") <= IVF_NPROBE)
-        .select(F.col("cell").cast("bigint").alias("cell"))
-    )
-    qt = _pq_qtable(qc)
-    adc_col = None
-    for m in range(PPQ_M):
-        term = F.element_at(
-            F.element_at("qt", m + 1),
-            (F.element_at("pqc", m + 1) + F.lit(1)).cast("int"),
-        )
-        adc_col = term if adc_col is None else adc_col + term
-    ws = Window.orderBy(F.col("adc").asc(), "vec_id")
-    shortlist = (
-        idx.where(F.col("vec_id") != q_id)
-        .join(F.broadcast(probed), "cell")
-        .crossJoin(F.broadcast(qt))
-        .select("vec_id", adc_col.cast("bigint").alias("adc"))
-        .withColumn("srn", F.row_number().over(ws))
-        .where(F.col("srn") <= PPQ_SHORTLIST)
-        .select("vec_id")
-    )
-    qv = q_emb.select(F.col("embedding").alias("q_emb"))
-    exact = (
-        shortlist.join(store_emb, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    wr = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        exact.withColumn("rn", F.row_number().over(wr).cast("bigint"))
-        .where(F.col("rn") <= K)
-        .orderBy("rn")
-    )
+    codes = _probe_parts(spark, index_path, m, "codes", ("vec_id", "cell", "pqc"))
+    vectors = _probe_parts(spark, index_path, m, "vectors", ("vec_id", "embedding"))
+    q = _query_vector(q_emb)
+    if q is None or not codes or not vectors:
+        return _hits(spark, q, np.zeros(0, dtype=np.int64), None)
+    qc = _int8_code(q)
+    qdots = np.array(_ivf_pivots(), dtype=np.int64) @ qc
+    probed = np.lexsort((np.arange(len(qdots)), -qdots))[:IVF_NPROBE]
+    books = np.array(_pq_codebooks(), dtype=np.int64)  # (M, KSUB, SUB)
+    qt = ((books - qc.reshape(PPQ_M, 1, PPQ_SUB)) ** 2).sum(axis=2)
+    vid = _concat(codes, "vec_id")
+    keep = np.isin(_concat(codes, "cell"), probed) & (vid != q_id)
+    vid = vid[keep]
+    adc = qt[np.arange(PPQ_M), _concat(codes, "pqc")[keep]].sum(axis=1)
+    shortlist = vid[np.lexsort((vid, adc))[:PPQ_SHORTLIST]]
+    return _hits(spark, q, *_stored_vectors(vectors, shortlist))
 
 
 # ---------------------------------------------------------------------------
@@ -604,9 +704,10 @@ def query_vector_index(
 # incoming micro-batch is vec_id-deduped, absorb is anti-joined
 # against the BUCKET store and commits vectors and buckets in one
 # manifest version.
-# Scale: per trigger O(batch) bucket rows appended; a query probes
-# only the flip neighborhood of the query's buckets — the persisted
-# corpus is never rescanned or re-encoded.
+# Scale: per trigger O(batch) bucket rows appended; a query is a
+# driver-side probe over the cached bucket arrays that scores only the
+# flip neighborhood of the query's buckets — the persisted corpus is
+# never re-read or re-encoded at a stable version.
 # ---------------------------------------------------------------------------
 def _hyperplane_index_batch(batch: DataFrame, index_path: str) -> None:
     from ..operators.vector import _hyperplane_buckets
@@ -670,61 +771,32 @@ def run_hyperplane_index_stream(
 def query_hyperplane_index(
     spark: SparkSession, index_path: str, q_emb: DataFrame, q_id: int
 ) -> DataFrame:
-    """q320's probe pipeline against the PERSISTED bucket table: the
-    query vector's own buckets expand to the pinned flip neighborhood,
-    candidates come from a broadcast probe join against the persisted
-    buckets, and only the candidate set fetches floats for the exact
-    cosine re-rank."""
-    from pyspark.sql import Window
-
-    from ..functions import vectors as V
-    from ..operators.vector import (
-        ANN_PROBE_FLIPS,
-        K,
-        _hyperplane_buckets,
-    )
+    """q320's probe against the PERSISTED bucket table, on the driver:
+    the query's sign bucket in each table expands to its
+    ANN_PROBE_FLIPS neighbourhood, every vector with a bucket row in it
+    is a candidate once, and candidates re-rank by exact cosine.
+    ``q_emb`` holds at most one (vec_id, embedding) row; ``q_id`` is
+    excluded from the answer."""
+    from ..operators.vector import ANN_PLANES, ANN_PROBE_FLIPS, _ann_sign_matrices
 
     m = manifest.latest(spark, index_path)
-    idx = manifest.read(spark, index_path, m, "buckets")
-    store_emb = _vectors(spark, index_path, m)
-    probes = _hyperplane_buckets(q_emb).select(
-        F.col("tbl").alias("p_tbl"),
-        F.explode(
-            F.array(
-                *[
-                    F.col("bucket").bitwiseXOR(F.lit(f))
-                    for f in ANN_PROBE_FLIPS
-                ]
-            )
-        ).alias("probe"),
+    buckets = _probe_parts(
+        spark, index_path, m, "buckets", ("vec_id", "tbl", "bucket")
     )
-    cand = (
-        idx.where(F.col("vec_id") != q_id)
-        .join(
-            F.broadcast(probes),
-            (F.col("bucket") == F.col("probe"))
-            & (F.col("tbl") == F.col("p_tbl")),
-        )
-        .select("vec_id")
-        .dropDuplicates(["vec_id"])
-    )
-    qv = q_emb.select(F.col("embedding").alias("q_emb"))
-    scored = (
-        cand.join(store_emb, "vec_id")
-        .crossJoin(F.broadcast(qv))
-        .select(
-            "vec_id",
-            F.round(V.cosine(F.col("q_emb"), F.col("embedding")), 4).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rn") <= K)
-        .orderBy("rn")
-    )
+    vectors = _probe_parts(spark, index_path, m, "vectors", ("vec_id", "embedding"))
+    q = _query_vector(q_emb)
+    if q is None or not buckets or not vectors:
+        return _hits(spark, q, np.zeros(0, dtype=np.int64), None)
+    qc = _int8_code(q)
+    weights = 1 << np.arange(ANN_PLANES, dtype=np.int64)
+    vid, tbl = _concat(buckets, "vec_id"), _concat(buckets, "tbl")
+    bucket = _concat(buckets, "bucket")
+    hit = np.zeros(len(vid), dtype=bool)
+    for t, planes in enumerate(_ann_sign_matrices()):
+        qb = int(((np.array(planes, dtype=np.int64) @ qc) >= 0) @ weights)
+        hit |= (tbl == t) & np.isin(bucket, [qb ^ f for f in ANN_PROBE_FLIPS])
+    cand = np.unique(vid[hit & (vid != q_id)])
+    return _hits(spark, q, *_stored_vectors(vectors, cand))
 
 
 # ---------------------------------------------------------------------------

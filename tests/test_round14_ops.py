@@ -440,25 +440,32 @@ def test_index_compaction_preserves_answers(spark, sf_dir_t2, tmp_path):
 
 
 def test_new_query_faces_plan_shapes(spark, sf_dir_t2, tmp_path):
-    """The r14 persisted-index probe plans must have the shapes the
-    batch twins assert: broadcast probe join + rank-limited top-K for
-    the hyperplane face; WindowGroupLimit (rank pushdown) on the
-    graph store's read-side degree prune."""
+    """The hyperplane face answers on the driver: its result is a
+    LocalTableScan, and at a stable version an ask runs exactly one
+    Spark job (the collect of the query row). The graph store's
+    read-side degree prune keeps WindowGroupLimit (rank pushdown)."""
+    from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.plans.audit import plan_of
     from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 
     emb = load(spark, sf_dir_t2, "embeddings").select("vec_id", "embedding")
-    hidx = str(tmp_path / "h")
+    root = str(tmp_path / "root")
     gidx = str(tmp_path / "g")
-    ist.seed_hyperplane_index(spark, emb, hidx)
+    ix.create_index(spark, root, "h", "hyperplane", emb)
     ist.seed_graph_index(spark, emb, gidx)
     q_emb = emb.where(F.col("vec_id") == vector.BINARY_Q_ID)
 
-    hplan = plan_of(
-        ist.query_hyperplane_index(spark, hidx, q_emb, vector.BINARY_Q_ID)
-    )
-    assert "BroadcastHashJoin" in hplan or "BroadcastNestedLoopJoin" in hplan
-    assert "TakeOrderedAndProject" in hplan or "WindowGroupLimit" in hplan
+    hits = ix.query_index(spark, root, "h", q_emb, vector.BINARY_Q_ID)
+    assert "LocalTableScan" in plan_of(hits)
+    sc = spark.sparkContext
+    group = "hyperplane-ask-at-stable-version"
+    sc.setJobGroup(group, "query_index")
+    try:
+        ix.query_index(spark, root, "h", q_emb, vector.BINARY_Q_ID)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
     gplan = plan_of(ist._graph_index_edges(spark, gidx))
     assert "WindowGroupLimit" in gplan
