@@ -32,6 +32,7 @@ import re
 import uuid
 from dataclasses import asdict, dataclass
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from .fsutil import _hadoop_path_and_fs
@@ -53,9 +54,14 @@ def _name(version: int) -> str:
 
 
 def _read(hpath, fs) -> Manifest | None:
-    if not fs.exists(hpath):
-        return None
-    stream = fs.open(hpath)
+    """The manifest at ``hpath``; None when it is absent, including
+    when a racing GC deleted it after the caller listed it."""
+    try:
+        stream = fs.open(hpath)
+    except Py4JJavaError as e:
+        if e.java_exception.getClass().getName() == "java.io.FileNotFoundException":
+            return None
+        raise
     try:
         return Manifest(**json.loads(bytes(stream.readAllBytes())))
     finally:

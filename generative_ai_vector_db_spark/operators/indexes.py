@@ -23,6 +23,7 @@ Iceberg at production — an environment binding, not a design change):
     hyperplane buckets(vec_id, tbl, bucket) + vectors   (q320 family)
     graph      edges(src, dst, sim)         + vectors   (q214/q347 family)
     neardup    bands(doc_id, band, key) + shingles      (q302/q322 family)
+               + results(doc_id, status, dup_of, ..)
     ab_monitor     daily_partials(src_file, day, n, k)     (q367 family)
     drift_monitor  daily_partials(src_file, day, n, s, ..) (q368 family)
 
@@ -44,20 +45,22 @@ Spark job, the collect of its query row. ``graph`` asks stay a Spark
 plan over the persisted edges.
 
 ``neardup`` is a document index: its absorb classifies AND absorbs
-(results land in the index's ``results`` table), and ``query_index``
-is undefined for it by design — probing without absorbing is the
-batch op q322. The two monitor kinds (r15, VERDICT r14 item 4) are
-EVENT indexes: their absorb reduces a micro-batch of events to per-day
-integer partials, and their read face is ``read_index`` — the full
-anytime e-process table (q367/q368) over everything absorbed so far;
-``query_index`` is undefined for them.
+(its classifications append to the ``results`` component, keep-first
+by doc_id, in the same commit as its bands and shingles), and
+``query_index`` is undefined for it by design — probing without
+absorbing is the batch op q322. The two monitor kinds (r15, VERDICT
+r14 item 4) are EVENT indexes: their absorb reduces a micro-batch of
+events to per-day integer partials, and their read face is
+``read_index`` — the full anytime e-process table (q367/q368) over
+everything absorbed so far; ``query_index`` is undefined for them.
 
 Scale: every operation below is a thin dispatcher over the streaming
 faces, which are O(batch) per trigger with read-side dedup / degree
-bounds, with two O(store) exceptions in the near-dup absorb
+bounds, with one O(store) exception in the near-dup absorb
 (``streaming/ingest_stream.py::_neardup_batch``): the band-cap regroup
-``_pmh_kept_bands`` over every stored band row, and the ``results``
-sink, which reads and rewrites the whole results table per batch.
+``_pmh_kept_bands`` over every stored band row. (Its keep-first
+anti-joins also scan the ``doc_id`` column of the committed bands and
+results, but nothing is rewritten.)
 """
 
 from __future__ import annotations
@@ -146,7 +149,7 @@ def append_index(
     elif kind == "drift_monitor":
         ist._drift_monitor_batch(batch, path)
     else:
-        ist._neardup_batch(batch, path, os.path.join(path, "results"))
+        ist._neardup_batch(batch, path)
 
 
 def run_index_stream(
@@ -184,12 +187,7 @@ def run_index_stream(
         )
     else:
         ist.run_neardup_stream(
-            spark,
-            src_dir,
-            path,
-            os.path.join(path, "results"),
-            checkpoint_dir,
-            max_files_per_trigger,
+            spark, src_dir, path, checkpoint_dir, max_files_per_trigger
         )
 
 
@@ -253,27 +251,23 @@ def _manifest(spark: SparkSession, root: str, name: str) -> manifest.Manifest:
 def open_index(
     spark: SparkSession, root: str, name: str
 ) -> dict[str, DataFrame]:
-    """R15 analog: open every committed component of a named index,
-    plus its near-dup ``results`` table when there is one."""
+    """R15 analog: open every committed component of a named index
+    (for neardup, ``results`` too once a batch has been absorbed)."""
     m = _manifest(spark, root, name)
     path = _index_path(root, name)
-    out = {comp: manifest.read(spark, path, m, comp) for comp in m.components}
-    if _path_exists(spark, os.path.join(path, "results")):
-        out["results"] = spark.read.parquet(os.path.join(path, "results"))
-    return out
+    return {comp: manifest.read(spark, path, m, comp) for comp in m.components}
 
 
 def describe_index(spark: SparkSession, root: str, name: str) -> DataFrame:
     """One row per component: (name, kind, component, n_rows, version,
     files, bytes). ``version`` is the committed manifest version;
     ``files``/``bytes`` are the parquet files the component's listed
-    subdirectories hold (the ``results`` table's own, for neardup)."""
+    subdirectories hold."""
     m = _manifest(spark, root, name)
     path = _index_path(root, name)
     rows = []
     for comp, df in sorted(open_index(spark, root, name).items()):
-        dirs = manifest.paths(path, m, comp) or [os.path.join(path, comp)]
-        files, size = parquet_stats(spark, *dirs)
+        files, size = parquet_stats(spark, *manifest.paths(path, m, comp))
         rows.append((name, m.kind, comp, df.count(), m.version, files, size))
     return spark.createDataFrame(
         rows,
@@ -307,10 +301,10 @@ def compact_index(spark: SparkSession, root: str, name: str) -> DataFrame:
     previous version served and the staged rows unread, for the next
     commit's garbage collection. Query results are unchanged by
     construction (the rewrite IS the read-side view); only storage and
-    probe-scan width shrink. The near-dup ``results`` table is left
-    alone: its sink rewrites it whole, keep-first by doc_id, per batch.
-    Returns one row per compacted component: (name, component,
-    rows_before, rows_after).
+    probe-scan width shrink. Near-dup ``results`` rows are unique by
+    doc_id by construction (keep-first on absorb), so their rewrite
+    only merges files. Returns one row per compacted component:
+    (name, component, rows_before, rows_after).
 
     Scale: one shuffle per component on its key — the same cost as one
     absorb over the whole store, scheduled offline (nightly / when the
@@ -325,6 +319,7 @@ def compact_index(spark: SparkSession, root: str, name: str) -> DataFrame:
         "buckets": ["vec_id", "tbl"],
         "bands": ["doc_id", "band"],
         "shingles": ["doc_id"],
+        "results": ["doc_id"],
         "daily_partials": ["src_file", "day"],
     }
     before = {c: manifest.read(spark, path, m, c) for c in sorted(m.components)}

@@ -30,6 +30,37 @@ from ..operators.chunker import chunk_udf
 from ..sources.embedding_stage import embed_text
 from ..sources.loaders import parse_files
 
+_VECTORS_STREAM_SCHEMA = "vec_id bigint, embedding array<float>"
+_EVENTS_STREAM_SCHEMA = (
+    "event_id bigint, ts timestamp, user_id bigint,"
+    " event_type string, value double, props string"
+)
+
+
+def _run_stream(
+    spark: SparkSession,
+    src_dir: str,
+    schema: str,
+    target: str,
+    checkpoint_dir: str,
+    batch_fn,
+    max_files_per_trigger: int | None = None,
+) -> None:
+    """Apply ``batch_fn(batch, target)`` to each micro-batch of the
+    parquet files in ``src_dir`` the checkpoint has not seen, then
+    return (an availableNow trigger)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    (
+        reader.parquet(src_dir)
+        .writeStream.foreachBatch(lambda batch, _id: batch_fn(batch, target))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
 
 def _ingest_batch(
     batch: DataFrame,
@@ -179,27 +210,9 @@ def run_upsert_stream(
     """Maintain a keep-latest keyed store from an event stream — the
     'current state per key' materialization (CDC apply / device
     shadow / feature-store online view)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-    ev = spark.readStream.schema(schema).parquet(src_dir)
-    (
-        ev.writeStream.foreachBatch(
-            lambda batch, _id: _upsert_batch(batch, store_path, key, ts_col)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _run_stream(
+        spark, src_dir, _EVENTS_STREAM_SCHEMA, store_path, checkpoint_dir,
+        lambda batch, path: _upsert_batch(batch, path, key, ts_col),
     )
 
 
@@ -212,17 +225,19 @@ def run_upsert_stream(
 # rescanned — O(batch·bands + candidates) per trigger), classified
 # (novel / dup_of_store / dup_in_batch), and then ABSORBED: its band
 # rows and shingle sets append to the index so the next trigger sees
-# them as store.
+# them as store, and its classifications append to the index's
+# ``results`` component.
 #
 # At-least-once safety (the q335/_upsert_batch discipline):
 #   - absorb is doc_id-anti-joined against the index, so a replayed
 #     micro-batch never double-inserts band rows;
 #   - the probe excludes self-matches (dup != doc), so a replayed doc
 #     does not classify as a duplicate of its own absorbed rows;
-#   - results merge keep-first by doc_id, so replays converge to the
-#     identical results table (tested by replay-equivalence);
-#   - band and shingle rows land in ONE manifest commit, so a crash
-#     never leaves bands without their shingles.
+#   - results are keep-first by doc_id (anti-joined against the
+#     committed results), so replays converge to the identical
+#     results (tested by replay-equivalence);
+#   - band, shingle and result rows land in ONE manifest commit, so a
+#     crash or a lost commit race leaves none of them behind.
 # Unlike q322's fixture arithmetic (doc_id % 10 == 7 marks the batch),
 # store membership here is POSITIONAL — a row is store iff it came
 # from the persisted index — which is what production semantics need.
@@ -241,10 +256,7 @@ def _vectors(spark: SparkSession, index_path: str, m) -> DataFrame:
     return manifest.read(spark, index_path, m, "vectors").dropDuplicates(["vec_id"])
 
 
-def _neardup_batch(
-    batch: DataFrame, index_path: str, results_path: str
-) -> None:
-    from ..fsutil import rename_dir
+def _neardup_batch(batch: DataFrame, index_path: str) -> None:
     from ..operators.dedup import (
         PMH_JMIN,
         _pmh_bands,
@@ -306,7 +318,7 @@ def _neardup_batch(
     # exists in the persisted store (absorbed by the first run) AND in
     # the fresh batch — without the dedup its exploded shingles would
     # double and inflate every n_common it participates in. The
-    # keep-first results merge already discards replayed
+    # keep-first results append already discards replayed
     # classifications, but the verify math should be right regardless.
     all_sh = store_sh.unionByName(
         shingled.select("doc_id", "shingles")
@@ -370,25 +382,17 @@ def _neardup_batch(
         .localCheckpoint()
     )
 
-    # --- results sink: keep-first merge by doc_id (replay-idempotent) ---
-    if _path_exists(spark, results_path):
-        prior = spark.read.parquet(results_path)
-        merged = prior.unionByName(
-            results.join(prior.select("doc_id"), "doc_id", "left_anti")
-        )
-    else:
-        merged = results
-    tmp = results_path + "._staging"
-    merged.write.mode("overwrite").parquet(tmp)
-    rename_dir(spark, tmp, results_path)
-
-    # --- absorb: append ONLY unseen doc_ids (replay-idempotent) ---
+    # --- absorb: append ONLY unseen doc_ids (replay-idempotent); the
+    #     results keep the first classification of each doc_id and
+    #     land in the SAME commit as its bands and shingles ---
     seen = store_bands.select("doc_id").distinct()
+    prior = manifest.read(spark, index_path, m, "results", "doc_id bigint")
     manifest.write(spark, index_path, "neardup", m, {
         "bands": bands_b.join(seen, "doc_id", "left_anti"),
         "shingles": shingled.select("doc_id", "shingles").join(
             seen, "doc_id", "left_anti"
         ),
+        "results": results.join(prior.select("doc_id"), "doc_id", "left_anti"),
     })
 
 
@@ -410,31 +414,13 @@ def run_neardup_stream(
     spark: SparkSession,
     src_dir: str,
     index_path: str,
-    results_path: str,
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Continuous incremental near-dup over a document file stream."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("text", T.StringType()),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs = reader.parquet(src_dir)
-    (
-        docs.writeStream.foreachBatch(
-            lambda batch, _id: _neardup_batch(batch, index_path, results_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _run_stream(
+        spark, src_dir, "doc_id bigint, text string", index_path, checkpoint_dir,
+        _neardup_batch, max_files_per_trigger,
     )
 
 
@@ -501,26 +487,9 @@ def run_vector_index_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Continuous ANN-index maintenance over a vector file stream."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    vecs = reader.parquet(src_dir)
-    (
-        vecs.writeStream.foreachBatch(
-            lambda batch, _id: _vector_index_batch(batch, index_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _run_stream(
+        spark, src_dir, _VECTORS_STREAM_SCHEMA, index_path, checkpoint_dir,
+        _vector_index_batch, max_files_per_trigger,
     )
 
 
@@ -745,26 +714,9 @@ def run_hyperplane_index_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Continuous hyperplane-index maintenance over a vector stream."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    vecs = reader.parquet(src_dir)
-    (
-        vecs.writeStream.foreachBatch(
-            lambda batch, _id: _hyperplane_index_batch(batch, index_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _run_stream(
+        spark, src_dir, _VECTORS_STREAM_SCHEMA, index_path, checkpoint_dir,
+        _hyperplane_index_batch, max_files_per_trigger,
     )
 
 
@@ -854,9 +806,6 @@ def _graph_index_edges(
 
 
 def _graph_index_batch(batch: DataFrame, index_path: str) -> None:
-    from pyspark.sql import Window
-
-    from ..functions import vectors as V
     from ..functions.hashing import mix_spark
     from ..operators.graph_ann import (
         GRAPH_DEGREE,
@@ -971,26 +920,9 @@ def run_graph_index_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Continuous k-NN-graph maintenance over a vector file stream."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("embedding", T.ArrayType(T.FloatType())),
-        ]
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    vecs = reader.parquet(src_dir)
-    (
-        vecs.writeStream.foreachBatch(
-            lambda batch, _id: _graph_index_batch(batch, index_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
+    _run_stream(
+        spark, src_dir, _VECTORS_STREAM_SCHEMA, index_path, checkpoint_dir,
+        _graph_index_batch, max_files_per_trigger,
     )
 
 
@@ -1131,35 +1063,6 @@ def _drift_monitor_batch(batch: DataFrame, monitor_path: str) -> None:
     _monitor_batch("drift_monitor", drift_daily_frame, batch, monitor_path)
 
 
-_EVENTS_STREAM_SCHEMA = (
-    "event_id bigint, ts timestamp, user_id bigint,"
-    " event_type string, value double, props string"
-)
-
-
-def _run_monitor_stream(
-    spark: SparkSession,
-    src_dir: str,
-    monitor_path: str,
-    checkpoint_dir: str,
-    batch_fn,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    reader = spark.readStream.schema(_EVENTS_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    ev = reader.parquet(src_dir)
-    (
-        ev.writeStream.foreachBatch(
-            lambda batch, _bid: batch_fn(batch, monitor_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
 def run_ab_monitor_stream(
     spark: SparkSession,
     src_dir: str,
@@ -1168,8 +1071,8 @@ def run_ab_monitor_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Maintain the q367 A/B e-process over an events file stream."""
-    _run_monitor_stream(
-        spark, src_dir, monitor_path, checkpoint_dir,
+    _run_stream(
+        spark, src_dir, _EVENTS_STREAM_SCHEMA, monitor_path, checkpoint_dir,
         _ab_monitor_batch, max_files_per_trigger,
     )
 
@@ -1182,8 +1085,8 @@ def run_drift_monitor_stream(
     max_files_per_trigger: int | None = None,
 ) -> None:
     """Maintain the q368 drift e-detector over an events file stream."""
-    _run_monitor_stream(
-        spark, src_dir, monitor_path, checkpoint_dir,
+    _run_stream(
+        spark, src_dir, _EVENTS_STREAM_SCHEMA, monitor_path, checkpoint_dir,
         _drift_monitor_batch, max_files_per_trigger,
     )
 

@@ -88,3 +88,73 @@ def test_reader_keeps_its_version_across_append_and_compact(
     want_full = answer(vector.q362_portable_ivfpq_ann(spark, sf_dir))
     assert fresh == want_full
     assert fresh != want_n  # the late rows do change this answer
+
+
+def test_read_treats_a_manifest_deleted_after_listing_as_absent(spark, tmp_path):
+    """Garbage collection may delete a manifest after a reader saw it
+    and before the reader opens it: ``_read`` then answers None (so
+    ``latest`` looks again) instead of raising."""
+    from generative_ai_vector_db_spark.fsutil import _hadoop_path_and_fs
+
+    gone = str(tmp_path / manifest.META / "v00000001.json")
+    hpath, fs = _hadoop_path_and_fs(spark, gone)
+
+    class DeletedAfterExists:
+        """The real filesystem, except that ``exists`` still answers
+        True: the file was there when asked."""
+
+        def exists(self, _path):
+            return True
+
+        def __getattr__(self, name):
+            return getattr(fs, name)
+
+    assert manifest._read(hpath, DeletedAfterExists()) is None
+
+
+def test_neardup_absorb_is_all_or_nothing(spark, sf_dir, tmp_path, monkeypatch):
+    """A near-dup absorb commits its results in the same manifest
+    version as its bands and shingles, or not at all: an absorb killed
+    before its manifest rename, and one that loses the race for a
+    version, leave every component at its prior-version rows."""
+    root = str(tmp_path / "root")
+    path = os.path.join(root, "docs")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    phase = F.col("doc_id") % 10
+    ix.create_index(spark, root, "docs", "neardup", docs.where(~phase.isin(3, 7, 9)))
+    ix.append_index(spark, root, "docs", docs.where(phase == 3))
+    base = manifest.latest(spark, path)
+
+    def rows():
+        comps = ix.open_index(spark, root, "docs")
+        return {
+            c: sorted(tuple(r) for r in comps[c].collect())
+            for c in ("results", "bands", "shingles")
+        }
+
+    prior = rows()
+    assert prior["results"]
+
+    def crash(*_args):
+        raise RuntimeError("injected crash before the manifest rename")
+
+    monkeypatch.setattr(manifest, "_publish", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ix.append_index(spark, root, "docs", docs.where(phase == 7))
+    monkeypatch.undo()
+    assert manifest.latest(spark, path) == base
+    assert rows() == prior
+
+    # two absorbs from one base: the winner commits base+1; the loser
+    # reads the same base, fails its commit and adds no rows
+    ix.append_index(spark, root, "docs", docs.where(phase == 7))
+    won = manifest.latest(spark, path)
+    assert won.version == base.version + 1
+    want = rows()
+    assert len(want["results"]) > len(prior["results"])
+    monkeypatch.setattr(manifest, "latest", lambda *_args: base)
+    with pytest.raises(FileExistsError):
+        ix.append_index(spark, root, "docs", docs.where(phase == 9))
+    monkeypatch.undo()
+    assert manifest.latest(spark, path) == won
+    assert rows() == want

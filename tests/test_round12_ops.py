@@ -641,6 +641,17 @@ def _seed_and_batch(spark, sf_dir_t2):
     return docs.where(~is_batch), docs.where(is_batch)
 
 
+def _neardup_results(spark, index):
+    """The stream's classifications: the index's ``results`` component
+    as its latest manifest version lists it."""
+    from generative_ai_vector_db_spark import manifest
+
+    m = manifest.latest(spark, index)
+    return manifest.read(spark, index, m, "results").select(
+        "doc_id", "status", "dup_of", "n_store_matches", "n_batch_matches"
+    )
+
+
 def test_neardup_stream_single_trigger_matches_q322(spark, sf_dir_t2, tmp_path):
     """One micro-batch over the q322 fixture split must reproduce the
     batch operator's classification EXACTLY."""
@@ -649,15 +660,14 @@ def test_neardup_stream_single_trigger_matches_q322(spark, sf_dir_t2, tmp_path):
 
     store_docs, batch_docs = _seed_and_batch(spark, sf_dir_t2)
     index = str(tmp_path / "index")
-    results = str(tmp_path / "results")
     ckpt = str(tmp_path / "ckpt")
     src = str(tmp_path / "src")
     ist.seed_neardup_index(spark, store_docs, index)
     batch_docs.coalesce(1).write.parquet(src)
-    ist.run_neardup_stream(spark, src, index, results, ckpt)
+    ist.run_neardup_stream(spark, src, index, ckpt)
 
     got = (
-        spark.read.parquet(results)
+        _neardup_results(spark, index)
         .orderBy("doc_id")
         .toPandas()
         .reset_index(drop=True)
@@ -678,7 +688,6 @@ def test_neardup_stream_multibatch_and_replay(spark, sf_dir_t2, tmp_path):
 
     store_docs, batch_docs = _seed_and_batch(spark, sf_dir_t2)
     index = str(tmp_path / "index")
-    results = str(tmp_path / "results")
     src = str(tmp_path / "src")
     ist.seed_neardup_index(spark, store_docs, index)
     # two files -> two triggers under maxFilesPerTrigger=1
@@ -686,10 +695,9 @@ def test_neardup_stream_multibatch_and_replay(spark, sf_dir_t2, tmp_path):
     batch_docs.where(half).coalesce(1).write.parquet(src)
     batch_docs.where(~half).coalesce(1).write.mode("append").parquet(src)
     ist.run_neardup_stream(
-        spark, src, index, results, str(tmp_path / "ck1"),
-        max_files_per_trigger=1,
+        spark, src, index, str(tmp_path / "ck1"), max_files_per_trigger=1
     )
-    first = spark.read.parquet(results).orderBy("doc_id").toPandas()
+    first = _neardup_results(spark, index).orderBy("doc_id").toPandas()
     bands_before = spark.read.parquet(index + "/bands").count()
 
     # every batch doc classified exactly once
@@ -700,10 +708,9 @@ def test_neardup_stream_multibatch_and_replay(spark, sf_dir_t2, tmp_path):
     # REPLAY the whole stream with a fresh checkpoint: classifications
     # and index must be byte-identical afterwards
     ist.run_neardup_stream(
-        spark, src, index, results, str(tmp_path / "ck2"),
-        max_files_per_trigger=1,
+        spark, src, index, str(tmp_path / "ck2"), max_files_per_trigger=1
     )
-    second = spark.read.parquet(results).orderBy("doc_id").toPandas()
+    second = _neardup_results(spark, index).orderBy("doc_id").toPandas()
     assert second.reset_index(drop=True).equals(first.reset_index(drop=True))
     assert spark.read.parquet(index + "/bands").count() == bands_before
 

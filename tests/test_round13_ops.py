@@ -81,6 +81,7 @@ def test_neardup_stream_equals_batch_both_scales(spark, sf, tmp_path):
     artifact for the streaming near-dup face (q270/q191 pattern:
     the batch twin is driver-graded, this asserts the face equals
     it)."""
+    from generative_ai_vector_db_spark import manifest
     from generative_ai_vector_db_spark.operators import dedup
     from generative_ai_vector_db_spark.operators.dedup import (
         INCR_BATCH_MOD,
@@ -93,14 +94,17 @@ def test_neardup_stream_equals_batch_both_scales(spark, sf, tmp_path):
     store_docs, batch_docs = docs.where(~is_batch), docs.where(is_batch)
 
     index = str(tmp_path / "index")
-    results = str(tmp_path / "results")
     src = str(tmp_path / "src")
     ist.seed_neardup_index(spark, store_docs, index)
     batch_docs.coalesce(1).write.parquet(src)
-    ist.run_neardup_stream(spark, src, index, results, str(tmp_path / "ck"))
+    ist.run_neardup_stream(spark, src, index, str(tmp_path / "ck"))
 
+    m = manifest.latest(spark, index)
     got = (
-        spark.read.parquet(results)
+        manifest.read(spark, index, m, "results")
+        .select(
+            "doc_id", "status", "dup_of", "n_store_matches", "n_batch_matches"
+        )
         .orderBy("doc_id")
         .toPandas()
         .reset_index(drop=True)

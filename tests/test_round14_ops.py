@@ -383,9 +383,11 @@ def test_index_compaction_preserves_answers(spark, sf_dir_t2, tmp_path):
     """compact_index rewrites each component to its read-side-canonical
     view: row counts shrink (duplicated vectors, superseded graph
     edges), the query answer is byte-identical before/after, and a
-    crash-interrupted compact would leave the old store intact (the
-    staging dir swap is the last step — asserted by swapping through
-    the same rename path the upsert store uses)."""
+    near-dup index keeps the identical results, bands and shingles
+    rows (they are unique by construction; only files merge). A crash
+    before the compaction's manifest commit is
+    test_compact_crash_before_commit_keeps_prior_version."""
+    from generative_ai_vector_db_spark import manifest
     from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 
@@ -397,6 +399,20 @@ def test_index_compaction_preserves_answers(spark, sf_dir_t2, tmp_path):
     for name, kind in (("g", "graph"), ("p", "hyperplane"), ("v", "ivfpq")):
         ix.create_index(spark, root, name, kind, seed)
         ix.append_index(spark, root, name, late)
+    docs = load(spark, sf_dir_t2, "documents").select("doc_id", "text")
+    is_late_doc = F.col("doc_id") % 10 == 3
+    ix.create_index(spark, root, "d", "neardup", docs.where(~is_late_doc))
+    ix.append_index(spark, root, "d", docs.where(is_late_doc))
+
+    def neardup_rows():
+        comps = ix.open_index(spark, root, "d")
+        return {
+            c: sorted(tuple(r) for r in comps[c].collect())
+            for c in ("results", "bands", "shingles")
+        }
+
+    neardup_before = neardup_rows()
+    assert neardup_before["results"]  # the absorb classified its batch
 
     # absorb grows the graph edge store past its read-side view
     raw_edges = spark.read.parquet(root + "/g/edges").count()
@@ -415,10 +431,13 @@ def test_index_compaction_preserves_answers(spark, sf_dir_t2, tmp_path):
     }
     stats = {
         (r["name"], r["component"]): (r["rows_before"], r["rows_after"])
-        for name in ("g", "p", "v")
+        for name in ("g", "p", "v", "d")
         for r in ix.compact_index(spark, root, name).collect()
     }
     assert stats[("g", "edges")] == (raw_edges, pruned_edges)
+    assert neardup_rows() == neardup_before
+    compacted = manifest.latest(spark, os.path.join(root, "d"))
+    assert all(len(dirs) == 1 for dirs in compacted.components.values())
     # every component's after-count is canonical (<= before)
     assert all(a <= b for b, a in stats.values())
     after = {
