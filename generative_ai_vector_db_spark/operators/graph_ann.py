@@ -18,7 +18,11 @@ the same quality characteristics is:
   best-W frontier through the edge list, score only NEW nodes
   (anti-join against the explored set), and keep the best W. All
   queries advance together as one DataFrame per round — batch
-  semantics, not per-query pointer chasing.
+  semantics, not per-query pointer chasing. ``beam_search`` is the one
+  search: q214 runs it for the fixture queries over the cached build,
+  and the persisted graph index's query face
+  (``streaming/ingest_stream.py::query_graph_index``) runs it for one
+  query over the maintained edge list.
 
 Why graph ANN matters on THIS fixture: the embeddings are isotropic
 unit vectors (QUALITY.md), where space-partitioning indexes (q46 LSH,
@@ -107,6 +111,48 @@ def _scored_topg(cand: DataFrame, emb: DataFrame, g: int) -> DataFrame:
     )
 
 
+def _entry_points(emb: DataFrame, n_entry: int = N_ENTRY) -> DataFrame:
+    """The n_entry vec_ids of ``emb`` with the smallest portable-mix
+    values — pseudo-random w.r.t. the data, identical every run."""
+    return (
+        emb.select("vec_id", F.expr(mix_spark("vec_id")).alias("_h"))
+        .orderBy("_h", "vec_id")
+        .limit(n_entry)
+        .select("vec_id")
+    )
+
+
+def _salted_init_pairs(
+    emb: DataFrame, sources: DataFrame | None = None
+) -> DataFrame:
+    """(src, dst) pairs, src != dst, that share a bucket in any of the
+    INIT_SALTS hash bucketings of ``emb`` (~INIT_BUCKET nodes per
+    bucket; not distinct). src is restricted to the vec_ids of
+    ``sources`` when given. Deterministic (portable mix, no Python RNG)
+    and built with groupBy-shape joins only, never a global sort."""
+    nstats = emb.agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
+    salted = None
+    for prime in INIT_SALT_PRIMES[:INIT_SALTS]:
+        grouped = emb.crossJoin(F.broadcast(nstats)).select(
+            "vec_id",
+            (
+                F.expr(mix_spark(f"vec_id * {prime}"))
+                % F.expr(f"greatest(1, _n div {INIT_BUCKET})")
+            ).alias("grp"),
+        )
+        a = grouped
+        if sources is not None:
+            a = a.join(sources.select("vec_id"), "vec_id", "left_semi")
+        pairs = (
+            a.select(F.col("vec_id").alias("src"), "grp")
+            .join(grouped.select(F.col("vec_id").alias("dst"), "grp"), "grp")
+            .where(F.col("src") != F.col("dst"))
+            .select("src", "dst")
+        )
+        salted = pairs if salted is None else salted.unionByName(pairs)
+    return salted
+
+
 def build_knn_graph(
     spark: SparkSession,
     emb: DataFrame,
@@ -123,31 +169,8 @@ def build_knn_graph(
     # bucket. A SINGLE bucketing would be degenerate: a clique is
     # closed under reverse and neighbor-of-neighbor composition, so
     # NN-descent could never escape its init component. Several
-    # independent bucketings overlay into one connected expander —
-    # deterministic (portable mix, no Python RNG) and built with
-    # groupBy-shape joins only, never a global sort.
-    nstats = emb.agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
-    salted = None
-    for s in range(INIT_SALTS):
-        prime = INIT_SALT_PRIMES[s]
-        grouped = (
-            emb.crossJoin(F.broadcast(nstats))
-            .select(
-                "vec_id",
-                (
-                    F.expr(mix_spark(f"vec_id * {prime}"))
-                    % F.expr(f"greatest(1, _n div {INIT_BUCKET})")
-                ).alias("grp"),
-            )
-        )
-        a = grouped.select(F.col("vec_id").alias("src"), "grp")
-        b = grouped.select(F.col("vec_id").alias("dst"), "grp")
-        pairs = (
-            a.join(b, "grp")
-            .where(F.col("src") != F.col("dst"))
-            .select("src", "dst")
-        )
-        salted = pairs if salted is None else salted.unionByName(pairs)
+    # independent bucketings overlay into one connected expander.
+    salted = _salted_init_pairs(emb)
     edges = _scored_topg(salted.distinct(), emb, g).localCheckpoint()
 
     for _ in range(rounds):
@@ -190,9 +213,7 @@ def build_knn_graph(
     # search can never leave its entry clusters — these deterministic
     # long-range links are the flat-graph analogue of HNSW's upper
     # layers and keep the search graph connected.
-    long_range = _scored_topg(
-        salted.where(F.col("src") != F.col("dst")).distinct(), emb, 2
-    )
+    long_range = _scored_topg(salted.distinct(), emb, 2)
     return (
         edges.unionByName(long_range)
         .dropDuplicates(["src", "dst"])
@@ -209,36 +230,23 @@ def _cached_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _GRAPH_CACHE[key]
 
 
-def q214_ann_graph(
-    spark: SparkSession,
-    sf_dir: str,
+def beam_search(
+    queries: DataFrame,
+    emb: DataFrame,
+    edges: DataFrame,
     beam: int = BEAM_WIDTH,
     n_entry: int = N_ENTRY,
     rounds: int = QUERY_ROUNDS,
 ) -> DataFrame:
-    """Beam search over the NN-descent graph: top-13 per fixture query
-    (same output shape as q46/q26 — q_id, vec_id, cos_sim, rn)."""
-    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    edges = _cached_graph(spark, sf_dir).select("src", "dst")
-
-    q = emb.where(F.col("vec_id") < N_QUERY).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
-    )
-    # deterministic entry points: the n_entry smallest portable-mix
-    # values — pseudo-random w.r.t. the data, identical every run
-    entries = (
-        emb.select(
-            "vec_id", F.expr(mix_spark("vec_id")).alias("_h")
-        )
-        .orderBy("_h", "vec_id")
-        .limit(n_entry)
-        .select("vec_id")
-    )
+    """Top-K neighbours of each query in ``queries`` (q_id, q_emb) over
+    the graph ``edges`` (src, dst) on the vectors ``emb`` (vec_id,
+    embedding), as (q_id, vec_id, cos_sim, rn) ordered by (q_id, rn).
+    A query's own vec_id (= q_id) is never in its answer."""
 
     def _score(pairs: DataFrame) -> DataFrame:
         # pairs: (q_id, vec_id) distinct -> scored vs the query vector
         return (
-            pairs.join(F.broadcast(q), "q_id")
+            pairs.join(F.broadcast(queries), "q_id")
             .join(emb, "vec_id")
             .select(
                 "q_id",
@@ -248,11 +256,12 @@ def q214_ann_graph(
         )
 
     # seed = global entry points PLUS the query's own graph node: the
-    # fixture queries are corpus members (vec_id < N_QUERY), and — as
+    # queries are corpus members (q214's vec_id < N_QUERY), and — as
     # in HNSW insertion, where search starts from the element's own
     # location — the self node's out-edges are the best possible
     # starting frontier. Self stays excluded from the result set.
-    seeds = q.select("q_id").crossJoin(F.broadcast(entries)).unionByName(
+    q = queries.select("q_id")
+    seeds = q.crossJoin(F.broadcast(_entry_points(emb, n_entry))).unionByName(
         q.select("q_id", F.col("q_id").alias("vec_id"))
     )
     explored = _score(seeds.distinct()).localCheckpoint()
@@ -290,6 +299,23 @@ def q214_ann_graph(
         .where(F.col("rn") <= K)
         .orderBy("q_id", "rn")
     )
+
+
+def q214_ann_graph(
+    spark: SparkSession,
+    sf_dir: str,
+    beam: int = BEAM_WIDTH,
+    n_entry: int = N_ENTRY,
+    rounds: int = QUERY_ROUNDS,
+) -> DataFrame:
+    """Beam search over the NN-descent graph: top-13 per fixture query
+    (same output shape as q46/q26 — q_id, vec_id, cos_sim, rn)."""
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    q = emb.where(F.col("vec_id") < N_QUERY).select(
+        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
+    )
+    edges = _cached_graph(spark, sf_dir).select("src", "dst")
+    return beam_search(q, emb, edges, beam, n_entry, rounds)
 
 
 QUERIES = {"q214_ann_graph": q214_ann_graph}

@@ -42,13 +42,15 @@ in numpy from a cache keyed by manifest subdirectory
 (``streaming/ingest_stream.py``, driver-side probe): each committed
 subdirectory is decoded once, and at a stable version an ask runs one
 Spark job, the collect of its query row. ``graph`` asks stay a Spark
-plan over the persisted edges.
+plan: q214's beam search (``operators/graph_ann.py::beam_search``)
+over the persisted edges.
 
 ``neardup`` is a document index: its absorb classifies AND absorbs
 (its classifications append to the ``results`` component, keep-first
 by doc_id, in the same commit as its bands and shingles), and
 ``query_index`` is undefined for it by design — probing without
-absorbing is the batch op q322. The two monitor kinds (r15, VERDICT
+absorbing is the batch op q322, whose classifier
+(``operators/dedup.py::_incremental_classify``) the absorb runs. The two monitor kinds (r15, VERDICT
 r14 item 4) are EVENT indexes: their absorb reduces a micro-batch of
 events to per-day integer partials, and their read face is
 ``read_index`` — the full anytime e-process table (q367/q368) over
@@ -57,10 +59,10 @@ everything absorbed so far; ``query_index`` is undefined for them.
 Scale: every operation below is a thin dispatcher over the streaming
 faces, which are O(batch) per trigger with read-side dedup / degree
 bounds, with one O(store) exception in the near-dup absorb
-(``streaming/ingest_stream.py::_neardup_batch``): the band-cap regroup
-``_pmh_kept_bands`` over every stored band row. (Its keep-first
-anti-joins also scan the ``doc_id`` column of the committed bands and
-results, but nothing is rewritten.)
+(``streaming/ingest_stream.py::_neardup_batch``): its classifier's
+band-cap regroup ``_pmh_kept_bands`` over every stored band row. (Its
+keep-first anti-joins also scan the ``doc_id`` column of the committed
+bands and results, but nothing is rewritten.)
 """
 
 from __future__ import annotations
@@ -196,11 +198,12 @@ def query_index(
 ) -> DataFrame:
     """Top-K probe of a vector index against its PERSISTED structure
     (never re-encodes the corpus). ``q_emb`` holds one (vec_id,
-    embedding) row. ``ivfpq`` and ``hyperplane`` answer on the driver
-    from the cached decoded components and return a local frame (empty
-    for no query row; more than one raises ValueError); ``graph``
-    returns a Spark plan. Output shape matches the family's batch op:
-    (vec_id, cos_sim, rn)."""
+    embedding) row: no row gives an empty answer and more than one
+    raises ValueError, for every kind. ``ivfpq`` and ``hyperplane``
+    answer on the driver from the cached decoded components and return
+    a local frame; ``graph`` returns q214's beam search as a Spark
+    plan. Output shape matches the family's batch op: (vec_id,
+    cos_sim, rn)."""
     from ..streaming import ingest_stream as ist
 
     kind = index_kind(spark, root, name)

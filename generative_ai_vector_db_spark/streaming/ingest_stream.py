@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from .. import manifest
 from ..fsutil import path_exists as _path_exists
 from ..operators.chunker import chunk_udf
+from ..operators.store import append_vectors
 from ..sources.embedding_stage import embed_text
 from ..sources.loaders import parse_files
 
@@ -107,7 +108,7 @@ def _ingest_batch(
     out = embed_text(
         chunks.withColumn("user", F.lit(user_email)), text_col="chunk_text"
     )
-    out.write.mode("append").parquet(store_path)
+    append_vectors(out, store_path)
 
 
 def run_ingest_stream(
@@ -146,10 +147,6 @@ def run_ingest_stream(
         .start()
         .awaitTermination()
     )
-
-
-def open_store(spark: SparkSession, store_path: str) -> DataFrame:
-    return spark.read.parquet(store_path)
 
 
 # ---------------------------------------------------------------------------
@@ -238,9 +235,11 @@ def run_upsert_stream(
 #     results (tested by replay-equivalence);
 #   - band, shingle and result rows land in ONE manifest commit, so a
 #     crash or a lost commit race leaves none of them behind.
-# Unlike q322's fixture arithmetic (doc_id % 10 == 7 marks the batch),
-# store membership here is POSITIONAL — a row is store iff it came
-# from the persisted index — which is what production semantics need.
+# The classify IS q322's probe (operators/dedup.py::
+# _incremental_classify), fed the persisted bands and shingles as its
+# store side. Store membership is POSITIONAL — a row is store iff it
+# came from the persisted index; q322 feeds the same probe its fixture
+# split (doc_id % 10 == 7 marks the batch).
 # ---------------------------------------------------------------------------
 def _commit(
     spark: SparkSession, index_path: str, kind: str, frames: dict, replace=False
@@ -258,9 +257,8 @@ def _vectors(spark: SparkSession, index_path: str, m) -> DataFrame:
 
 def _neardup_batch(batch: DataFrame, index_path: str) -> None:
     from ..operators.dedup import (
-        PMH_JMIN,
+        _incremental_classify,
         _pmh_bands,
-        _pmh_kept_bands,
         _pmh_shingle_sigs,
     )
 
@@ -276,111 +274,13 @@ def _neardup_batch(batch: DataFrame, index_path: str) -> None:
         spark, index_path, m, "shingles", "doc_id bigint, shingles array<bigint>"
     )
 
-    # --- classify: positional store membership (_st flag), q322's
-    #     probe shape otherwise ---
-    allb = store_bands.select(
-        "doc_id", "band", "key", F.lit(True).alias("_st")
-    ).unionByName(
-        bands_b.select("doc_id", "band", "key", F.lit(False).alias("_st"))
-    )
-    kept = _pmh_kept_bands(allb)
-    kb = kept.where(~F.col("_st"))
-    ks = kept.where(F.col("_st"))
-    probe = kb.select("band", "key", F.col("doc_id").alias("doc"))
-    store_cand = (
-        probe.join(
-            ks.select("band", "key", F.col("doc_id").alias("dup")),
-            ["band", "key"],
-        )
-        .where(F.col("dup") != F.col("doc"))  # replay: skip own index rows
-        .select("doc", "dup")
-        .distinct()
-    )
-    batch_cand = (
-        probe.join(
-            kb.select("band", "key", F.col("doc_id").alias("dup")),
-            ["band", "key"],
-        )
-        .where(F.col("dup") < F.col("doc"))
-        .select("doc", "dup")
-        .distinct()
-    )
-    cand = store_cand.select(
-        "doc", "dup", F.lit(True).alias("_from_store")
-    ).unionByName(
-        batch_cand.select("doc", "dup", F.lit(False).alias("_from_store"))
-    )
-
-    # exact-Jaccard verify: explode shingles for CANDIDATE docs only
-    # (semi-join first — the store shingle table is never exploded
-    # wholesale, keeping the per-trigger cost candidate-bounded)
-    # dropDuplicates(doc_id): on a REPLAY the batch doc's shingle set
-    # exists in the persisted store (absorbed by the first run) AND in
-    # the fresh batch — without the dedup its exploded shingles would
-    # double and inflate every n_common it participates in. The
-    # keep-first results append already discards replayed
-    # classifications, but the verify math should be right regardless.
-    all_sh = store_sh.unionByName(
-        shingled.select("doc_id", "shingles")
-    ).dropDuplicates(["doc_id"])
-    cand_ids = (
-        cand.select(F.col("doc").alias("doc_id"))
-        .unionByName(cand.select(F.col("dup").alias("doc_id")))
-        .distinct()
-    )
-    sh_needed = all_sh.join(cand_ids, "doc_id", "semi").localCheckpoint()
-    ex = sh_needed.select("doc_id", F.explode("shingles").alias("s"))
-    common = (
-        cand.join(ex.select(F.col("doc_id").alias("doc"), "s"), "doc")
-        .join(ex.select(F.col("doc_id").alias("dup"), "s"), ["dup", "s"])
-        .groupBy("doc", "dup", "_from_store")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
-    )
-    nsz = sh_needed.select("doc_id", F.size("shingles").alias("nsh"))
-    verified = (
-        common.join(
-            nsz.select(F.col("doc_id").alias("doc"), F.col("nsh").alias("n_a")),
-            "doc",
-        )
-        .join(
-            nsz.select(F.col("doc_id").alias("dup"), F.col("nsh").alias("n_b")),
-            "dup",
-        )
-        .where(
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")).cast("double")
-            >= F.lit(PMH_JMIN)
-        )
-    )
-    agg = verified.groupBy("doc").agg(
-        F.min(F.when(F.col("_from_store"), F.col("dup"))).alias("store_min"),
-        F.min(F.when(~F.col("_from_store"), F.col("dup"))).alias("batch_min"),
-        F.sum(F.when(F.col("_from_store"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("ns"),
-        F.sum(F.when(~F.col("_from_store"), 1).otherwise(0))
-        .cast("bigint")
-        .alias("nb"),
-    )
-    status = (
-        F.when(F.col("store_min").isNotNull(), F.lit("dup_of_store"))
-        .when(F.col("batch_min").isNotNull(), F.lit("dup_in_batch"))
-        .otherwise(F.lit("novel"))
-    )
-    results = (
-        docs.select("doc_id")
-        .join(agg, docs["doc_id"] == agg["doc"], "left")
-        .select(
-            "doc_id",
-            status.alias("status"),
-            F.coalesce("store_min", "batch_min")
-            .cast("bigint")
-            .alias("dup_of"),
-            F.coalesce("ns", F.lit(0)).cast("bigint").alias("n_store_matches"),
-            F.coalesce("nb", F.lit(0)).cast("bigint").alias("n_batch_matches"),
-        )
-        .localCheckpoint()
-    )
+    results = _incremental_classify(
+        docs.select("doc_id"),
+        store_bands,
+        bands_b,
+        store_sh,
+        shingled.select("doc_id", "shingles"),
+    ).localCheckpoint()
 
     # --- absorb: append ONLY unseen doc_ids (replay-idempotent); the
     #     results keep the first classification of each doc_id and
@@ -761,10 +661,11 @@ def query_hyperplane_index(
 # rounds. The absorb here is the bounded incremental shape the r13
 # verdict sketched — "new-node NN-descent rounds against the
 # persisted edge list":
-#   1. new nodes score against the deterministic entry points plus
-#      their hash-bucket mates (the batch build's init, restricted to
-#      the new nodes), then GRAPH_ABSORB_ROUNDS of expansion via the
-#      PERSISTED edges refine each new node's candidates;
+#   1. new nodes score against the search's deterministic entry points
+#      plus their hash-bucket mates (graph_ann._entry_points and the
+#      batch build's _salted_init_pairs, restricted to new sources),
+#      then GRAPH_ABSORB_ROUNDS of expansion via the PERSISTED edges
+#      refine each new node's candidates;
 #   2. the new node's best GRAPH_DEGREE become its out-edges;
 #   3. reverse edges (dst -> new) are APPENDED, and the degree bound
 #      is enforced READ-SIDE (per-src top-(G+2) window in
@@ -779,6 +680,9 @@ def query_hyperplane_index(
 # incremental absorb is deterministic and replay-idempotent, with the
 # answer quality pinned by a recall-floor test instead of graph
 # equality (insertion order genuinely changes a k-NN graph).
+# The query face runs q214's own search (graph_ann.beam_search) for one
+# query over the persisted edges, so a seeded index answers exactly as
+# q214 does (tests/test_graph_ann.py).
 # ---------------------------------------------------------------------------
 GRAPH_ABSORB_ROUNDS = 2
 
@@ -806,15 +710,12 @@ def _graph_index_edges(
 
 
 def _graph_index_batch(batch: DataFrame, index_path: str) -> None:
-    from ..functions.hashing import mix_spark
     from ..operators.graph_ann import (
         GRAPH_DEGREE,
-        INIT_BUCKET,
-        INIT_SALT_PRIMES,
-        INIT_SALTS,
-        N_ENTRY,
-        build_knn_graph,
+        _entry_points,
+        _salted_init_pairs,
         _scored_topg,
+        build_knn_graph,
     )
 
     spark = batch.sparkSession
@@ -837,38 +738,13 @@ def _graph_index_batch(batch: DataFrame, index_path: str) -> None:
     all_emb = old_emb.unionByName(new).dropDuplicates(["vec_id"])
     edges = _graph_index_edges(spark, index_path, m).localCheckpoint()
 
-    # init candidates: deterministic entry points (the query face's
-    # rule, over the EXISTING corpus) plus the new nodes' multi-salt
-    # hash-bucket mates drawn from old AND new (the batch build's init
-    # restricted to pairs that touch a new node)
-    entries = (
-        old_emb.select("vec_id", F.expr(mix_spark("vec_id")).alias("_h"))
-        .orderBy("_h", "vec_id")
-        .limit(N_ENTRY)
-        .select(F.col("vec_id").alias("dst"))
-    )
+    # init candidates: the search's entry points over the EXISTING
+    # corpus plus the new nodes' multi-salt hash-bucket mates drawn from
+    # old AND new (the batch build's init restricted to new sources)
+    entries = _entry_points(old_emb).select(F.col("vec_id").alias("dst"))
     cand = new.select(F.col("vec_id").alias("src")).crossJoin(
         F.broadcast(entries)
-    )
-    nstats = all_emb.agg(F.count(F.lit(1)).cast("bigint").alias("_n"))
-    for s in range(INIT_SALTS):
-        prime = INIT_SALT_PRIMES[s]
-        grouped = all_emb.crossJoin(F.broadcast(nstats)).select(
-            "vec_id",
-            (
-                F.expr(mix_spark(f"vec_id * {prime}"))
-                % F.expr(f"greatest(1, _n div {INIT_BUCKET})")
-            ).alias("grp"),
-        )
-        a = grouped.join(
-            new.select("vec_id"), "vec_id", "left_semi"
-        ).select(F.col("vec_id").alias("src"), "grp")
-        b = grouped.select(F.col("vec_id").alias("dst"), "grp")
-        cand = cand.unionByName(
-            a.join(b, "grp")
-            .where(F.col("src") != F.col("dst"))
-            .select("src", "dst")
-        )
+    ).unionByName(_salted_init_pairs(all_emb, new))
     best = _scored_topg(cand.distinct(), all_emb, GRAPH_DEGREE).localCheckpoint()
 
     # bounded NN-descent rounds against the persisted edge list: each
@@ -929,72 +805,28 @@ def run_graph_index_stream(
 def query_graph_index(
     spark: SparkSession, index_path: str, q_emb: DataFrame, q_id: int
 ) -> DataFrame:
-    """Beam search over the PERSISTED (read-side-pruned) edge list,
-    exact-cosine top-K re-rank of the visited set — q214's query shape
-    against the maintained store, q347's single-query output shape."""
-    from pyspark.sql import Window
+    """q214's beam search over the PERSISTED (read-side-pruned) edge
+    list, q347's single-query output shape (vec_id, cos_sim, rn).
+    ``q_emb`` holds at most one (vec_id, embedding) row; ``q_id`` seeds
+    the search and is excluded from the answer."""
+    from pyspark.sql import types as T
 
-    from ..functions import vectors as V
-    from ..functions.hashing import mix_spark
-    from ..operators.graph_ann import (
-        BEAM_WIDTH,
-        N_ENTRY,
-        QUERY_ROUNDS,
+    from ..operators.graph_ann import beam_search
+
+    q = _query_vector(q_emb)
+    # q_emb's own element type: the float64 widening is exact, and the
+    # cosine sees the query exactly as stored
+    query = spark.createDataFrame(
+        [] if q is None else [(q_id, q.tolist())],
+        T.StructType([
+            T.StructField("q_id", T.LongType()),
+            T.StructField("q_emb", q_emb.schema["embedding"].dataType),
+        ]),
     )
-    from ..operators.vector import K
-
     m = manifest.latest(spark, index_path)
     edges = _graph_index_edges(spark, index_path, m).select("src", "dst")
-    edges = edges.localCheckpoint()
     emb = _vectors(spark, index_path, m)
-    qv = q_emb.select(F.col("embedding").alias("q_emb"))
-
-    entries = (
-        emb.select("vec_id", F.expr(mix_spark("vec_id")).alias("_h"))
-        .orderBy("_h", "vec_id")
-        .limit(N_ENTRY)
-        .select("vec_id")
-    )
-
-    def _score(ids: DataFrame) -> DataFrame:
-        return (
-            ids.join(emb, "vec_id")
-            .crossJoin(F.broadcast(qv))
-            .select(
-                "vec_id",
-                V.cosine(F.col("q_emb"), F.col("embedding")).alias("sim"),
-            )
-        )
-
-    seeds = entries.unionByName(
-        spark.createDataFrame([(q_id,)], "vec_id bigint")
-    ).distinct()
-    explored = _score(seeds).localCheckpoint()
-    w = Window.orderBy(F.col("sim").desc(), F.col("vec_id"))
-    for _ in range(QUERY_ROUNDS):
-        frontier = (
-            explored.withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") <= BEAM_WIDTH)
-            .select("vec_id")
-        )
-        expanded = (
-            frontier.join(edges, frontier.vec_id == edges.src)
-            .select(F.col("dst").alias("vec_id"))
-            .distinct()
-        )
-        fresh = expanded.join(
-            explored.select("vec_id"), "vec_id", "left_anti"
-        )
-        explored = explored.unionByName(_score(fresh)).localCheckpoint()
-
-    wr = Window.orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        explored.where(F.col("vec_id") != q_id)
-        .select("vec_id", F.round("sim", 4).alias("cos_sim"))
-        .withColumn("rn", F.row_number().over(wr).cast("bigint"))
-        .where(F.col("rn") <= K)
-        .orderBy("rn")
-    )
+    return beam_search(query, emb, edges.localCheckpoint()).drop("q_id")
 
 
 # ---------------------------------------------------------------------------

@@ -245,7 +245,11 @@ def test_driver_probe_edge_cases_equal_spark_reference(spark, tmp_path):
     assert saw_null == set(KINDS)
     assert saw_repeat == {"ivfpq"}  # code rows are not deduped
 
-    for kind, (face, _) in KINDS.items():
+    # the graph face takes its query row the same way
+    ix.create_index(spark, root, "graph", "graph", _frame(spark, corpus[:40]))
+    faces = {kind: face for kind, (face, _) in KINDS.items()}
+    faces["graph"] = ist.query_graph_index
+    for kind, face in faces.items():
         path = os.path.join(root, kind)
         empty = face(spark, path, emb.limit(0), 0)
         assert empty.collect() == []

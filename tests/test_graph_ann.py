@@ -79,3 +79,23 @@ def test_q214_deterministic_rebuild(spark, sf_dir):
     graph_ann._GRAPH_CACHE.clear()
     second = graph_ann.q214_ann_graph(spark, sf_dir).toPandas()
     assert first.equals(second)
+
+
+def test_graph_index_face_equals_q214(spark, sf_dir, tmp_path):
+    """The persisted graph index's query face runs q214's beam search:
+    on an index seeded from the whole corpus, every fixture query's
+    answer equals q214's rows for that query."""
+    from pyspark.sql import functions as F
+
+    from generative_ai_vector_db_spark.streaming import ingest_stream as ist
+    from generative_ai_vector_db_spark.tables import load
+
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    index = str(tmp_path / "graph")
+    ist.seed_graph_index(spark, emb, index)
+    batch = [tuple(r) for r in graph_ann.q214_ann_graph(spark, sf_dir).collect()]
+    for q in range(vector.N_QUERY):
+        q_emb = emb.where(F.col("vec_id") == q)
+        got = [tuple(r) for r in ist.query_graph_index(spark, index, q_emb, q).collect()]
+        assert len(got) == vector.K
+        assert got == [r[1:] for r in batch if r[0] == q], q

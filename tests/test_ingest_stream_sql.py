@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from generative_ai_vector_db_spark.operators import multimodal
+from generative_ai_vector_db_spark.operators.store import open_store
 from generative_ai_vector_db_spark.streaming import ingest_stream
 from generative_ai_vector_db_spark.tables import register_views
 
@@ -40,7 +41,7 @@ def test_continuous_ingest_with_store_dedup(spark):
         with open(os.path.join(uploads, "b.md"), "w") as f:
             f.write("bravo content " * 30)
         ingest_stream.run_ingest_stream(spark, uploads, store, ckpt)
-        s1 = ingest_stream.open_store(spark, store)
+        s1 = open_store(spark, store)
         n1 = s1.count()
         assert n1 > 0
         assert set(r["source"] for r in s1.select("source").distinct().collect()) == {
@@ -54,7 +55,7 @@ def test_continuous_ingest_with_store_dedup(spark):
         with open(os.path.join(uploads, "a_copy.txt"), "w") as f:
             f.write("alpha content " * 30)
         ingest_stream.run_ingest_stream(spark, uploads, store, ckpt)
-        s2 = ingest_stream.open_store(spark, store)
+        s2 = open_store(spark, store)
         sources = set(r["source"] for r in s2.select("source").distinct().collect())
         assert "c.txt" in sources
         assert "a_copy.txt" not in sources  # R11: "File already exists"

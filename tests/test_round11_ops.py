@@ -160,11 +160,17 @@ def test_q322_probe_against_persisted_index_matches_inline(spark, sf_dir_t2):
         store_shingles = store.open_store(spark, os.path.join(d, "shingles"))
         batch_bands = bands.where(is_batch)
         batch_shingles = shingled.where(is_batch).select("doc_id", "shingles")
-        probed = dedup._incremental_classify(
-            docs.where(is_batch).select("doc_id"),
-            store_bands.unionByName(batch_bands),
-            store_shingles.unionByName(batch_shingles),
-        ).toPandas()
+        probed = (
+            dedup._incremental_classify(
+                docs.where(is_batch).select("doc_id"),
+                store_bands,
+                batch_bands,
+                store_shingles,
+                batch_shingles,
+            )
+            .orderBy("doc_id")
+            .toPandas()
+        )
         inline = dedup.q322_incremental_neardup(spark, sf_dir_t2).toPandas()
         pd.testing.assert_frame_equal(probed, inline)
         # and the run is non-trivial: every class appears
