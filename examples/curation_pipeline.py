@@ -149,22 +149,21 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from generative_ai_vector_db_spark.streaming import (
-        ingest_stream as ist,
-    )
+    from generative_ai_vector_db_spark.operators import indexes
     from generative_ai_vector_db_spark.tables import load
 
     with tempfile.TemporaryDirectory() as tmp:
-        src, mon, ck = f"{tmp}/src", f"{tmp}/mon", f"{tmp}/ck"
+        src, ck = f"{tmp}/src", f"{tmp}/ck"
         ev = load(spark, sf_dir, "events")
+        indexes.create_index(spark, tmp, "mon", "drift_monitor", ev.limit(0))
         for s in (0, 1, 2):  # days interleave across micro-batches
             ev.where(F.col("event_id") % 3 == s).coalesce(1).write.mode(
                 "append"
             ).parquet(src)
-        ist.run_drift_monitor_stream(
-            spark, src, mon, ck, max_files_per_trigger=1
+        indexes.run_index_stream(
+            spark, tmp, "mon", src, ck, max_files_per_trigger=1
         )
-        live = ist.read_drift_monitor(spark, mon).toPandas()
+        live = indexes.read_index(spark, tmp, "mon").toPandas()
         same = live[["day", "n_t", "log_e", "rejected"]].equals(
             drift[["day", "n_t", "log_e", "rejected"]]
         )

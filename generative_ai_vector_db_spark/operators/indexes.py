@@ -3,10 +3,8 @@ indexes under a store root — the R14/R15 create-or-append / open
 analog (reference ``helper/multiple_document_upload.py:161-168``,
 ``app.py:70-79``) for INDEX structures instead of the vector store.
 
-The four maintained index families each had ad-hoc seed/run/query
-functions taking raw path arguments (``streaming/ingest_stream.py``);
-this module names them under one contract so the faces compose and
-test as one surface:
+Every index is named under a root and reached only through these
+faces, so they compose and test as one surface:
 
     create_index(spark, root, "prod", "ivfpq", emb)   # seed/backfill
     append_index(spark, root, "prod", batch)          # incremental absorb
@@ -56,9 +54,12 @@ events to per-day integer partials, and their read face is
 ``read_index`` — the full anytime e-process table (q367/q368) over
 everything absorbed so far; ``query_index`` is undefined for them.
 
-Scale: every operation below is a thin dispatcher over the streaming
-faces, which are O(batch) per trigger with read-side dedup / degree
-bounds, with one O(store) exception in the near-dup absorb
+Each kind is one row of ``streaming/ingest_stream.py::KINDS``: its
+stream source schema, seed, absorb, and query or read face. Every
+face below looks the kind up in that table; none branches on it.
+
+Scale: the absorbs are O(batch) per trigger with read-side dedup /
+degree bounds, with one O(store) exception in the near-dup absorb
 (``streaming/ingest_stream.py::_neardup_batch``): its classifier's
 band-cap regroup ``_pmh_kept_bands`` over every stored band row. (Its
 keep-first anti-joins also scan the ``doc_id`` column of the committed
@@ -74,20 +75,22 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import manifest
 from ..fsutil import _hadoop_path_and_fs, parquet_stats
 from ..fsutil import path_exists as _path_exists
-
-_KINDS = ("ivfpq", "hyperplane", "graph", "neardup", "ab_monitor", "drift_monitor")
-_MONITOR_KINDS = ("ab_monitor", "drift_monitor")
+from ..streaming import ingest_stream as ist
 
 
 def _index_path(root: str, name: str) -> str:
     return os.path.join(root, name)
 
 
-def index_kind(spark: SparkSession, root: str, name: str) -> str:
+def _manifest(spark: SparkSession, root: str, name: str) -> manifest.Manifest:
     m = manifest.latest(spark, _index_path(root, name))
     if m is None:
         raise ValueError(f"index {name!r} does not exist under {root!r}")
-    return m.kind
+    return m
+
+
+def index_kind(spark: SparkSession, root: str, name: str) -> str:
+    return _manifest(spark, root, name).kind
 
 
 def create_index(
@@ -96,9 +99,7 @@ def create_index(
     """Seed index ``name`` of ``kind`` from an existing corpus ``df``
     (embeddings for the vector kinds, documents for neardup). The
     one-time backfill before append/stream maintenance takes over."""
-    from ..streaming import ingest_stream as ist
-
-    if kind not in _KINDS:
+    if kind not in ist.KINDS:
         raise ValueError(f"unknown index kind {kind!r}")
     # Refuse to clobber: growing an existing index is append_index /
     # run_index_stream — the reference's create-or-append
@@ -117,18 +118,7 @@ def create_index(
     # advice).
     hpath, fs = _hadoop_path_and_fs(spark, path)
     fs.delete(hpath, True)
-    if kind == "ivfpq":
-        ist.seed_vector_index(spark, df, path)
-    elif kind == "hyperplane":
-        ist.seed_hyperplane_index(spark, df, path)
-    elif kind == "graph":
-        ist.seed_graph_index(spark, df, path)
-    elif kind == "ab_monitor":
-        ist._ab_monitor_batch(df, path)
-    elif kind == "drift_monitor":
-        ist._drift_monitor_batch(df, path)
-    else:
-        ist.seed_neardup_index(spark, df, path)
+    ist.KINDS[kind].seed(df, path)
 
 
 def append_index(
@@ -136,22 +126,8 @@ def append_index(
 ) -> None:
     """Incremental absorb of one batch into index ``name`` — the same
     code path the streaming trigger runs, callable directly."""
-    from ..streaming import ingest_stream as ist
-
-    kind = index_kind(spark, root, name)
-    path = _index_path(root, name)
-    if kind == "ivfpq":
-        ist._vector_index_batch(batch, path)
-    elif kind == "hyperplane":
-        ist._hyperplane_index_batch(batch, path)
-    elif kind == "graph":
-        ist._graph_index_batch(batch, path)
-    elif kind == "ab_monitor":
-        ist._ab_monitor_batch(batch, path)
-    elif kind == "drift_monitor":
-        ist._drift_monitor_batch(batch, path)
-    else:
-        ist._neardup_batch(batch, path)
+    k = ist.KINDS[index_kind(spark, root, name)]
+    k.absorb(batch, _index_path(root, name))
 
 
 def run_index_stream(
@@ -162,35 +138,15 @@ def run_index_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> None:
-    """Continuous maintenance of index ``name`` over a file stream."""
-    from ..streaming import ingest_stream as ist
-
-    kind = index_kind(spark, root, name)
+    """Continuous maintenance of index ``name`` over a file stream:
+    each micro-batch of the parquet files in ``src_dir`` that the
+    checkpoint has not seen runs the kind's absorb."""
+    k = ist.KINDS[index_kind(spark, root, name)]
     path = _index_path(root, name)
-    if kind == "ivfpq":
-        ist.run_vector_index_stream(
-            spark, src_dir, path, checkpoint_dir, max_files_per_trigger
-        )
-    elif kind == "hyperplane":
-        ist.run_hyperplane_index_stream(
-            spark, src_dir, path, checkpoint_dir, max_files_per_trigger
-        )
-    elif kind == "graph":
-        ist.run_graph_index_stream(
-            spark, src_dir, path, checkpoint_dir, max_files_per_trigger
-        )
-    elif kind == "ab_monitor":
-        ist.run_ab_monitor_stream(
-            spark, src_dir, path, checkpoint_dir, max_files_per_trigger
-        )
-    elif kind == "drift_monitor":
-        ist.run_drift_monitor_stream(
-            spark, src_dir, path, checkpoint_dir, max_files_per_trigger
-        )
-    else:
-        ist.run_neardup_stream(
-            spark, src_dir, path, checkpoint_dir, max_files_per_trigger
-        )
+    ist._run_stream(
+        spark, src_dir, k.schema, path, checkpoint_dir, k.absorb,
+        max_files_per_trigger,
+    )
 
 
 def query_index(
@@ -204,25 +160,16 @@ def query_index(
     a local frame; ``graph`` returns q214's beam search as a Spark
     plan. Output shape matches the family's batch op: (vec_id,
     cos_sim, rn)."""
-    from ..streaming import ingest_stream as ist
-
     kind = index_kind(spark, root, name)
-    path = _index_path(root, name)
-    if kind == "ivfpq":
-        return ist.query_vector_index(spark, path, q_emb, q_id)
-    if kind == "hyperplane":
-        return ist.query_hyperplane_index(spark, path, q_emb, q_id)
-    if kind == "graph":
-        return ist.query_graph_index(spark, path, q_emb, q_id)
-    if kind in _MONITOR_KINDS:
-        raise ValueError(
-            f"index kind {kind!r} has no vector query face; its read"
-            " face is read_index (the anytime e-process table)"
+    k = ist.KINDS[kind]
+    if k.query is None:
+        use = (
+            "its read face is read_index (the anytime e-process table)"
+            if k.read
+            else "probe-and-absorb via append_index (q322 is the batch probe)"
         )
-    raise ValueError(
-        f"index kind {kind!r} has no vector query face; "
-        "probe-and-absorb via append_index (q322 is the batch probe)"
-    )
+        raise ValueError(f"index kind {kind!r} has no vector query face; {use}")
+    return k.query(spark, _index_path(root, name), q_emb, q_id)
 
 
 def read_index(spark: SparkSession, root: str, name: str) -> DataFrame:
@@ -232,23 +179,14 @@ def read_index(spark: SparkSession, root: str, name: str) -> DataFrame:
     first matching event (cold-start contract). Undefined for the
     vector/document kinds, whose read faces are query_index /
     open_index."""
-    from ..streaming import ingest_stream as ist
-
     kind = index_kind(spark, root, name)
-    path = _index_path(root, name)
-    if kind == "ab_monitor":
-        return ist.read_ab_monitor(spark, path)
-    if kind == "drift_monitor":
-        return ist.read_drift_monitor(spark, path)
-    raise ValueError(
-        f"index kind {kind!r} has no monitor read face; use"
-        " query_index / open_index"
-    )
-
-
-def _manifest(spark: SparkSession, root: str, name: str) -> manifest.Manifest:
-    index_kind(spark, root, name)  # raises on unknown names
-    return manifest.latest(spark, _index_path(root, name))
+    k = ist.KINDS[kind]
+    if k.read is None:
+        raise ValueError(
+            f"index kind {kind!r} has no monitor read face; use"
+            " query_index / open_index"
+        )
+    return k.read(spark, _index_path(root, name))
 
 
 def open_index(
@@ -263,15 +201,16 @@ def open_index(
 
 def describe_index(spark: SparkSession, root: str, name: str) -> DataFrame:
     """One row per component: (name, kind, component, n_rows, version,
-    files, bytes). ``version`` is the committed manifest version;
-    ``files``/``bytes`` are the parquet files the component's listed
-    subdirectories hold."""
+    files, bytes), all read at one committed manifest version
+    (``version``); ``files``/``bytes`` are the parquet files the
+    component's listed subdirectories hold."""
     m = _manifest(spark, root, name)
     path = _index_path(root, name)
     rows = []
-    for comp, df in sorted(open_index(spark, root, name).items()):
+    for comp in sorted(m.components):
+        n_rows = manifest.read(spark, path, m, comp).count()
         files, size = parquet_stats(spark, *manifest.paths(path, m, comp))
-        rows.append((name, m.kind, comp, df.count(), m.version, files, size))
+        rows.append((name, m.kind, comp, n_rows, m.version, files, size))
     return spark.createDataFrame(
         rows,
         "name string, kind string, component string, n_rows bigint,"
@@ -312,8 +251,6 @@ def compact_index(spark: SparkSession, root: str, name: str) -> DataFrame:
     Scale: one shuffle per component on its key — the same cost as one
     absorb over the whole store, scheduled offline (nightly / when the
     append tail exceeds a fraction of the base), never per trigger."""
-    from ..streaming.ingest_stream import _graph_index_edges
-
     m = _manifest(spark, root, name)
     path = _index_path(root, name)
     dedup_keys = {
@@ -328,7 +265,7 @@ def compact_index(spark: SparkSession, root: str, name: str) -> DataFrame:
     before = {c: manifest.read(spark, path, m, c) for c in sorted(m.components)}
     n_before = {c: df.count() for c, df in before.items()}
     canonical = {
-        c: _graph_index_edges(spark, path, m)
+        c: ist._graph_index_edges(spark, path, m)
         if c == "edges"
         else df.dropDuplicates(dedup_keys[c])
         for c, df in before.items()

@@ -19,6 +19,8 @@ maxFilesPerTrigger.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import NamedTuple
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -241,13 +243,11 @@ def run_upsert_stream(
 # came from the persisted index; q322 feeds the same probe its fixture
 # split (doc_id % 10 == 7 marks the batch).
 # ---------------------------------------------------------------------------
-def _commit(
-    spark: SparkSession, index_path: str, kind: str, frames: dict, replace=False
-) -> None:
-    """Commit ``frames`` on top of the latest version — or, for a
-    backfill (``replace``), as the index's whole content."""
+def _commit(spark: SparkSession, index_path: str, kind: str, frames: dict) -> None:
+    """Commit ``frames`` on top of the latest version (none for a
+    seed: ``create_index`` refuses an existing index)."""
     base = manifest.latest(spark, index_path)
-    manifest.write(spark, index_path, kind, base, frames, replace)
+    manifest.write(spark, index_path, kind, base, frames)
 
 
 def _vectors(spark: SparkSession, index_path: str, m) -> DataFrame:
@@ -296,32 +296,17 @@ def _neardup_batch(batch: DataFrame, index_path: str) -> None:
     })
 
 
-def seed_neardup_index(
-    spark: SparkSession, docs: DataFrame, index_path: str
-) -> None:
-    """Bootstrap the persisted band/shingle index from an existing
-    corpus (the one-time backfill before the stream takes over)."""
+def _seed_neardup_index(docs: DataFrame, index_path: str) -> None:
+    """``create_index``'s seed: the persisted band/shingle index of an
+    existing corpus, as version 1."""
     from ..operators.dedup import _pmh_bands, _pmh_shingle_sigs
 
+    spark = docs.sparkSession
     shingled = _pmh_shingle_sigs(docs.select("doc_id", "text")).localCheckpoint()
     _commit(spark, index_path, "neardup", {
         "bands": _pmh_bands(shingled.select("doc_id", "sigs")),
         "shingles": shingled.select("doc_id", "shingles"),
-    }, replace=True)
-
-
-def run_neardup_stream(
-    spark: SparkSession,
-    src_dir: str,
-    index_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Continuous incremental near-dup over a document file stream."""
-    _run_stream(
-        spark, src_dir, "doc_id bigint, text string", index_path, checkpoint_dir,
-        _neardup_batch, max_files_per_trigger,
-    )
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -364,33 +349,18 @@ def _vector_index_batch(batch: DataFrame, index_path: str) -> None:
     })
 
 
-def seed_vector_index(
-    spark: SparkSession, emb: DataFrame, index_path: str
-) -> None:
-    """Bootstrap the persisted codes/vectors index from an existing
-    corpus (the one-time backfill before the stream takes over)."""
+def _seed_vector_index(emb: DataFrame, index_path: str) -> None:
+    """``create_index``'s seed: the persisted codes/vectors index of an
+    existing corpus, as version 1."""
     from ..operators.vector import _int8_codes, _ivf_assign, _pq_encode
 
+    spark = emb.sparkSession
     emb = emb.select("vec_id", "embedding")
     codes = _int8_codes(emb).select("vec_id", "code")
     entries = _ivf_assign(emb).join(_pq_encode(codes), "vec_id")
     _commit(spark, index_path, "ivfpq", {
         "vectors": emb, "codes": entries,
-    }, replace=True)
-
-
-def run_vector_index_stream(
-    spark: SparkSession,
-    src_dir: str,
-    index_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Continuous ANN-index maintenance over a vector file stream."""
-    _run_stream(
-        spark, src_dir, _VECTORS_STREAM_SCHEMA, index_path, checkpoint_dir,
-        _vector_index_batch, max_files_per_trigger,
-    )
+    })
 
 
 # ---------------------------------------------------------------------------
@@ -593,31 +563,16 @@ def _hyperplane_index_batch(batch: DataFrame, index_path: str) -> None:
     })
 
 
-def seed_hyperplane_index(
-    spark: SparkSession, emb: DataFrame, index_path: str
-) -> None:
-    """Bootstrap the persisted buckets/vectors index from an existing
-    corpus (the one-time backfill before the stream takes over)."""
+def _seed_hyperplane_index(emb: DataFrame, index_path: str) -> None:
+    """``create_index``'s seed: the persisted buckets/vectors index of
+    an existing corpus, as version 1."""
     from ..operators.vector import _hyperplane_buckets
 
+    spark = emb.sparkSession
     emb = emb.select("vec_id", "embedding")
     _commit(spark, index_path, "hyperplane", {
         "vectors": emb, "buckets": _hyperplane_buckets(emb),
-    }, replace=True)
-
-
-def run_hyperplane_index_stream(
-    spark: SparkSession,
-    src_dir: str,
-    index_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Continuous hyperplane-index maintenance over a vector stream."""
-    _run_stream(
-        spark, src_dir, _VECTORS_STREAM_SCHEMA, index_path, checkpoint_dir,
-        _hyperplane_index_batch, max_files_per_trigger,
-    )
+    })
 
 
 def query_hyperplane_index(
@@ -675,11 +630,11 @@ def query_hyperplane_index(
 #      q202 discipline, tested answer-preserving). Growth is
 #      O(batch * degree) rows per trigger; the corpus is never
 #      re-scored.
-# Bootstrap (empty index) delegates to build_knn_graph, so a single-
-# batch stream over a full corpus equals the batch build EXACTLY;
-# incremental absorb is deterministic and replay-idempotent, with the
-# answer quality pinned by a recall-floor test instead of graph
-# equality (insertion order genuinely changes a k-NN graph).
+# The seed is the batch build (build_knn_graph) over the whole
+# corpus; every later batch takes the absorb, which is deterministic
+# and replay-idempotent, with the answer quality pinned by a
+# recall-floor test instead of graph equality (insertion order
+# genuinely changes a k-NN graph).
 # The query face runs q214's own search (graph_ann.beam_search) for one
 # query over the persisted edges, so a seeded index answers exactly as
 # q214 does (tests/test_graph_ann.py).
@@ -715,21 +670,11 @@ def _graph_index_batch(batch: DataFrame, index_path: str) -> None:
         _entry_points,
         _salted_init_pairs,
         _scored_topg,
-        build_knn_graph,
     )
 
     spark = batch.sparkSession
     new = batch.select("vec_id", "embedding").dropDuplicates(["vec_id"])
     m = manifest.latest(spark, index_path)
-    if not manifest.paths(index_path, m, "edges"):
-        # bootstrap: a full batch build — the one-batch stream and the
-        # batch build are the SAME code path (tested equal)
-        new = new.localCheckpoint()
-        manifest.write(spark, index_path, "graph", m, {
-            "vectors": new, "edges": build_knn_graph(spark, new),
-        })
-        return
-
     seen = manifest.read(spark, index_path, m, "edges").select(
         F.col("src").alias("vec_id")
     ).distinct()
@@ -775,31 +720,16 @@ def _graph_index_batch(batch: DataFrame, index_path: str) -> None:
     })
 
 
-def seed_graph_index(
-    spark: SparkSession, emb: DataFrame, index_path: str
-) -> None:
-    """Bootstrap the persisted edges/vectors index from an existing
-    corpus via the batch NN-descent build."""
+def _seed_graph_index(emb: DataFrame, index_path: str) -> None:
+    """``create_index``'s seed: the persisted edges/vectors index of an
+    existing corpus via the batch NN-descent build, as version 1."""
     from ..operators.graph_ann import build_knn_graph
 
+    spark = emb.sparkSession
     emb = emb.select("vec_id", "embedding")
     _commit(spark, index_path, "graph", {
         "vectors": emb, "edges": build_knn_graph(spark, emb),
-    }, replace=True)
-
-
-def run_graph_index_stream(
-    spark: SparkSession,
-    src_dir: str,
-    index_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Continuous k-NN-graph maintenance over a vector file stream."""
-    _run_stream(
-        spark, src_dir, _VECTORS_STREAM_SCHEMA, index_path, checkpoint_dir,
-        _graph_index_batch, max_files_per_trigger,
-    )
+    })
 
 
 def query_graph_index(
@@ -895,34 +825,6 @@ def _drift_monitor_batch(batch: DataFrame, monitor_path: str) -> None:
     _monitor_batch("drift_monitor", drift_daily_frame, batch, monitor_path)
 
 
-def run_ab_monitor_stream(
-    spark: SparkSession,
-    src_dir: str,
-    monitor_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Maintain the q367 A/B e-process over an events file stream."""
-    _run_stream(
-        spark, src_dir, _EVENTS_STREAM_SCHEMA, monitor_path, checkpoint_dir,
-        _ab_monitor_batch, max_files_per_trigger,
-    )
-
-
-def run_drift_monitor_stream(
-    spark: SparkSession,
-    src_dir: str,
-    monitor_path: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int | None = None,
-) -> None:
-    """Maintain the q368 drift e-detector over an events file stream."""
-    _run_stream(
-        spark, src_dir, _EVENTS_STREAM_SCHEMA, monitor_path, checkpoint_dir,
-        _drift_monitor_batch, max_files_per_trigger,
-    )
-
-
 AB_PARTIALS_SCHEMA = "src_file string, day string, n bigint, k bigint"
 DRIFT_PARTIALS_SCHEMA = (
     "src_file string, day string, n bigint, s bigint, mx bigint, mn bigint"
@@ -936,9 +838,11 @@ def _merged_partials(
     # checkpoint re-appends the same deterministic partial row;
     # distinct files legitimately contribute separate partials for
     # one day and merge by sum/min/max. Cold start (r14 advice): a
-    # monitor deployed against a source dir with zero files fires no
-    # micro-batch and commits nothing, so it reads as empty — the
-    # contract "empty before any matching event" holds from deployment.
+    # monitor created from an empty seed and streamed over a source
+    # dir with zero files fires no micro-batch, so it holds only the
+    # seed's zero rows and reads as empty, as does a path never
+    # written — the contract "empty before any matching event" holds
+    # from deployment.
     m = manifest.latest(spark, monitor_path)
     partials = manifest.read(spark, monitor_path, m, "daily_partials", schema)
     return partials.dropDuplicates(["src_file", "day"])
@@ -970,3 +874,45 @@ def read_drift_monitor(spark: SparkSession, monitor_path: str) -> DataFrame:
         F.min("mn").alias("mn"),
     )
     return drift_edetector_from_daily(daily)
+
+
+# ---------------------------------------------------------------------------
+# The index kinds operators/indexes.py serves. Per kind: the stream
+# source schema, the seed create_index runs, the absorb that
+# append_index and each run_index_stream trigger run, and the query
+# face (vector kinds) or the read face (monitor kinds). Seeds and
+# absorbs take (df, index_path); a monitor's seed is its absorb.
+# ---------------------------------------------------------------------------
+class IndexKind(NamedTuple):
+    schema: str
+    seed: Callable[[DataFrame, str], None]
+    absorb: Callable[[DataFrame, str], None]
+    query: Callable[..., DataFrame] | None = None
+    read: Callable[[SparkSession, str], DataFrame] | None = None
+
+
+KINDS = {
+    "ivfpq": IndexKind(
+        _VECTORS_STREAM_SCHEMA, _seed_vector_index, _vector_index_batch,
+        query=query_vector_index,
+    ),
+    "hyperplane": IndexKind(
+        _VECTORS_STREAM_SCHEMA, _seed_hyperplane_index, _hyperplane_index_batch,
+        query=query_hyperplane_index,
+    ),
+    "graph": IndexKind(
+        _VECTORS_STREAM_SCHEMA, _seed_graph_index, _graph_index_batch,
+        query=query_graph_index,
+    ),
+    "neardup": IndexKind(
+        "doc_id bigint, text string", _seed_neardup_index, _neardup_batch
+    ),
+    "ab_monitor": IndexKind(
+        _EVENTS_STREAM_SCHEMA, _ab_monitor_batch, _ab_monitor_batch,
+        read=read_ab_monitor,
+    ),
+    "drift_monitor": IndexKind(
+        _EVENTS_STREAM_SCHEMA, _drift_monitor_batch, _drift_monitor_batch,
+        read=read_drift_monitor,
+    ),
+}

@@ -50,7 +50,6 @@ SLOW_TESTS = {
     "test_vector_index_stream_equals_batch_q362",
     "test_vector_index_batch_dedupes_within_microbatch",
     "test_graph_index_incremental_absorb",
-    "test_graph_index_bootstrap_equals_batch_build",
     "test_stream_outer_join_equals_batch",
     # planted-data recall / quality sweeps
     "test_planted_clusters_all_families",

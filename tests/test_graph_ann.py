@@ -87,12 +87,14 @@ def test_graph_index_face_equals_q214(spark, sf_dir, tmp_path):
     answer equals q214's rows for that query."""
     from pyspark.sql import functions as F
 
+    from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.streaming import ingest_stream as ist
     from generative_ai_vector_db_spark.tables import load
 
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    root = str(tmp_path)
     index = str(tmp_path / "graph")
-    ist.seed_graph_index(spark, emb, index)
+    ix.create_index(spark, root, "graph", "graph", emb)
     batch = [tuple(r) for r in graph_ann.q214_ann_graph(spark, sf_dir).collect()]
     for q in range(vector.N_QUERY):
         q_emb = emb.where(F.col("vec_id") == q)

@@ -158,3 +158,45 @@ def test_neardup_absorb_is_all_or_nothing(spark, sf_dir, tmp_path, monkeypatch):
     monkeypatch.undo()
     assert manifest.latest(spark, path) == won
     assert rows() == want
+
+
+def test_describe_reads_one_version_while_appends_commit(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """``describe_index`` reports every column of a row at the one
+    version it names, even when an append commits a newer version
+    after each manifest lookup it makes."""
+    from generative_ai_vector_db_spark.fsutil import parquet_stats
+
+    root = str(tmp_path / "root")
+    path = os.path.join(root, "vec")
+    emb = _embeddings(spark, sf_dir)
+    slot = F.col("vec_id") % 10
+    ix.create_index(spark, root, "vec", "ivfpq", emb.where(slot % 2 == 0))
+    late = [emb.where(slot == r) for r in (1, 3, 5, 7)]
+
+    latest = manifest.latest
+    seen = {}
+    appending = []
+
+    def racing_latest(*args):
+        m = latest(*args)
+        seen[m.version] = m
+        if late and not appending:
+            appending.append(True)
+            ix.append_index(spark, root, "vec", late.pop(0))
+            appending.clear()
+        return m
+
+    monkeypatch.setattr(manifest, "latest", racing_latest)
+    rows = ix.describe_index(spark, root, "vec").collect()
+    monkeypatch.undo()
+
+    assert {r["component"] for r in rows} == {"codes", "vectors"}
+    assert manifest.latest(spark, path).version > rows[0]["version"]
+    for r in rows:
+        m = seen[r["version"]]
+        comp = r["component"]
+        assert r["n_rows"] == manifest.read(spark, path, m, comp).count(), comp
+        stats = parquet_stats(spark, *manifest.paths(path, m, comp))
+        assert (r["files"], r["bytes"]) == stats, comp

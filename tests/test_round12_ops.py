@@ -656,15 +656,16 @@ def test_neardup_stream_single_trigger_matches_q322(spark, sf_dir_t2, tmp_path):
     """One micro-batch over the q322 fixture split must reproduce the
     batch operator's classification EXACTLY."""
     from generative_ai_vector_db_spark.operators import dedup
-    from generative_ai_vector_db_spark.streaming import ingest_stream as ist
+    from generative_ai_vector_db_spark.operators import indexes as ix
 
     store_docs, batch_docs = _seed_and_batch(spark, sf_dir_t2)
+    root = str(tmp_path)
     index = str(tmp_path / "index")
     ckpt = str(tmp_path / "ckpt")
     src = str(tmp_path / "src")
-    ist.seed_neardup_index(spark, store_docs, index)
+    ix.create_index(spark, root, "index", "neardup", store_docs)
     batch_docs.coalesce(1).write.parquet(src)
-    ist.run_neardup_stream(spark, src, index, ckpt)
+    ix.run_index_stream(spark, root, "index", src, ckpt)
 
     got = (
         _neardup_results(spark, index)
@@ -684,18 +685,19 @@ def test_neardup_stream_multibatch_and_replay(spark, sf_dir_t2, tmp_path):
     """Two triggers + full replay: the absorb/merge path must be
     idempotent (at-least-once convergence), and cross-trigger dups
     surface as dup_of_store once the earlier trigger is absorbed."""
-    from generative_ai_vector_db_spark.streaming import ingest_stream as ist
+    from generative_ai_vector_db_spark.operators import indexes as ix
 
     store_docs, batch_docs = _seed_and_batch(spark, sf_dir_t2)
+    root = str(tmp_path)
     index = str(tmp_path / "index")
     src = str(tmp_path / "src")
-    ist.seed_neardup_index(spark, store_docs, index)
+    ix.create_index(spark, root, "index", "neardup", store_docs)
     # two files -> two triggers under maxFilesPerTrigger=1
     half = F.col("doc_id") % 20 == 7
     batch_docs.where(half).coalesce(1).write.parquet(src)
     batch_docs.where(~half).coalesce(1).write.mode("append").parquet(src)
-    ist.run_neardup_stream(
-        spark, src, index, str(tmp_path / "ck1"), max_files_per_trigger=1
+    ix.run_index_stream(
+        spark, root, "index", src, str(tmp_path / "ck1"), max_files_per_trigger=1
     )
     first = _neardup_results(spark, index).orderBy("doc_id").toPandas()
     bands_before = spark.read.parquet(index + "/bands").count()
@@ -707,8 +709,8 @@ def test_neardup_stream_multibatch_and_replay(spark, sf_dir_t2, tmp_path):
 
     # REPLAY the whole stream with a fresh checkpoint: classifications
     # and index must be byte-identical afterwards
-    ist.run_neardup_stream(
-        spark, src, index, str(tmp_path / "ck2"), max_files_per_trigger=1
+    ix.run_index_stream(
+        spark, root, "index", src, str(tmp_path / "ck2"), max_files_per_trigger=1
     )
     second = _neardup_results(spark, index).orderBy("doc_id").toPandas()
     assert second.reset_index(drop=True).equals(first.reset_index(drop=True))

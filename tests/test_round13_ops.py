@@ -83,21 +83,22 @@ def test_neardup_stream_equals_batch_both_scales(spark, sf, tmp_path):
     it)."""
     from generative_ai_vector_db_spark import manifest
     from generative_ai_vector_db_spark.operators import dedup
+    from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.operators.dedup import (
         INCR_BATCH_MOD,
         INCR_BATCH_RESIDUE,
     )
-    from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 
     docs = load(spark, sf, "documents").select("doc_id", "text")
     is_batch = F.col("doc_id") % INCR_BATCH_MOD == INCR_BATCH_RESIDUE
     store_docs, batch_docs = docs.where(~is_batch), docs.where(is_batch)
 
+    root = str(tmp_path)
     index = str(tmp_path / "index")
     src = str(tmp_path / "src")
-    ist.seed_neardup_index(spark, store_docs, index)
+    ix.create_index(spark, root, "index", "neardup", store_docs)
     batch_docs.coalesce(1).write.parquet(src)
-    ist.run_neardup_stream(spark, src, index, str(tmp_path / "ck"))
+    ix.run_index_stream(spark, root, "index", src, str(tmp_path / "ck"))
 
     m = manifest.latest(spark, index)
     got = (
@@ -203,17 +204,19 @@ def test_vector_index_stream_equals_batch_q362(spark, sf_dir_t2, tmp_path):
     operator's top-13 exactly. Replaying the stream with a fresh
     checkpoint must leave index and answer byte-identical
     (at-least-once convergence)."""
+    from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 
     emb = load(spark, sf_dir_t2, "embeddings").select("vec_id", "embedding")
     is_late = F.col("vec_id") % 10 == 3
     seed, late = emb.where(~is_late), emb.where(is_late)
 
+    root = str(tmp_path)
     index = str(tmp_path / "vindex")
     src = str(tmp_path / "vsrc")
-    ist.seed_vector_index(spark, seed, index)
+    ix.create_index(spark, root, "vindex", "ivfpq", seed)
     late.coalesce(1).write.parquet(src)
-    ist.run_vector_index_stream(spark, src, index, str(tmp_path / "ck1"))
+    ix.run_index_stream(spark, root, "vindex", src, str(tmp_path / "ck1"))
 
     q_emb = emb.where(F.col("vec_id") == vector.BINARY_Q_ID)
     got = [
@@ -231,7 +234,7 @@ def test_vector_index_stream_equals_batch_q362(spark, sf_dir_t2, tmp_path):
     n_codes = spark.read.parquet(index + "/codes").count()
     assert n_codes == emb.count()
     # replay with a fresh checkpoint: absorb must be idempotent
-    ist.run_vector_index_stream(spark, src, index, str(tmp_path / "ck2"))
+    ix.run_index_stream(spark, root, "vindex", src, str(tmp_path / "ck2"))
     assert spark.read.parquet(index + "/codes").count() == n_codes
     again = [
         (r["vec_id"], r["cos_sim"], r["rn"])

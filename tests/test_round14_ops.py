@@ -23,19 +23,21 @@ def test_vector_index_batch_dedupes_within_microbatch(
     code row (r14 advice): before the fix, both copies survived the
     anti-join against the code store and the duplicate code occupied
     two shortlist slots at query time, breaking stream==batch."""
+    from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 
     emb = load(spark, sf_dir_t2, "embeddings").select("vec_id", "embedding")
     is_late = F.col("vec_id") % 10 == 3
     seed, late = emb.where(~is_late), emb.where(is_late)
 
+    root = str(tmp_path)
     index = str(tmp_path / "vindex")
     src = str(tmp_path / "vsrc")
-    ist.seed_vector_index(spark, seed, index)
+    ix.create_index(spark, root, "vindex", "ivfpq", seed)
     # duplicate every late row inside the single source file: one
     # availableNow trigger sees both copies in the same micro-batch
     late.unionAll(late).coalesce(1).write.parquet(src)
-    ist.run_vector_index_stream(spark, src, index, str(tmp_path / "ck"))
+    ix.run_index_stream(spark, root, "vindex", src, str(tmp_path / "ck"))
 
     codes = spark.read.parquet(index + "/codes")
     assert codes.count() == emb.count()
@@ -100,19 +102,21 @@ def test_q368_zero_range_reference_is_defined(spark, tmp_path):
     "sf", ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 )
 def test_hyperplane_stream_equals_batch_both_scales(spark, sf, tmp_path):
+    from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 
     emb = load(spark, sf, "embeddings").select("vec_id", "embedding")
     is_late = F.col("vec_id") % 10 == 3
     seed, late = emb.where(~is_late), emb.where(is_late)
 
+    root = str(tmp_path)
     index = str(tmp_path / "hindex")
     src = str(tmp_path / "hsrc")
-    ist.seed_hyperplane_index(spark, seed, index)
+    ix.create_index(spark, root, "hindex", "hyperplane", seed)
     # duplicate the late rows within the single micro-batch: the
     # absorb-side dedup must make this a no-op
     late.unionAll(late).coalesce(1).write.parquet(src)
-    ist.run_hyperplane_index_stream(spark, src, index, str(tmp_path / "ck1"))
+    ix.run_index_stream(spark, root, "hindex", src, str(tmp_path / "ck1"))
 
     buckets = spark.read.parquet(index + "/buckets")
     assert buckets.count() == 2 * emb.count()  # 2 tables per vector
@@ -132,14 +136,14 @@ def test_hyperplane_stream_equals_batch_both_scales(spark, sf, tmp_path):
     assert got == want
 
     # replay with a fresh checkpoint: absorb must be idempotent
-    ist.run_hyperplane_index_stream(spark, src, index, str(tmp_path / "ck2"))
+    ix.run_index_stream(spark, root, "hindex", src, str(tmp_path / "ck2"))
     assert spark.read.parquet(index + "/buckets").count() == 2 * emb.count()
 
 
 # --------------------------------------------------------------------------
-# Streaming graph index (VERDICT r13 item 3): bootstrap == batch build;
-# incremental absorb is deterministic, replay-idempotent, keeps every
-# absorbed node reachable, and holds a pinned recall floor vs exact.
+# Streaming graph index (VERDICT r13 item 3): incremental absorb is
+# deterministic, replay-idempotent, keeps every absorbed node
+# reachable, and holds a pinned recall floor vs exact.
 # --------------------------------------------------------------------------
 def _exact_topk_ids(spark, emb, q_id, k):
     from pyspark.sql import Window
@@ -166,30 +170,6 @@ def _exact_topk_ids(spark, emb, q_id, k):
     }
 
 
-def test_graph_index_bootstrap_equals_batch_build(spark, sf_dir_t2, tmp_path):
-    """An empty-index stream over the full corpus must build the SAME
-    edge store as seed_graph_index (one code path, tested equal)."""
-    from generative_ai_vector_db_spark.streaming import ingest_stream as ist
-
-    emb = load(spark, sf_dir_t2, "embeddings").select("vec_id", "embedding")
-    seeded = str(tmp_path / "gseed")
-    streamed = str(tmp_path / "gstream")
-    src = str(tmp_path / "gsrc")
-    ist.seed_graph_index(spark, emb, seeded)
-    emb.coalesce(1).write.parquet(src)
-    ist.run_graph_index_stream(spark, src, streamed, str(tmp_path / "ck"))
-
-    a = {
-        (r["src"], r["dst"])
-        for r in spark.read.parquet(seeded + "/edges").collect()
-    }
-    b = {
-        (r["src"], r["dst"])
-        for r in spark.read.parquet(streamed + "/edges").collect()
-    }
-    assert a == b and len(a) > 0
-
-
 def test_graph_index_incremental_absorb(spark, sf_dir_t2, tmp_path):
     """Seed 90%, stream 10%: absorb must be replay-idempotent and
     deterministic, every absorbed node must have out-edges and be
@@ -198,17 +178,19 @@ def test_graph_index_incremental_absorb(spark, sf_dir_t2, tmp_path):
     from generative_ai_vector_db_spark.operators.graph_ann import (
         GRAPH_DEGREE,
     )
+    from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 
     emb = load(spark, sf_dir_t2, "embeddings").select("vec_id", "embedding")
     is_late = F.col("vec_id") % 10 == 3
     seed, late = emb.where(~is_late), emb.where(is_late)
 
+    root = str(tmp_path)
     index = str(tmp_path / "gindex")
     src = str(tmp_path / "gsrc")
-    ist.seed_graph_index(spark, seed, index)
+    ix.create_index(spark, root, "gindex", "graph", seed)
     late.coalesce(1).write.parquet(src)
-    ist.run_graph_index_stream(spark, src, index, str(tmp_path / "ck1"))
+    ix.run_index_stream(spark, root, "gindex", src, str(tmp_path / "ck1"))
 
     edges = ist._graph_index_edges(spark, index)
     late_ids = {r["vec_id"] for r in late.select("vec_id").collect()}
@@ -236,7 +218,7 @@ def test_graph_index_incremental_absorb(spark, sf_dir_t2, tmp_path):
 
     # replay with a fresh checkpoint: byte-identical edge store + answer
     n_edges = spark.read.parquet(index + "/edges").count()
-    ist.run_graph_index_stream(spark, src, index, str(tmp_path / "ck2"))
+    ix.run_index_stream(spark, root, "gindex", src, str(tmp_path / "ck2"))
     assert spark.read.parquet(index + "/edges").count() == n_edges
     again = [
         (r["vec_id"], r["cos_sim"], r["rn"])
@@ -469,9 +451,9 @@ def test_new_query_faces_plan_shapes(spark, sf_dir_t2, tmp_path):
 
     emb = load(spark, sf_dir_t2, "embeddings").select("vec_id", "embedding")
     root = str(tmp_path / "root")
-    gidx = str(tmp_path / "g")
+    gidx = str(tmp_path / "root" / "g")
     ix.create_index(spark, root, "h", "hyperplane", emb)
-    ist.seed_graph_index(spark, emb, gidx)
+    ix.create_index(spark, root, "g", "graph", emb)
     q_emb = emb.where(F.col("vec_id") == vector.BINARY_Q_ID)
 
     hits = ix.query_index(spark, root, "h", q_emb, vector.BINARY_Q_ID)
@@ -606,43 +588,50 @@ def test_index_stream_resume_same_checkpoint(spark, sf_dir_t2, tmp_path):
     "sf", ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 )
 def test_monitor_streams_equal_batch(spark, sf, tmp_path):
+    from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.operators import stats
     from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 
     ev = load(spark, sf, "events")
+    root = str(tmp_path)
 
     cases = [
         (
             "ab",
-            ist.run_ab_monitor_stream,
+            "ab_monitor",
             ist.read_ab_monitor,
             stats.q367_anytime_ab_monitor,
             ("day", "n_t", "k_t", "log_e", "rejected"),
         ),
         (
             "drift",
-            ist.run_drift_monitor_stream,
+            "drift_monitor",
             ist.read_drift_monitor,
             stats.q368_drift_edetector,
             ("day", "n_t", "log_e", "rejected"),
         ),
     ]
-    for name, run_fn, read_fn, batch_fn, cols in cases:
+    for name, kind, read_fn, batch_fn, cols in cases:
         src = str(tmp_path / f"src_{name}")
         mon = str(tmp_path / f"mon_{name}")
         ck = str(tmp_path / f"ck_{name}")
+        ix.create_index(spark, root, f"mon_{name}", kind, ev.limit(0))
         # slices interleave DAYS across micro-batches (the hard case:
         # every day's counts must merge across triggers)
         for s in (0, 1):
             ev.where(F.col("event_id") % 3 == s).coalesce(1).write.mode(
                 "append"
             ).parquet(src)
-        run_fn(spark, src, mon, ck, max_files_per_trigger=1)
+        ix.run_index_stream(
+            spark, root, f"mon_{name}", src, ck, max_files_per_trigger=1
+        )
         # a later file resumes the SAME checkpoint (restart recovery)
         ev.where(F.col("event_id") % 3 == 2).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        run_fn(spark, src, mon, ck, max_files_per_trigger=1)
+        ix.run_index_stream(
+            spark, root, f"mon_{name}", src, ck, max_files_per_trigger=1
+        )
 
         got = [
             tuple(r[c] for c in cols) for r in read_fn(spark, mon).collect()
@@ -655,7 +644,9 @@ def test_monitor_streams_equal_batch(spark, sf, tmp_path):
         # replay the whole stream under a FRESH checkpoint: partials
         # re-append under the same batch_ids; the read-side dedup
         # must keep the monitor identical
-        run_fn(spark, src, mon, str(tmp_path / f"ck2_{name}"))
+        ix.run_index_stream(
+            spark, root, f"mon_{name}", src, str(tmp_path / f"ck2_{name}")
+        )
         got2 = [
             tuple(r[c] for c in cols) for r in read_fn(spark, mon).collect()
         ]
@@ -696,24 +687,27 @@ def test_monitor_stream_before_first_matching_event(spark, tmp_path):
     zero-row (schema-preserving) partial and the monitor reads as
     empty rather than throwing; matching events in a later file then
     populate it through the same checkpoint."""
+    from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.operators import stats
     from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 
     ev = load(spark, "/root/testdata/sf0.001", "events")
+    root = str(tmp_path)
     src = str(tmp_path / "src")
     mon = str(tmp_path / "mon")
     ck = str(tmp_path / "ck")
 
+    ix.create_index(spark, root, "mon", "ab_monitor", ev.limit(0))
     ev.where(F.col("event_type") == "view").coalesce(1).write.mode(
         "append"
     ).parquet(src)
-    ist.run_ab_monitor_stream(spark, src, mon, ck)
+    ix.run_index_stream(spark, root, "mon", src, ck)
     assert ist.read_ab_monitor(spark, mon).count() == 0
 
     ev.where(F.col("event_type") != "view").coalesce(1).write.mode(
         "append"
     ).parquet(src)
-    ist.run_ab_monitor_stream(spark, src, mon, ck)
+    ix.run_index_stream(spark, root, "mon", src, ck)
     got = [
         (r["day"], r["n_t"], r["k_t"], r["log_e"], r["rejected"])
         for r in ist.read_ab_monitor(spark, mon).collect()

@@ -656,24 +656,21 @@ def test_semdedup_takes_trained_pivot_relation(spark, sf_dir_t2):
 
 def test_monitor_cold_start_zero_files(spark, tmp_path):
     """A monitor deployed against a source dir with ZERO files fires
-    no micro-batch, so the partials path never gets created — reading
-    it must yield the documented empty table, not throw (r14 advice),
-    for both the raw faces and the catalog face."""
+    no micro-batch — reading it must yield the documented empty table,
+    not throw (r14 advice), both through the catalog and on a monitor
+    path that was never written."""
     from generative_ai_vector_db_spark.operators import indexes as ix
     from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 
     src = str(tmp_path / "src")
     os.makedirs(src)  # exists, but empty: availableNow fires nothing
-    mon_ab = str(tmp_path / "ab")
-    mon_dr = str(tmp_path / "dr")
-    ist.run_ab_monitor_stream(spark, src, mon_ab, str(tmp_path / "ck1"))
-    ist.run_drift_monitor_stream(spark, src, mon_dr, str(tmp_path / "ck2"))
-    assert not os.path.exists(os.path.join(mon_ab, "daily_partials"))
-
-    ab = ist.read_ab_monitor(spark, mon_ab)
-    dr = ist.read_drift_monitor(spark, mon_dr)
-    assert ab.count() == 0 and dr.count() == 0
-    assert [f.name for f in ab.schema.fields] == [
+    root = str(tmp_path / "root")
+    ev = load(spark, SF_T1, "events")
+    ix.create_index(spark, root, "cold", "ab_monitor", ev.limit(0))
+    ix.run_index_stream(spark, root, "cold", src, str(tmp_path / "ck1"))
+    cold = ix.read_index(spark, root, "cold")
+    assert cold.count() == 0
+    assert [f.name for f in cold.schema.fields] == [
         "day",
         "n_t",
         "k_t",
@@ -681,9 +678,11 @@ def test_monitor_cold_start_zero_files(spark, tmp_path):
         "rejected",
     ]
 
-    # catalog face: a monitor created from an EMPTY seed reads empty
-    root = str(tmp_path / "root")
-    ev = load(spark, SF_T1, "events")
+    ab = ist.read_ab_monitor(spark, str(tmp_path / "ab"))
+    dr = ist.read_drift_monitor(spark, str(tmp_path / "dr"))
+    assert ab.count() == 0 and dr.count() == 0
+
+    # a monitor created from an EMPTY seed reads empty
     ix.create_index(spark, root, "ab", "ab_monitor", ev.limit(0))
     assert ix.read_index(spark, root, "ab").count() == 0
     # and populates once real events stream through the same monitor
