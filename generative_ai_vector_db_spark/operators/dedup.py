@@ -33,6 +33,7 @@ Scale design (the whole point of these):
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1093,60 +1094,70 @@ PMH_A = [(2654435761 + 977 * i) % PMH_P for i in range(PMH_PERMS)]
 PMH_B = [(2246822519 + 131071 * i) % PMH_P for i in range(PMH_PERMS)]
 
 
+_PMH_A_COL = np.array(PMH_A, dtype=np.int64)[:, None]
+_PMH_B_COL = np.array(PMH_B, dtype=np.int64)[:, None]
+
+
+def _pmh_shingle(text: str):
+    """(shingles, sigs) of one document: its distinct portable shingle
+    hashes, sorted, and the PMH_PERMS MinHash minima, both int64 — the
+    EXACT integer chain from the header. None for a document shorter
+    than PMH_SHINGLE_W words. The one body that _pmh_shingle_sigs's
+    ``mapInPandas`` and the driver-side near-dup absorb
+    (streaming/ingest_stream.py::_neardup_batch) both run."""
+    W = PMH_SHINGLE_W
+    ws = text.lower().split(" ")
+    wh = np.fromiter(
+        (
+            0
+            if not w
+            else (
+                ((len(w) * 31 + ord(w[0])) * 31 + ord(w[(len(w) + 1) // 2 - 1]))
+                * 31
+                + ord(w[-1])
+            )
+            % PMH_P
+            for w in ws
+        ),
+        dtype=np.int64,
+        count=len(ws),
+    )
+    if len(wh) < W:
+        return None
+    acc = np.zeros(len(wh) - W + 1, dtype=np.int64)
+    for t in range(W):
+        acc = (acc * PMH_MULT + wh[t : len(wh) - W + 1 + t]) % PMH_P
+    sh = np.unique(acc)
+    # (a*x + b) % P == ((a*x) % P + b) % P; a*x <= 2^62
+    sigs = ((_PMH_A_COL * sh[None, :]) % PMH_P + _PMH_B_COL) % PMH_P
+    return sh, sigs.min(axis=1)
+
+
 def _pmh_shingle_sigs(docs: DataFrame) -> DataFrame:
     """(doc_id, shingles, sigs): distinct portable shingle hashes and
-    the 16 MinHash signature minima per doc — the EXACT integer chain
-    from the header, vectorized in int64 numpy inside an Arrow
-    ``mapInPandas``. The declarative higher-order-function form is
-    interpreted per array element by Catalyst (no codegen for lambda
-    bodies) and measured 10.2 s / 500 docs for this stage; the numpy
-    twin is ~20x faster and bit-identical (pure int64 arithmetic, no
-    floats anywhere). repartition BEFORE the hash stage: a small
-    fixture parquet arrives as ONE split; at 100 TB the input splits
-    provide the parallelism for free."""
-    A = PMH_A
-    B = PMH_B
-    W = PMH_SHINGLE_W
+    the 16 MinHash signature minima per doc — _pmh_shingle per document
+    inside an Arrow ``mapInPandas``. The declarative
+    higher-order-function form is interpreted per array element by
+    Catalyst (no codegen for lambda bodies) and measured 10.2 s / 500
+    docs for this stage; the numpy twin is ~20x faster and
+    bit-identical (pure int64 arithmetic, no floats anywhere).
+    repartition BEFORE the hash stage: a small fixture parquet arrives
+    as ONE split; at 100 TB the input splits provide the parallelism
+    for free. The workers import _pmh_shingle from this package, so the
+    package is shipped to them first."""
+    from .._bootstrap import ensure_worker_imports
+
+    ensure_worker_imports(docs.sparkSession)
 
     def gen(batches):
-        import numpy as np
         import pandas as pd
 
-        a = np.array(A, dtype=np.int64)[:, None]
-        b = np.array(B, dtype=np.int64)[:, None]
         for pdf in batches:
             rows = []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                ws = text.lower().split(" ")
-                wh = np.fromiter(
-                    (
-                        0
-                        if not w
-                        else (
-                            (
-                                (len(w) * 31 + ord(w[0])) * 31
-                                + ord(w[(len(w) + 1) // 2 - 1])
-                            )
-                            * 31
-                            + ord(w[-1])
-                        )
-                        % PMH_P
-                        for w in ws
-                    ),
-                    dtype=np.int64,
-                    count=len(ws),
-                )
-                if len(wh) < W:
-                    continue
-                acc = np.zeros(len(wh) - W + 1, dtype=np.int64)
-                for t in range(W):
-                    acc = (acc * PMH_MULT + wh[t : len(wh) - W + 1 + t]) % PMH_P
-                sh = np.unique(acc)  # order irrelevant downstream
-                # (a*x + b) % P == ((a*x) % P + b) % P; a*x <= 2^62
-                sigs = ((a * sh[None, :]) % PMH_P + b) % PMH_P
-                rows.append(
-                    (int(doc_id), sh.tolist(), sigs.min(axis=1).tolist())
-                )
+                out = _pmh_shingle(text)
+                if out is not None:
+                    rows.append((int(doc_id), out[0].tolist(), out[1].tolist()))
             if rows:
                 yield pd.DataFrame(
                     rows, columns=["doc_id", "shingles", "sigs"]
@@ -1178,6 +1189,16 @@ def _pmh_bands(sigs: DataFrame) -> DataFrame:
             )
         ).alias("band", "key"),
     ).select("doc_id", "band", "key")
+
+
+def _pmh_band_keys(sigs: np.ndarray) -> np.ndarray:
+    """The numpy twin of _pmh_bands: the (n, PMH_BANDS) band keys of
+    (n, PMH_PERMS) int64 signatures, column k being band k."""
+    rows = sigs.reshape(len(sigs), PMH_BANDS, PMH_ROWS)
+    acc = np.zeros((len(sigs), PMH_BANDS), dtype=np.int64)
+    for r in range(PMH_ROWS):
+        acc = (acc * PMH_MULT + rows[:, :, r]) % PMH_P
+    return acc
 
 
 def _pmh_kept_bands(bands: DataFrame) -> DataFrame:
@@ -1435,11 +1456,15 @@ ORDER BY n_pairs DESC, src_lo, src_hi
 # int64 triples and the exact verify joins the shingle index by
 # candidate id only, so probe cost is O(|batch| * bands +
 # |candidates|), independent of corpus size.
-# _incremental_classify is the ONE probe: q322 feeds it the fixture
+# _incremental_classify is q322's probe: q322 feeds it the fixture
 # split (doc_id % 10 == 7 is the batch, q186's residue split, the rest
-# is the store); the streaming absorb
-# (streaming/ingest_stream.py::_neardup_batch) feeds it the index's
-# persisted bands and shingles as the store side.
+# is the store). The near-dup index absorb
+# (streaming/ingest_stream.py::_neardup_batch) runs its driver twin,
+# ingest_stream.py::_neardup_absorb, in numpy over the index's cached
+# bands and shingles: the same rules, for a batch too small to pay a
+# Spark plan's fixed cost. tests/test_neardup_absorb.py keeps the
+# Spark absorb that fed this function as the frozen reference the
+# twin must equal row for row.
 # tests/test_round11_ops.py persists q322's store side through
 # operators/store.py and asserts the probe against the parquet
 # roundtrip classifies exactly as the inline run.
@@ -1465,6 +1490,9 @@ def _incremental_classify(
     band, key) and shingles (doc_id, shingles). A batch doc never
     matches its own store rows (dup != doc), so a replayed micro-batch
     whose rows were already absorbed classifies as the first run did.
+    streaming/ingest_stream.py::_neardup_absorb is the driver twin the
+    index absorb runs; any rule changed here changes there too, and
+    tests/test_neardup_absorb.py holds the two equal.
     """
     # --- candidates: q302's band join, batch side probing ---
     allb = store_bands.select(

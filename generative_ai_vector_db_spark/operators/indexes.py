@@ -47,8 +47,11 @@ over the persisted edges.
 (its classifications append to the ``results`` component, keep-first
 by doc_id, in the same commit as its bands and shingles), and
 ``query_index`` is undefined for it by design — probing without
-absorbing is the batch op q322, whose classifier
-(``operators/dedup.py::_incremental_classify``) the absorb runs. The two monitor kinds (r15, VERDICT
+absorbing is the batch op q322. The absorb runs on the driver from the
+same cache (``streaming/ingest_stream.py::_neardup_absorb``, the numpy
+twin of q322's classifier ``operators/dedup.py::_incremental_classify``);
+at a stable cache it runs 4 Spark jobs, the batch collect and the three
+component writes. The two monitor kinds (r15, VERDICT
 r14 item 4) are EVENT indexes: their absorb reduces a micro-batch of
 events to per-day integer partials, and their read face is
 ``read_index`` — the full anytime e-process table (q367/q368) over
@@ -59,11 +62,10 @@ stream source schema, seed, absorb, and query or read face. Every
 face below looks the kind up in that table; none branches on it.
 
 Scale: the absorbs are O(batch) per trigger with read-side dedup /
-degree bounds, with one O(store) exception in the near-dup absorb
-(``streaming/ingest_stream.py::_neardup_batch``): its classifier's
-band-cap regroup ``_pmh_kept_bands`` over every stored band row. (Its
-keep-first anti-joins also scan the ``doc_id`` column of the committed
-bands and results, but nothing is rewritten.)
+degree bounds. The near-dup absorb looks each batch bucket and doc_id
+up in the cached, sorted band, shingle and result arrays (searchsorted
+per committed subdirectory), so no stored row is regrouped or
+rescanned; the cache holds the decoded index in driver memory.
 """
 
 from __future__ import annotations
@@ -290,7 +292,8 @@ def drop_index(spark: SparkSession, root: str, name: str) -> None:
     FileSystem API so it works on any Spark-reachable scheme, and
     deletes ``_meta`` FIRST — a crash mid-drop then leaves a
     directory the catalog no longer lists (invisible garbage, never
-    a half-readable index)."""
+    a half-readable index). The driver cache lets go of the index's
+    decoded arrays."""
     # raises ValueError on unknown names
     index_kind(spark, root, name)
     path = _index_path(root, name)
@@ -298,3 +301,4 @@ def drop_index(spark: SparkSession, root: str, name: str) -> None:
     fs.delete(mpath, True)
     hpath, fs = _hadoop_path_and_fs(spark, path)
     fs.delete(hpath, True)
+    ist._evict(os.path.join(path, ""))

@@ -221,11 +221,25 @@ def run_upsert_stream(
 # R11-as-production shape for CONTINUOUS ingest. Each micro-batch of
 # documents is shingled/MinHashed (the q302 portable integer chain),
 # probed against the persisted band index (the corpus is NEVER
-# rescanned — O(batch·bands + candidates) per trigger), classified
-# (novel / dup_of_store / dup_in_batch), and then ABSORBED: its band
-# rows and shingle sets append to the index so the next trigger sees
-# them as store, and its classifications append to the index's
-# ``results`` component.
+# rescanned), classified (novel / dup_of_store / dup_in_batch), and
+# then ABSORBED: its band rows and shingle sets append to the index so
+# the next trigger sees them as store, and its classifications append
+# to the index's ``results`` component.
+#
+# The absorb runs on the driver, from the decoded components the
+# driver cache holds (below): a 200-document batch is a few thousand
+# integers, while a Spark plan for it costs ~40 jobs of fixed
+# overhead. It runs _pmh_shingle, the body q302's mapInPandas runs,
+# and classifies by q322's rules (operators/dedup.py::
+# _incremental_classify, kept as q322's path and as the frozen
+# reference in tests/test_neardup_absorb.py): the PMH_BUCKET_CAP over
+# store + batch rows, store candidates dup != doc, batch candidates
+# dup < doc, the float64 Jaccard verify. Each cached ``bands`` part is
+# sorted by (band, key), so a batch key's store count and members are
+# two searchsorted calls per part: the per-absorb cost is O(batch ·
+# bands + candidates) plus O(log store) per lookup, with no regroup of
+# the store. At a stable cache an absorb runs 4 Spark jobs: the batch
+# collect and the 3 component writes.
 #
 # At-least-once safety (the q335/_upsert_batch discipline):
 #   - absorb is doc_id-anti-joined against the index, so a replayed
@@ -236,12 +250,11 @@ def run_upsert_stream(
 #     committed results), so replays converge to the identical
 #     results (tested by replay-equivalence);
 #   - band, shingle and result rows land in ONE manifest commit, so a
-#     crash or a lost commit race leaves none of them behind.
-# The classify IS q322's probe (operators/dedup.py::
-# _incremental_classify), fed the persisted bands and shingles as its
-# store side. Store membership is POSITIONAL — a row is store iff it
-# came from the persisted index; q322 feeds the same probe its fixture
-# split (doc_id % 10 == 7 marks the batch).
+#     crash or a lost commit race leaves none of them behind, and the
+#     cache takes the committed arrays only after the commit returns.
+# Store membership is POSITIONAL — a row is store iff it came from the
+# persisted index; q322 feeds its probe the fixture split (doc_id %
+# 10 == 7 marks the batch).
 # ---------------------------------------------------------------------------
 def _commit(spark: SparkSession, index_path: str, kind: str, frames: dict) -> None:
     """Commit ``frames`` on top of the latest version (none for a
@@ -255,45 +268,217 @@ def _vectors(spark: SparkSession, index_path: str, m) -> DataFrame:
     return manifest.read(spark, index_path, m, "vectors").dropDuplicates(["vec_id"])
 
 
-def _neardup_batch(batch: DataFrame, index_path: str) -> None:
+def _bucket(band: np.ndarray, key: np.ndarray) -> np.ndarray:
+    """One sortable int64 per (band, key): keys are below 2^31."""
+    return (band.astype(np.int64) << 31) | key
+
+
+def _band_index(t) -> dict[str, np.ndarray]:
+    """A ``bands`` part as its buckets sorted, the doc_id of each, and
+    its distinct doc_ids."""
+    bk = _bucket(_np_column(t.column("band")), _np_column(t.column("key")))
+    doc = _np_column(t.column("doc_id"))
+    order = np.argsort(bk, kind="stable")
+    return {"bk": bk[order], "doc_id": doc[order], "ids": np.unique(doc)}
+
+
+def _shingle_index(t) -> dict[str, np.ndarray]:
+    """A ``shingles`` part as its doc_ids sorted, the row of each, and
+    the ragged shingle sets as Arrow offsets plus values."""
+    sets = t.column("shingles").combine_chunks()
+    doc = _np_column(t.column("doc_id"))
+    order = np.argsort(doc, kind="stable")
+    return {
+        "doc_id": doc[order], "row": order,
+        "offsets": sets.offsets.to_numpy(), "values": sets.values.to_numpy(),
+    }
+
+
+def _id_index(t) -> dict[str, np.ndarray]:
+    """A ``results`` part as its distinct doc_ids, sorted."""
+    return {"ids": np.unique(_np_column(t.column("doc_id")))}
+
+
+def _lookup(sorted_ids: np.ndarray, ids: np.ndarray):
+    """(pos, found): where each of ``ids`` sits in the non-empty
+    ``sorted_ids``, and whether it is there."""
+    pos = np.searchsorted(sorted_ids, ids).clip(max=len(sorted_ids) - 1)
+    return pos, sorted_ids[pos] == ids
+
+
+def _held(parts: list, ids: np.ndarray) -> np.ndarray:
+    """Which ``ids`` some part's sorted ``ids`` array holds."""
+    out = np.zeros(len(ids), dtype=bool)
+    for p in parts:
+        out |= _lookup(p["ids"], ids)[1]
+    return out
+
+
+def _ranges(lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """The concatenated index ranges [lo[i], hi[i])."""
+    n = hi - lo
+    return np.repeat(lo - (np.cumsum(n) - n), n) + np.arange(n.sum())
+
+
+def _shingle_sets(parts: list, batch: dict, ids) -> dict:
+    """doc_id -> shingle set for ``ids``: the first committed copy,
+    else the batch's (q322 unions both sides and keeps one copy per
+    doc_id; a doc's shingles are a function of its text)."""
+    need = np.unique(np.asarray(ids, dtype=np.int64))
+    sets = {}
+    for p in parts:
+        pos, found = _lookup(p["doc_id"], need)
+        for i, r in zip(need[found].tolist(), p["row"][pos[found]].tolist()):
+            if i not in sets:
+                sets[i] = p["values"][p["offsets"][r] : p["offsets"][r + 1]]
+    return {i: sets[i] if i in sets else batch[i] for i in need.tolist()}
+
+
+def _neardup_absorb(ids, texts, bands: list, shingles: list, prior: list) -> dict:
+    """The rows one absorb commits, as Arrow tables by component:
+    ``ids``/``texts`` are the batch, the lists the decoded committed
+    parts. Classifies by operators/dedup.py::_incremental_classify's
+    exact rules, then keeps what the index does not hold yet."""
+    import pyarrow as pa
+
     from ..operators.dedup import (
-        _incremental_classify,
-        _pmh_bands,
-        _pmh_shingle_sigs,
+        PMH_BANDS,
+        PMH_BUCKET_CAP,
+        PMH_JMIN,
+        PMH_PERMS,
+        _pmh_band_keys,
+        _pmh_shingle,
     )
 
+    ids = np.asarray(ids, dtype=np.int64)
+    shingled = [(i, out) for i, t in zip(ids.tolist(), texts)
+                if (out := _pmh_shingle(t)) is not None]
+    sh_doc = np.array([i for i, _ in shingled], dtype=np.int64)
+    sh_sets = [out[0] for _, out in shingled]
+    sigs = np.array([out[1] for _, out in shingled], dtype=np.int64)
+    keys = _pmh_band_keys(sigs.reshape(len(shingled), PMH_PERMS)).ravel()
+    bdoc = np.repeat(sh_doc, PMH_BANDS)  # row-major: doc, then band 0..3
+    band = np.tile(np.arange(PMH_BANDS, dtype=np.int32), len(shingled))
+    bk = _bucket(band, keys)
+
+    # --- candidates: the batch's buckets below the cap over store +
+    #     batch rows (a replayed doc counts on both sides) ---
+    uk, inv, n_batch = np.unique(bk, return_inverse=True, return_counts=True)
+    spans = [(p, np.searchsorted(p["bk"], uk), np.searchsorted(p["bk"], uk, "right"))
+             for p in bands]
+    n_store = sum((hi - lo for _, lo, hi in spans), np.zeros(len(uk), dtype=np.int64))
+    kept = n_batch + n_store <= PMH_BUCKET_CAP
+    rows = np.flatnonzero(kept[inv])  # kept batch band rows
+
+    def pairs(member_key, member_doc, keep):
+        """Distinct (doc, dup) over kept batch rows and the members of
+        their buckets, filtered by ``keep(doc, dup)``."""
+        order = np.argsort(member_key, kind="stable")
+        count = np.bincount(member_key, minlength=len(uk))
+        end = np.cumsum(count)
+        at = _ranges(end[inv[rows]] - count[inv[rows]], end[inv[rows]])
+        doc = np.repeat(bdoc[rows], count[inv[rows]])
+        dup = member_doc[order][at]
+        hit = keep(doc, dup)
+        return np.unique(np.stack([doc[hit], dup[hit]], axis=1), axis=0)
+
+    store_key = np.concatenate(
+        [np.repeat(np.arange(len(uk)), hi - lo) for _, lo, hi in spans]
+        + [np.zeros(0, dtype=np.int64)]
+    )
+    store_doc = np.concatenate(
+        [p["doc_id"][_ranges(lo, hi)] for p, lo, hi in spans]
+        + [np.zeros(0, dtype=np.int64)]
+    )
+    cand = [
+        (pairs(store_key, store_doc, lambda d, u: u != d), True),
+        (pairs(inv, bdoc, lambda d, u: u < d), False),
+    ]
+
+    # --- exact-Jaccard verify, then q322's per-doc aggregate ---
+    sets = _shingle_sets(
+        shingles, dict(zip(sh_doc.tolist(), sh_sets)),
+        np.concatenate([c.ravel() for c, _ in cand]),
+    )
+    agg: dict[int, list] = {}  # doc -> [store_min, batch_min, ns, nb]
+    for c, from_store in cand:
+        for doc, dup in c.tolist():
+            a, b = sets[doc], sets[dup]
+            common = len(np.intersect1d(a, b, assume_unique=True))
+            if float(common) / float(len(a) + len(b) - common) >= PMH_JMIN:
+                s = agg.setdefault(doc, [None, None, 0, 0])
+                k = 0 if from_store else 1
+                s[k] = dup if s[k] is None else min(s[k], dup)
+                s[k + 2] += 1
+
+    # --- keep-first: only doc_ids the index does not hold yet ---
+    new_b = ~_held(bands, bdoc)
+    new_s = ~_held(bands, sh_doc)
+    results = []
+    for i in ids[~_held(prior, ids)].tolist():
+        s_min, b_min, ns, nb = agg.get(i, (None, None, 0, 0))
+        results.append({
+            "doc_id": i,
+            "status": "dup_of_store" if s_min is not None
+            else "dup_in_batch" if b_min is not None else "novel",
+            "dup_of": b_min if s_min is None else s_min,
+            "n_store_matches": ns,
+            "n_batch_matches": nb,
+        })
+    return {
+        "bands": pa.table({
+            "doc_id": pa.array(bdoc[new_b], pa.int64()),
+            "band": pa.array(band[new_b], pa.int32()),
+            "key": pa.array(keys[new_b], pa.int64()),
+        }),
+        "shingles": pa.table({
+            "doc_id": pa.array(sh_doc[new_s], pa.int64()),
+            "shingles": pa.array(
+                [x for x, new in zip(sh_sets, new_s) if new], pa.list_(pa.int64())
+            ),
+        }),
+        "results": pa.Table.from_pylist(results, schema=pa.schema([
+            ("doc_id", pa.int64()), ("status", pa.string()), ("dup_of", pa.int64()),
+            ("n_store_matches", pa.int64()), ("n_batch_matches", pa.int64()),
+        ])),
+    }
+
+
+# component -> (its DDL, its cached decode)
+_NEARDUP_PARTS = {
+    "bands": ("doc_id bigint, band int, key bigint", _band_index),
+    "shingles": ("doc_id bigint, shingles array<bigint>", _shingle_index),
+    "results": (
+        "doc_id bigint, status string, dup_of bigint,"
+        " n_store_matches bigint, n_batch_matches bigint",
+        _id_index,
+    ),
+}
+
+
+def _neardup_batch(batch: DataFrame, index_path: str) -> None:
     spark = batch.sparkSession
-    docs = batch.select("doc_id", "text")
-    shingled = _pmh_shingle_sigs(docs).localCheckpoint()
-    bands_b = _pmh_bands(shingled.select("doc_id", "sigs"))
+    docs = batch.select("doc_id", "text").toArrow()
+    if docs.column("doc_id").null_count:
+        raise ValueError("a near-dup batch needs a doc_id on every document")
     m = manifest.latest(spark, index_path)
-    store_bands = manifest.read(
-        spark, index_path, m, "bands", "doc_id bigint, band int, key bigint"
+    parts = {
+        comp: _probe_parts(spark, index_path, m, comp, schema, decode)
+        for comp, (schema, decode) in _NEARDUP_PARTS.items()
+    }
+    new = _neardup_absorb(
+        docs.column("doc_id").to_numpy(), docs.column("text").to_pylist(),
+        parts["bands"], parts["shingles"], parts["results"],
     )
-    store_sh = manifest.read(
-        spark, index_path, m, "shingles", "doc_id bigint, shingles array<bigint>"
-    )
-
-    results = _incremental_classify(
-        docs.select("doc_id"),
-        store_bands,
-        bands_b,
-        store_sh,
-        shingled.select("doc_id", "shingles"),
-    ).localCheckpoint()
-
-    # --- absorb: append ONLY unseen doc_ids (replay-idempotent); the
-    #     results keep the first classification of each doc_id and
-    #     land in the SAME commit as its bands and shingles ---
-    seen = store_bands.select("doc_id").distinct()
-    prior = manifest.read(spark, index_path, m, "results", "doc_id bigint")
-    manifest.write(spark, index_path, "neardup", m, {
-        "bands": bands_b.join(seen, "doc_id", "left_anti"),
-        "shingles": shingled.select("doc_id", "shingles").join(
-            seen, "doc_id", "left_anti"
-        ),
-        "results": results.join(prior.select("doc_id"), "doc_id", "left_anti"),
+    # one file per component: a local frame is split across every core
+    done = manifest.write(spark, index_path, "neardup", m, {
+        comp: spark.createDataFrame(t, _NEARDUP_PARTS[comp][0]).coalesce(1)
+        for comp, t in new.items()
     })
+    # the committed rows ARE these tables: the next absorb runs no fill
+    for comp, t in new.items():
+        key = manifest.paths(index_path, done, comp)[-1]
+        _PROBE_CACHE[key] = _NEARDUP_PARTS[comp][1](t)
 
 
 def _seed_neardup_index(docs: DataFrame, index_path: str) -> None:
@@ -364,21 +549,26 @@ def _seed_vector_index(emb: DataFrame, index_path: str) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Driver-side probe (the ivfpq and hyperplane query faces). An ask
-# returns K rows, so it is answered on the driver in numpy: a per-ask
-# Spark plan takes seconds to build (16 x 64 literal pivot columns)
-# before it runs. Each committed subdirectory is decoded ONCE, by
-# Spark's own parquet reader (any scheme Spark reads), into the arrays
-# _PROBE_CACHE holds under the subdirectory's path. A committed
-# subdirectory never changes and its name carries a random token, so
-# an entry is never stale; a probe only evicts the entries of its
-# index component that the latest manifest no longer lists
-# (compaction, drop + re-create). Probes in several threads need no
-# lock: a probe works on the arrays it took, and a race costs at most
-# a refill, or an unlisted entry kept until the next probe of that
-# component. At a stable version an ask runs one Spark job: the
-# collect of its query row. Memory: ~350 B per vector per ivfpq index
-# (codes 80 B + float32 vectors 264 B), ~300 B per hyperplane index.
+# Driver-side probe (the ivfpq and hyperplane query faces, and the
+# near-dup absorb above). An ask returns K rows, so it is answered on
+# the driver in numpy: a per-ask Spark plan takes seconds to build
+# (16 x 64 literal pivot columns) before it runs. Each committed
+# subdirectory is decoded ONCE, by Spark's own parquet reader (any
+# scheme Spark reads) with the component's DDL, so a fill is one Spark
+# job with no schema inference, into the arrays _PROBE_CACHE holds
+# under the subdirectory's path; a near-dup absorb puts the rows it
+# committed there itself. A committed subdirectory never changes and
+# its name carries a random token, so an entry is never stale; a probe
+# only evicts the entries of its index component that the latest
+# manifest no longer lists (compaction), and drop_index evicts the
+# whole index. Probes in several threads need no lock: a probe works
+# on the arrays it took, and a race costs at most a refill, or an
+# unlisted entry kept until the next probe of that component. At a
+# stable version an ask runs one Spark job: the collect of its query
+# row. Memory: ~350 B per vector per ivfpq index (codes 80 B + float32
+# vectors 264 B), ~300 B per hyperplane index, and ~470 B per stored
+# document per near-dup index at the sf0.1 fixture's 54-word median
+# (bands 72 B, shingle sets 8 B per shingle plus 24 B).
 #
 # Every step keeps Spark's arithmetic, so answers equal the Spark-plan
 # reference in tests/test_driver_probe.py bit for bit: int8 codes as
@@ -391,37 +581,54 @@ def _seed_vector_index(emb: DataFrame, index_path: str) -> None:
 _PROBE_CACHE: dict[str, dict[str, np.ndarray]] = {}
 
 
-def _probe_parts(
-    spark: SparkSession, index_path: str, m, comp: str, cols: tuple
-) -> list[dict[str, np.ndarray]]:
-    """Decoded ``cols`` of every non-empty subdirectory that ``m``
-    lists for ``comp``, in manifest order."""
-    listed = manifest.paths(index_path, m, comp)
-    prefix = os.path.join(index_path, comp, "")
+def _evict(prefix: str, keep=frozenset()) -> None:
+    """Drop every cache entry under ``prefix`` that ``keep`` lacks."""
     for key in list(_PROBE_CACHE):
-        if key.startswith(prefix) and key not in listed:
+        if key.startswith(prefix) and key not in keep:
             _PROBE_CACHE.pop(key, None)
+
+
+def _probe_parts(
+    spark: SparkSession, index_path: str, m, comp: str, schema: str, decode=None
+) -> list[dict[str, np.ndarray]]:
+    """The decoded parts of every non-empty subdirectory that ``m``
+    lists for ``comp``, in manifest order. A miss reads the
+    subdirectory with the DDL ``schema`` (one Spark job, no schema
+    inference) and keeps ``decode(table)``; the default decodes each
+    column through _np_column. A decode's first array has one entry
+    per row."""
+    listed = manifest.paths(index_path, m, comp)
+    _evict(os.path.join(index_path, comp, ""), keep=set(listed))
     parts = []
     for d in listed:
         arrays = _PROBE_CACHE.get(d)
         if arrays is None:
-            table = spark.read.parquet(d).select(*cols).toArrow()
-            arrays = _PROBE_CACHE[d] = {
-                c: _np_column(table.column(c)) for c in cols
-            }
-        if len(arrays[cols[0]]):  # an absorb of only seen ids commits none
+            table = spark.read.schema(schema).parquet(d).toArrow()
+            arrays = _PROBE_CACHE[d] = (decode or _columns)(table)
+        if len(next(iter(arrays.values()))):  # an absorb of only seen ids commits none
             parts.append(arrays)
     return parts
 
 
+def _columns(table) -> dict[str, np.ndarray]:
+    return {c: _np_column(table.column(c)) for c in table.column_names}
+
+
 def _np_column(col) -> np.ndarray:
-    """An Arrow column as numpy; a fixed-length list column as 2-D."""
+    """An Arrow column as numpy; a list column whose lists all have one
+    length as 2-D. Raises ValueError on lists of unequal length."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     arr = col.combine_chunks()
     if pa.types.is_list(arr.type):
         flat = arr.flatten().to_numpy(zero_copy_only=False)
-        return flat.reshape(len(arr), -1) if len(arr) else flat
+        if not len(arr):
+            return flat
+        lens = pc.list_value_length(arr).fill_null(-1).to_numpy()
+        if lens.min() != lens.max() or lens[0] < 0:
+            raise ValueError("list column with values of unequal length")
+        return flat.reshape(len(arr), lens[0])
     return arr.to_numpy(zero_copy_only=False)
 
 
@@ -451,8 +658,7 @@ def _stored_vectors(parts: list, wanted: np.ndarray):
     vector drop out, repeated ids repeat (an inner join)."""
     vid = _concat(parts, "vec_id")
     uniq, first = np.unique(vid, return_index=True)
-    pos = np.searchsorted(uniq, wanted).clip(max=len(uniq) - 1)
-    found = uniq[pos] == wanted
+    pos, found = _lookup(uniq, wanted)
     return wanted[found], _concat(parts, "embedding")[first[pos[found]]]
 
 
@@ -512,8 +718,10 @@ def query_vector_index(
     )
 
     m = manifest.latest(spark, index_path)
-    codes = _probe_parts(spark, index_path, m, "codes", ("vec_id", "cell", "pqc"))
-    vectors = _probe_parts(spark, index_path, m, "vectors", ("vec_id", "embedding"))
+    codes = _probe_parts(
+        spark, index_path, m, "codes", "vec_id bigint, cell bigint, pqc array<bigint>"
+    )
+    vectors = _probe_parts(spark, index_path, m, "vectors", _VECTORS_STREAM_SCHEMA)
     q = _query_vector(q_emb)
     if q is None or not codes or not vectors:
         return _hits(spark, q, np.zeros(0, dtype=np.int64), None)
@@ -588,9 +796,9 @@ def query_hyperplane_index(
 
     m = manifest.latest(spark, index_path)
     buckets = _probe_parts(
-        spark, index_path, m, "buckets", ("vec_id", "tbl", "bucket")
+        spark, index_path, m, "buckets", "vec_id bigint, tbl int, bucket bigint"
     )
-    vectors = _probe_parts(spark, index_path, m, "vectors", ("vec_id", "embedding"))
+    vectors = _probe_parts(spark, index_path, m, "vectors", _VECTORS_STREAM_SCHEMA)
     q = _query_vector(q_emb)
     if q is None or not buckets or not vectors:
         return _hits(spark, q, np.zeros(0, dtype=np.int64), None)

@@ -47,6 +47,7 @@ SLOW_TESTS = {
     "test_neardup_stream_multibatch_and_replay",
     "test_neardup_stream_single_trigger_matches_q322",
     "test_neardup_stream_equals_batch_both_scales",
+    "test_absorb_cost_is_flat_from_5k_to_50k_stored_docs",
     "test_vector_index_stream_equals_batch_q362",
     "test_vector_index_batch_dedupes_within_microbatch",
     "test_graph_index_incremental_absorb",

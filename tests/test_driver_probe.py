@@ -333,6 +333,57 @@ def test_drop_and_recreate_serves_new_rows(spark, sf_dir, tmp_path):
         ix.create_index(spark, root, kind, kind, emb.where(F.col("vec_id") % 2 == 0))
         assert all(i % 2 == 0 for i in _ids(spark, root, kind, q_emb, -1))
         ix.drop_index(spark, root, kind)
+        assert not _cached(os.path.join(root, kind))
         ix.create_index(spark, root, kind, kind, emb.where(F.col("vec_id") % 2 == 1))
         got = _ids(spark, root, kind, q_emb, -1)
         assert got and all(i % 2 == 1 for i in got)
+
+
+def _jobs(spark, group, fn):
+    """The number of Spark jobs ``fn()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cache_fill_runs_one_job_per_subdirectory(spark, sf_dir, tmp_path):
+    """After a compaction every component is one new subdirectory. The
+    first ask then runs the collect of its query row plus one job per
+    component it decodes (codes, vectors), and the first near-dup
+    absorb its 4 jobs plus one per component (bands, shingles,
+    results); a fill reads with the component's DDL, so no schema
+    inference job runs."""
+    root = str(tmp_path / "root")
+    emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    q_emb = emb.where(F.col("vec_id") == vector.BINARY_Q_ID)
+    ix.create_index(spark, root, "v", "ivfpq", emb.where(F.col("vec_id") % 2 == 0))
+    ix.append_index(spark, root, "v", emb.where(F.col("vec_id") % 2 == 1))
+    want = _ids(spark, root, "v", q_emb, -1)
+    ix.compact_index(spark, root, "v")
+    got = []
+    assert _jobs(spark, "ivfpq-ask-after-compaction",
+                 lambda: got.extend(_ids(spark, root, "v", q_emb, -1))) == 3
+    assert got == want
+
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    phase = F.col("doc_id") % 10
+    ix.create_index(spark, root, "d", "neardup", docs.where(phase < 8))
+    ix.append_index(spark, root, "d", docs.where(phase == 8))
+    ix.compact_index(spark, root, "d")
+    batch = docs.where(phase == 9)
+    assert _jobs(spark, "neardup-absorb-after-compaction",
+                 lambda: ix.append_index(spark, root, "d", batch)) == 7
+
+
+def test_np_column_refuses_ragged_lists():
+    import pyarrow as pa
+
+    with pytest.raises(ValueError):
+        ist._np_column(pa.chunked_array([pa.array([[1, 2, 3], [4]])]))
+    square = ist._np_column(pa.chunked_array([pa.array([[1, 2], [3, 4]])]))
+    assert square.tolist() == [[1, 2], [3, 4]]
