@@ -18,6 +18,13 @@ Hive-style, so a plain parquet reader pointed at a component directory
 still reads it as one table (plus a string column ``v``); only the
 manifest says which of those rows are committed.
 
+A component is staged in one of two ways, by what the writer holds:
+a distributed ``DataFrame`` by a Spark parquet write, and a
+``pyarrow.Table`` already on the driver as one parquet file that
+pyarrow serializes in memory and the same Hadoop FileSystem that
+publishes the manifest writes (no Spark job; a 0-row table stages and
+lists nothing).
+
 Garbage collection runs after every commit, with no time threshold:
 at version n it keeps what n and n-1 list (a reader still holding n-1
 can finish) and anything tagged above n (a live writer's staging),
@@ -26,12 +33,15 @@ and deletes every other tagged subdirectory, temp file and manifest.
 
 from __future__ import annotations
 
+import io
 import json
 import os
 import re
 import uuid
 from dataclasses import asdict, dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
@@ -104,23 +114,46 @@ def write(
     index_path: str,
     kind: str,
     base: Manifest | None,
-    frames: dict[str, DataFrame],
+    frames: dict[str, DataFrame | pa.Table],
     replace: bool = False,
 ) -> Manifest:
     """Stage each frame into a fresh subdirectory tagged base+1, then
     commit base+1 listing them after ``base``'s subdirectories (or,
-    with ``replace``, instead of them)."""
+    with ``replace``, instead of them). A ``pyarrow.Table`` is written
+    from the driver, and skipped when it has no rows."""
     if base is not None and base.kind != kind:
         raise ValueError(f"{index_path!r} is a {base.kind!r} index, not {kind!r}")
     version = base.version + 1 if base else 1
     comps = {} if replace or base is None else dict(base.components)
     for comp, df in frames.items():
+        is_table = isinstance(df, pa.Table)
+        if is_table and not df.num_rows:
+            continue
         d = f"v={version:08d}-{uuid.uuid4().hex[:8]}"
-        df.write.parquet(os.path.join(index_path, comp, d))
+        if is_table:
+            _write_table(spark, os.path.join(index_path, comp, d), df)
+        else:
+            df.write.parquet(os.path.join(index_path, comp, d))
         comps[comp] = comps.get(comp, []) + [d]
     m = Manifest(kind, version, comps)
     commit(spark, index_path, m)
     return m
+
+
+def _write_table(spark: SparkSession, subdir: str, table: pa.Table) -> None:
+    """``table`` as the one parquet file of the new ``subdir``."""
+    buf = io.BytesIO()
+    # no dictionary pages: Spark's writer drops a dictionary that does
+    # not shrink the column, pyarrow's keeps it (+27% on a batch's
+    # shingle hashes)
+    pq.write_table(table, buf, use_dictionary=False)
+    name = f"part-00000-{uuid.uuid4()}.parquet"
+    hpath, fs = _hadoop_path_and_fs(spark, os.path.join(subdir, name))
+    out = fs.create(hpath, False)
+    try:
+        out.write(buf.getvalue())
+    finally:
+        out.close()
 
 
 def commit(spark: SparkSession, index_path: str, m: Manifest) -> None:

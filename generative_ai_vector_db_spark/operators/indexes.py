@@ -50,8 +50,8 @@ by doc_id, in the same commit as its bands and shingles), and
 absorbing is the batch op q322. The absorb runs on the driver from the
 same cache (``streaming/ingest_stream.py::_neardup_absorb``, the numpy
 twin of q322's classifier ``operators/dedup.py::_incremental_classify``);
-at a stable cache it runs 4 Spark jobs, the batch collect and the three
-component writes. The two monitor kinds (r15, VERDICT
+at a stable cache it runs 1 Spark job, the batch collect, and writes
+its three components from the driver. The two monitor kinds (r15, VERDICT
 r14 item 4) are EVENT indexes: their absorb reduces a micro-batch of
 events to per-day integer partials, and their read face is
 ``read_index`` — the full anytime e-process table (q367/q368) over

@@ -147,11 +147,9 @@ def embed_expr(col, dim: int = EMBED_DIM):
     [-1, 1]. The real model (MiniLM et al.) slots in behind the same
     column contract via mapInPandas — see sources/embedding_stage.py.
     """
-    return F.array(
-        *[
-            (F.xxhash64(col, F.lit(i)) / F.lit(float(2**63))).cast("float")
-            for i in range(dim)
-        ]
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda i: (F.xxhash64(col, i) / F.lit(float(2**63))).cast("float"),
     )
 
 

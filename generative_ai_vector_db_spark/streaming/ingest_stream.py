@@ -238,8 +238,11 @@ def run_upsert_stream(
 # sorted by (band, key), so a batch key's store count and members are
 # two searchsorted calls per part: the per-absorb cost is O(batch ·
 # bands + candidates) plus O(log store) per lookup, with no regroup of
-# the store. At a stable cache an absorb runs 4 Spark jobs: the batch
-# collect and the 3 component writes.
+# the store. The rows it commits are already on the driver, so
+# manifest.write stages each component as one parquet file written
+# from the driver, and skips an empty one: at a stable cache an absorb
+# runs 1 Spark job, the batch collect, and a full replay commits
+# nothing.
 #
 # At-least-once safety (the q335/_upsert_batch discipline):
 #   - absorb is doc_id-anti-joined against the index, so a replayed
@@ -470,11 +473,10 @@ def _neardup_batch(batch: DataFrame, index_path: str) -> None:
         docs.column("doc_id").to_numpy(), docs.column("text").to_pylist(),
         parts["bands"], parts["shingles"], parts["results"],
     )
-    # one file per component: a local frame is split across every core
-    done = manifest.write(spark, index_path, "neardup", m, {
-        comp: spark.createDataFrame(t, _NEARDUP_PARTS[comp][0]).coalesce(1)
-        for comp, t in new.items()
-    })
+    new = {comp: t for comp, t in new.items() if t.num_rows}
+    if not new:
+        return  # a full replay: the index holds every doc_id already
+    done = manifest.write(spark, index_path, "neardup", m, new)
     # the committed rows ARE these tables: the next absorb runs no fill
     for comp, t in new.items():
         key = manifest.paths(index_path, done, comp)[-1]

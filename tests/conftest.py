@@ -102,6 +102,18 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(_pytest.mark.slow)
 
 
+def _jobs(spark, group, fn):
+    """The number of Spark jobs ``fn()`` runs."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark():
     import tempfile

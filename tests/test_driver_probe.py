@@ -26,6 +26,8 @@ from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 from generative_ai_vector_db_spark.streaming.ingest_stream import _vectors
 from generative_ai_vector_db_spark.tables import load
 
+from .conftest import _jobs
+
 # ---------------------------------------------------------------------------
 # The frozen reference: the Spark-plan faces, verbatim.
 # ---------------------------------------------------------------------------
@@ -339,25 +341,13 @@ def test_drop_and_recreate_serves_new_rows(spark, sf_dir, tmp_path):
         assert got and all(i % 2 == 1 for i in got)
 
 
-def _jobs(spark, group, fn):
-    """The number of Spark jobs ``fn()`` runs."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_cache_fill_runs_one_job_per_subdirectory(spark, sf_dir, tmp_path):
     """After a compaction every component is one new subdirectory. The
     first ask then runs the collect of its query row plus one job per
     component it decodes (codes, vectors), and the first near-dup
-    absorb its 4 jobs plus one per component (bands, shingles,
-    results); a fill reads with the component's DDL, so no schema
-    inference job runs."""
+    absorb its batch collect plus one job per component (bands,
+    shingles, results); a fill reads with the component's DDL, so no
+    schema inference job runs."""
     root = str(tmp_path / "root")
     emb = load(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     q_emb = emb.where(F.col("vec_id") == vector.BINARY_Q_ID)
@@ -377,7 +367,7 @@ def test_cache_fill_runs_one_job_per_subdirectory(spark, sf_dir, tmp_path):
     ix.compact_index(spark, root, "d")
     batch = docs.where(phase == 9)
     assert _jobs(spark, "neardup-absorb-after-compaction",
-                 lambda: ix.append_index(spark, root, "d", batch)) == 7
+                 lambda: ix.append_index(spark, root, "d", batch)) == 4
 
 
 def test_np_column_refuses_ragged_lists():

@@ -160,6 +160,108 @@ def test_neardup_absorb_is_all_or_nothing(spark, sf_dir, tmp_path, monkeypatch):
     assert rows() == want
 
 
+def _neardup_rows(spark, root, name):
+    comps = ix.open_index(spark, root, name)
+    return {c: sorted(tuple(r) for r in comps[c].collect()) for c in comps}
+
+
+def test_neardup_replay_commits_nothing(spark, sf_dir, tmp_path):
+    """A replayed batch holds no doc_id the index lacks: it commits no
+    version and stages no subdirectory or file."""
+    root = str(tmp_path / "root")
+    path = os.path.join(root, "docs")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    phase = F.col("doc_id") % 10
+    ix.create_index(spark, root, "docs", "neardup", docs.where(phase < 8))
+    batch = docs.where(phase >= 8)
+    ix.append_index(spark, root, "docs", batch)
+
+    def state():
+        m = manifest.latest(spark, path)
+        files = {r["component"]: r["files"]
+                 for r in ix.describe_index(spark, root, "docs").collect()}
+        listed = {c: sorted(os.listdir(os.path.join(path, c))) for c in m.components}
+        return m, files, listed
+
+    before = state()
+    ix.append_index(spark, root, "docs", batch)
+    assert state() == before
+
+
+def test_neardup_crash_while_staging_keeps_prior_version(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """An absorb that dies writing ``shingles`` from the driver, after
+    ``bands`` is staged, leaves the prior version served; the next
+    absorb's garbage collection deletes the orphaned ``bands``
+    subdirectory."""
+    root = str(tmp_path / "root")
+    path = os.path.join(root, "docs")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    phase = F.col("doc_id") % 10
+    ix.create_index(spark, root, "docs", "neardup", docs.where(phase < 7))
+    ix.append_index(spark, root, "docs", docs.where(phase == 7))
+    base = manifest.latest(spark, path)
+    prior = _neardup_rows(spark, root, "docs")
+
+    write_table = manifest._write_table
+
+    def crash_on_shingles(spark_, subdir, table):
+        if os.path.basename(os.path.dirname(subdir)) == "shingles":
+            raise RuntimeError("injected crash while staging shingles")
+        write_table(spark_, subdir, table)
+
+    monkeypatch.setattr(manifest, "_write_table", crash_on_shingles)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ix.append_index(spark, root, "docs", docs.where(phase == 8))
+    monkeypatch.undo()
+    assert manifest.latest(spark, path) == base
+    assert _neardup_rows(spark, root, "docs") == prior
+    bands = os.path.join(path, "bands")
+    orphans = [d for d in os.listdir(bands) if d not in base.components["bands"]]
+    assert len(orphans) == 1 and orphans[0].startswith(f"v={base.version + 1:08d}-")
+
+    ix.append_index(spark, root, "docs", docs.where(phase == 8))
+    assert manifest.latest(spark, path).version == base.version + 1
+    assert orphans[0] not in os.listdir(bands)
+    grown = _neardup_rows(spark, root, "docs")
+    assert len(grown["results"]) > len(prior["results"])
+
+
+def test_plain_parquet_read_returns_every_committed_row(spark, sf_dir, tmp_path):
+    """A plain parquet read of a near-dup component directory, over
+    subdirectories Spark wrote (seed, compaction) and the driver wrote
+    (absorbs), returns the committed rows with the DDL's column types."""
+    from generative_ai_vector_db_spark.streaming.ingest_stream import _NEARDUP_PARTS
+
+    root = str(tmp_path / "root")
+    path = os.path.join(root, "docs")
+    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+    phase = F.col("doc_id") % 10
+    ix.create_index(spark, root, "docs", "neardup", docs.where(phase < 6))
+    ix.append_index(spark, root, "docs", docs.where(phase == 6))
+    ix.compact_index(spark, root, "docs")
+    ix.append_index(spark, root, "docs", docs.where(phase == 7))
+    m = manifest.latest(spark, path)
+
+    for comp, (ddl, _) in _NEARDUP_PARTS.items():
+        listed = manifest.paths(path, m, comp)
+        assert len(listed) == 2, comp  # the compacted rows + the driver's
+        plain = spark.read.parquet(os.path.join(path, comp)).drop("v")
+        want_schema = spark.createDataFrame([], ddl).schema
+        assert [(f.name, f.dataType) for f in plain.schema] == [
+            (f.name, f.dataType) for f in want_schema
+        ], comp
+        committed = []
+        for d in listed:
+            committed += spark.read.schema(ddl).parquet(d).collect()
+        assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, committed)), comp
+
+    absorbed = docs.where(phase.isin(6, 7)).select("doc_id").collect()
+    results = spark.read.parquet(os.path.join(path, "results")).collect()
+    assert sorted(r["doc_id"] for r in results) == sorted(r[0] for r in absorbed)
+
+
 def test_describe_reads_one_version_while_appends_commit(
     spark, sf_dir, tmp_path, monkeypatch
 ):

@@ -27,6 +27,8 @@ from generative_ai_vector_db_spark.operators import indexes as ix
 from generative_ai_vector_db_spark.streaming import ingest_stream as ist
 from generative_ai_vector_db_spark.tables import load
 
+from .conftest import _jobs
+
 
 # ---------------------------------------------------------------------------
 # The frozen reference: the Spark absorb, verbatim.
@@ -160,25 +162,18 @@ def test_driver_absorb_equals_spark_reference_on_edge_cases(spark, tmp_path):
     assert results[340][0] == "novel"  # 50 stored copies + 6 in the batch
 
 
-def test_neardup_append_runs_four_spark_jobs(spark, sf_dir, tmp_path):
-    """At a stable cache an absorb runs the batch collect and the three
-    component writes, and nothing else."""
+def test_neardup_append_runs_one_spark_job(spark, sf_dir, tmp_path):
+    """At a stable cache an absorb runs the batch collect and nothing
+    else: the classify is numpy and the three components are written
+    from the driver."""
     root = str(tmp_path / "root")
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     phase = F.col("doc_id") % 10
     ix.create_index(spark, root, "docs", "neardup", docs.where(phase < 8))
     ix.append_index(spark, root, "docs", docs.where(phase == 8))
     batch = docs.where(phase == 9)
-
-    sc = spark.sparkContext
-    group = "neardup-append-at-stable-cache"
-    sc.setJobGroup(group, "append_index")
-    try:
-        ix.append_index(spark, root, "docs", batch)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert _jobs(spark, "neardup-append-at-stable-cache",
+                 lambda: ix.append_index(spark, root, "docs", batch)) == 1
 
 
 # ---------------------------------------------------------------------------

@@ -1,8 +1,11 @@
 from __future__ import annotations
 
+import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from generative_ai_vector_db_spark.operators import chunker, ingest, text
+from generative_ai_vector_db_spark.tables import load
 
 from .oracle_utils import compare_query
 
@@ -68,6 +71,33 @@ def test_ingest_pipeline_output(spark, sf_dir):
     assert "embedding" not in pdf.columns
     assert pdf["embedding_digest"].str.len().eq(64).all()
     assert (pdf["embedding_dim"] == ingest.EMBED_DIM).all()
+
+
+def test_embed_expr_equals_one_column_per_feature(spark, sf_dir):
+    """``embed_expr`` is one transform over a 0..dim-1 sequence; the
+    reference is the form it replaced, one xxhash64 column per feature.
+    Every document's vector must come out bit-identical, with the same
+    type."""
+
+    def one_column_per_feature(col, dim=ingest.EMBED_DIM):
+        return F.array(*[
+            (F.xxhash64(col, F.lit(i)) / F.lit(float(2**63))).cast("float")
+            for i in range(dim)
+        ])
+
+    docs = load(spark, sf_dir, "documents")
+    out = docs.select(
+        "doc_id",
+        ingest.embed_expr(F.col("text")).alias("got"),
+        one_column_per_feature(F.col("text")).alias("want"),
+    )
+    assert out.schema["got"].dataType == out.schema["want"].dataType
+    rows = out.collect()
+    assert len(rows) == docs.count() > 0
+    for r in rows:
+        got = np.array(r["got"], dtype=np.float32)
+        want = np.array(r["want"], dtype=np.float32)
+        assert got.tobytes() == want.tobytes(), r["doc_id"]
 
 
 def test_lang_id_mostly_english(spark, sf_dir):
