@@ -133,9 +133,10 @@ ORDER BY filename
 # ---------------------------------------------------------------------------
 # Full ingest pipeline over the documents table (rows-only driver check;
 # unit-tested in tests/test_ingest.py). Mirrors §3.1: chunk (R9) →
-# sha2 content hash (R10) → anti-join dedup against the existing store
-# (R11) → metadata stamp (R12) → deterministic embed stand-in (R13) —
-# the output is what R14 would append to the embeddings table.
+# sha2 content hash (R10) → anti-join dedup against a fixture stand-in
+# for the store (R11) → metadata stamp (R12) → deterministic embed
+# stand-in (R13) — the output is what R14 would append to the
+# embeddings table.
 # ---------------------------------------------------------------------------
 EMBED_DIM = 16
 
@@ -160,7 +161,13 @@ def ingest_pipeline(
     size: int = 1000,
     overlap: int = 200,
 ) -> DataFrame:
-    """documents → chunk → hash → dedup-vs-store → stamp → embed."""
+    """documents → chunk → hash → dedup → stamp → embed.
+
+    The dedup keeps the lowest ``doc_id`` of each in-batch ``file_hash``
+    and then drops every ``doc_id`` found in a fixture stand-in for the
+    store, the even-id half of ``sf_dir/embeddings``; it does not read a
+    real store.
+    """
     docs = load(spark, sf_dir, "documents")
     # Stand-in for the existing store: the even-id half of the embeddings
     # table (at sf0.01 the store covers EVERY doc_id, which would make the
