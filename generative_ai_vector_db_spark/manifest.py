@@ -45,7 +45,7 @@ import pyarrow.parquet as pq
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
-from .fsutil import _hadoop_path_and_fs
+from .fsutil import _hadoop_path_and_fs, read_parquet
 
 META = "_meta"
 _MANIFEST = re.compile(r"v(\d{8})\.json")
@@ -101,11 +101,12 @@ def paths(index_path: str, m: Manifest | None, comp: str) -> list[str]:
 def read(
     spark: SparkSession, index_path: str, m: Manifest | None, comp: str, schema=None
 ) -> DataFrame:
-    """Component ``comp`` as committed in ``m``; an empty frame of
-    ``schema`` when nothing is committed for it yet."""
+    """Component ``comp`` as committed in ``m`` (``fsutil.read_parquet``:
+    no Spark job); an empty frame of ``schema`` when nothing is
+    committed for it yet."""
     listed = paths(index_path, m, comp)
     if listed or schema is None:
-        return spark.read.parquet(*listed)
+        return read_parquet(spark, *listed)
     return spark.createDataFrame([], schema)
 
 

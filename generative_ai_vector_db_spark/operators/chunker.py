@@ -125,15 +125,9 @@ def recursive_chunks(
         ]
 
     rest = separators[separators.index(sep) + 1 :] or ("",)
-    pieces = text.split(sep)
     chunks: list[str] = []
     cur: list[str] = []
-
-    def cur_len(extra: str | None = None) -> int:
-        items = cur + ([extra] if extra is not None else [])
-        if not items:
-            return 0
-        return sum(len(p) for p in items) + len(sep) * (len(items) - 1)
+    cur_len = 0  # len(sep.join(cur)), kept as pieces come and go
 
     def close() -> None:
         if cur:
@@ -141,26 +135,32 @@ def recursive_chunks(
             if joined.strip():
                 chunks.append(joined)
 
-    for p in pieces:
+    for p in text.split(sep):
         if len(p) > size:
             close()
-            cur = []
+            cur, cur_len = [], 0
             chunks.extend(recursive_chunks(p, size, overlap, rest))
             continue
-        if cur and cur_len(p) > size:
+        if cur and cur_len + len(sep) + len(p) > size:
             close()
-            tail: list[str] = []
-            for q in reversed(cur):
-                cand = [q] + tail
-                if sum(len(x) for x in cand) + len(sep) * (len(cand) - 1) > overlap:
+            # the tail cur[start:] grows backwards while its joined
+            # length stays <= overlap
+            start, tail_len = len(cur), 0
+            while start:
+                longer = len(cur[start - 1]) + (
+                    tail_len + len(sep) if start < len(cur) else 0
+                )
+                if longer > overlap:
                     break
-                tail = cand
-            cur = tail
+                start, tail_len = start - 1, longer
             # the overlap seed plus the incoming piece may itself exceed
             # size (short text, overlap-sized seed): drop seed pieces
             # oldest-first until the chunk bound holds
-            while cur and cur_len(p) > size:
-                cur.pop(0)
+            while start < len(cur) and tail_len + len(sep) + len(p) > size:
+                start += 1
+                tail_len = tail_len - len(cur[start - 1]) - len(sep) if start < len(cur) else 0
+            cur, cur_len = cur[start:], tail_len
+        cur_len = cur_len + len(sep) + len(p) if cur else len(p)
         cur.append(p)
     close()
     return chunks

@@ -127,9 +127,9 @@ def compact(
     paths — no driver-local ``os.walk``."""
     import math
 
-    from ..fsutil import parquet_stats
+    from ..fsutil import parquet_stats, read_parquet
 
-    df = spark.read.parquet(src_path)
+    df = read_parquet(spark, src_path)
     total_bytes = parquet_stats(spark, src_path)[1]
     n_files = max(1, math.ceil(total_bytes / (target_file_mb * 1024 * 1024)))
     df.repartition(n_files).write.mode("overwrite").parquet(dst_path)

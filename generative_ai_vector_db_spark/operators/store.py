@@ -21,6 +21,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..fsutil import read_parquet
 from ..tables import load
 
 DELETE_SOURCE = "src3"  # fixture predicate (documents.source in src0..src19)
@@ -34,8 +35,10 @@ def append_vectors(df: DataFrame, store_path: str) -> None:
 
 
 def open_store(spark: SparkSession, store_path: str) -> DataFrame:
-    """R15: open existing store (catalog load)."""
-    return spark.read.parquet(store_path)
+    """R15: open existing store: a parquet read whose schema comes from
+    the footer Spark's inference would read, read on the driver
+    (``fsutil.read_parquet``), so opening runs no Spark job."""
+    return read_parquet(spark, store_path)
 
 
 def delete_by_source(store: DataFrame, docs: DataFrame, source: str) -> DataFrame:

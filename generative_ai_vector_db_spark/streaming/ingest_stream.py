@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import manifest
-from ..fsutil import path_exists as _path_exists
+from ..fsutil import path_exists as _path_exists, read_parquet
 from ..operators.chunker import chunk_udf
 from ..operators.store import append_vectors
 from ..sources.embedding_stage import embed_text
@@ -104,7 +104,7 @@ def _ingest_batch(
     # create-or-append); any other read failure (corruption, permissions,
     # schema drift) must fail the batch, not silently disable dedup.
     if _path_exists(spark, store_path):
-        existing = spark.read.parquet(store_path).select("file_hash").distinct()
+        existing = read_parquet(spark, store_path).select("file_hash").distinct()
         chunks = chunks.join(existing, "file_hash", "left_anti")
 
     out = embed_text(
@@ -185,7 +185,7 @@ def _upsert_batch(batch: DataFrame, store_path: str, key: str, ts_col: str) -> N
         # micro-batches converge to the same store (the at-least-once
         # foreachBatch contract needs exactly this idempotence)
         merged = (
-            spark.read.parquet(store_path)
+            read_parquet(spark, store_path)
             .unionByName(latest)
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)

@@ -1,9 +1,11 @@
 """Fixture-table catalog (TESTDATA.md / FIXTURES.md).
 
 ``load(spark, sf_dir, name)`` returns the parquet-backed DataFrame for one
-of the ten driver tables. Scans are plain ``spark.read.parquet`` so
-Catalyst gets predicate pushdown, column pruning and (on partitioned
-production layouts) partition pruning for free — callers express filters
+of the ten driver tables. Scans are parquet reads with a given schema
+(``fsutil.read_parquet``: the footer Spark's inference would read, read
+on the driver, so opening a table runs no Spark job), so Catalyst gets
+predicate pushdown, column pruning and (on partitioned production
+layouts) partition pruning for free — callers express filters
 declaratively and never pre-materialize.
 
 At 100 TB the same catalog would point at partitioned/bucketed layouts
@@ -18,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from . import TABLE_NAMES
+from .fsutil import read_parquet
 
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
@@ -49,7 +52,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Older generations stored ts as TIMESTAMP(NANOS), which Spark
         # rejects by default (SPARK-40819); read nanos as long and truncate.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for col_name, dtype in df.dtypes:
         if dtype == "bigint" and name == "events" and col_name == "ts":
             # nanos as long: integer `div`, NOT double division — epoch-nanos
