@@ -43,8 +43,8 @@ N_HASHES = 16
 N_BANDS = 4  # rows per band = 4 -> (1/4,4) S-curve threshold ~ J=0.5
 SHINGLE_N = 3
 MINHASH_VERIFY_TAU = 0.4
-SIMHASH_BITS = 64
-SIMHASH_BANDS = 4
+Q45_SIMHASH_BITS = 64
+Q45_SIMHASH_BANDS = 4  # q319 below has its own SIMHASH_BITS/SIMHASH_BANDS
 SIMHASH_HAM_TAU = 3
 
 
@@ -172,7 +172,7 @@ def simhash_signatures(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    bits: int = SIMHASH_BITS,
+    bits: int = Q45_SIMHASH_BITS,
 ) -> DataFrame:
     """(id, simhash) via explode + 64 SUM aggregates — the fast path.
 
@@ -219,7 +219,9 @@ def simhash_signatures(
     return votes.select(id_col, out.alias("simhash"))
 
 
-def with_simhash(docs: DataFrame, text_col: str = "text", bits: int = SIMHASH_BITS) -> DataFrame:
+def with_simhash(
+    docs: DataFrame, text_col: str = "text", bits: int = Q45_SIMHASH_BITS
+) -> DataFrame:
     """Add a 64-bit ``simhash`` column: bit j is the sign of the sum of
     (+1/-1) votes from each word's xxhash64 bit j. The per-word hash
     array is materialized as an attribute first (PERF NOTE). Keyless
@@ -340,7 +342,7 @@ def q45_simhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                         .bitwiseAND(F.lit(0xFFFF))
                         .alias("q_val"),
                     )
-                    for q in range(SIMHASH_BANDS)
+                    for q in range(Q45_SIMHASH_BANDS)
                 ]
             )
         ).alias("q"),

@@ -59,7 +59,13 @@ everything absorbed so far; ``query_index`` is undefined for them.
 
 Each kind is one row of ``streaming/ingest_stream.py::KINDS``: its
 stream source schema, seed, absorb, and query or read face. Every
-face below looks the kind up in that table; none branches on it.
+face below looks the kind up in that table; none branches on it. The
+rows share their bodies: the vector kinds one seed, ``ivfpq`` and
+``hyperplane`` one absorb and one driver probe, each bound to a
+``VectorKind`` (payload component and DDL, encoder, candidate rule),
+and the monitor kinds one absorb and one read, each bound to a
+``MonitorKind`` (partials DDL, day-frame reduce, per-day merge,
+e-process table).
 
 Scale: the absorbs are O(batch) per trigger with read-side dedup /
 degree bounds. The near-dup absorb looks each batch bucket and doc_id

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import partial
 from typing import NamedTuple
 
 import numpy as np
@@ -29,7 +30,47 @@ from pyspark.sql import functions as F
 from .. import manifest
 from ..fsutil import path_exists as _path_exists, read_parquet
 from ..operators.chunker import chunk_udf
+from ..operators.dedup import (
+    PMH_BANDS,
+    PMH_BUCKET_CAP,
+    PMH_JMIN,
+    PMH_PERMS,
+    _pmh_band_keys,
+    _pmh_bands,
+    _pmh_shingle,
+    _pmh_shingle_sigs,
+)
+from ..operators.graph_ann import (
+    GRAPH_DEGREE,
+    _entry_points,
+    _salted_init_pairs,
+    _scored_topg,
+    beam_search,
+    build_knn_graph,
+)
+from ..operators.stats import (
+    ab_daily_frame,
+    ab_monitor_from_daily,
+    drift_daily_frame,
+    drift_edetector_from_daily,
+)
 from ..operators.store import append_vectors
+from ..operators.vector import (
+    ANN_PLANES,
+    ANN_PROBE_FLIPS,
+    IVF_NPROBE,
+    K,
+    PPQ_M,
+    PPQ_SHORTLIST,
+    PPQ_SUB,
+    _ann_sign_matrices,
+    _hyperplane_buckets,
+    _int8_codes,
+    _ivf_assign,
+    _ivf_pivots,
+    _pq_codebooks,
+    _pq_encode,
+)
 from ..sources.embedding_stage import embed_text
 from ..sources.loaders import parse_files
 
@@ -259,13 +300,6 @@ def run_upsert_stream(
 # persisted index; q322 feeds its probe the fixture split (doc_id %
 # 10 == 7 marks the batch).
 # ---------------------------------------------------------------------------
-def _commit(spark: SparkSession, index_path: str, kind: str, frames: dict) -> None:
-    """Commit ``frames`` on top of the latest version (none for a
-    seed: ``create_index`` refuses an existing index)."""
-    base = manifest.latest(spark, index_path)
-    manifest.write(spark, index_path, kind, base, frames)
-
-
 def _vectors(spark: SparkSession, index_path: str, m) -> DataFrame:
     # dedup read-side: a seed corpus may repeat a vec_id
     return manifest.read(spark, index_path, m, "vectors").dropDuplicates(["vec_id"])
@@ -343,15 +377,6 @@ def _neardup_absorb(ids, texts, bands: list, shingles: list, prior: list) -> dic
     parts. Classifies by operators/dedup.py::_incremental_classify's
     exact rules, then keeps what the index does not hold yet."""
     import pyarrow as pa
-
-    from ..operators.dedup import (
-        PMH_BANDS,
-        PMH_BUCKET_CAP,
-        PMH_JMIN,
-        PMH_PERMS,
-        _pmh_band_keys,
-        _pmh_shingle,
-    )
 
     ids = np.asarray(ids, dtype=np.int64)
     shingled = [(i, out) for i, t in zip(ids.tolist(), texts)
@@ -485,12 +510,11 @@ def _neardup_batch(batch: DataFrame, index_path: str) -> None:
 
 def _seed_neardup_index(docs: DataFrame, index_path: str) -> None:
     """``create_index``'s seed: the persisted band/shingle index of an
-    existing corpus, as version 1."""
-    from ..operators.dedup import _pmh_bands, _pmh_shingle_sigs
-
+    existing corpus, as version 1 (``create_index`` refuses an existing
+    index)."""
     spark = docs.sparkSession
     shingled = _pmh_shingle_sigs(docs.select("doc_id", "text")).localCheckpoint()
-    _commit(spark, index_path, "neardup", {
+    manifest.write(spark, index_path, "neardup", None, {
         "bands": _pmh_bands(shingled.select("doc_id", "sigs")),
         "shingles": shingled.select("doc_id", "shingles"),
     })
@@ -510,44 +534,61 @@ def _seed_neardup_index(docs: DataFrame, index_path: str) -> None:
 # stream-built == batch-built is a testable equality
 # (test_round13_ops), not a design claim.
 #
+# ivfpq, hyperplane and graph share one seed, and ivfpq and hyperplane
+# one absorb and one driver probe (graph keeps its own, below). A
+# VectorKind row holds only what differs between them: the kind's
+# payload component and its DDL, the encoder of a (vec_id, embedding)
+# frame into payload rows, and the probe's candidate rule. Every ANN
+# family here is filter-then-verify, so the candidate rule is all of a
+# kind's probe that differs; the exact re-rank (_hits below) is
+# common.
+#
 # At-least-once safety (the _neardup_batch discipline): absorb is
-# vec_id-anti-joined against the code store and commits vectors and
-# codes in one manifest version, so replays converge to the identical
+# vec_id-anti-joined against the payload and commits vectors and
+# payload in one manifest version, so replays converge to the identical
 # index.
 # ---------------------------------------------------------------------------
-def _vector_index_batch(batch: DataFrame, index_path: str) -> None:
-    from ..operators.vector import _int8_codes, _ivf_assign, _pq_encode
+class VectorKind(NamedTuple):
+    name: str
+    payload: str  # the component beside ``vectors``
+    ddl: str  # the payload's DDL, for the driver probe's read
+    encode: Callable[[DataFrame], DataFrame]  # emb -> payload rows
+    # (payload parts, int8 query code, q_id) -> candidate vec_ids
+    candidates: Callable[[list, np.ndarray, int], np.ndarray] | None = None
 
+
+def _seed_vectors(vk: VectorKind, emb: DataFrame, index_path: str) -> None:
+    """``create_index``'s seed: the vectors and payload of an existing
+    corpus, as version 1 (``create_index`` refuses an existing
+    index)."""
+    emb = emb.select("vec_id", "embedding")
+    manifest.write(emb.sparkSession, index_path, vk.name, None, {
+        "vectors": emb, vk.payload: vk.encode(emb),
+    })
+
+
+def _absorb_vectors(vk: VectorKind, batch: DataFrame, index_path: str) -> None:
     spark = batch.sparkSession
     # dropDuplicates BEFORE the anti-join: duplicate vec_ids WITHIN one
-    # micro-batch would both survive the anti-join against the code
-    # store and occupy two shortlist slots at query time (only the
-    # vectors store is deduped read-side), breaking stream==batch
-    # equality (r14 advice).
+    # micro-batch would both survive the anti-join against the payload
+    # and occupy two shortlist slots at query time (only the vectors
+    # store is deduped read-side), breaking stream==batch equality
+    # (r14 advice).
     emb = batch.select("vec_id", "embedding").dropDuplicates(["vec_id"])
-    codes = _int8_codes(emb).select("vec_id", "code")
-    entries = _ivf_assign(emb).join(_pq_encode(codes), "vec_id")
+    rows = vk.encode(emb)
     m = manifest.latest(spark, index_path)
-    seen = manifest.read(spark, index_path, m, "codes", "vec_id bigint")
+    seen = manifest.read(spark, index_path, m, vk.payload, "vec_id bigint")
     seen = seen.select("vec_id").distinct()
-    manifest.write(spark, index_path, "ivfpq", m, {
+    manifest.write(spark, index_path, vk.name, m, {
         "vectors": emb.join(seen, "vec_id", "left_anti"),
-        "codes": entries.join(seen, "vec_id", "left_anti"),
+        vk.payload: rows.join(seen, "vec_id", "left_anti"),
     })
 
 
-def _seed_vector_index(emb: DataFrame, index_path: str) -> None:
-    """``create_index``'s seed: the persisted codes/vectors index of an
-    existing corpus, as version 1."""
-    from ..operators.vector import _int8_codes, _ivf_assign, _pq_encode
-
-    spark = emb.sparkSession
-    emb = emb.select("vec_id", "embedding")
+def _ivfpq_rows(emb: DataFrame) -> DataFrame:
+    """q362's code rows (vec_id, cell, pqc)."""
     codes = _int8_codes(emb).select("vec_id", "code")
-    entries = _ivf_assign(emb).join(_pq_encode(codes), "vec_id")
-    _commit(spark, index_path, "ivfpq", {
-        "vectors": emb, "codes": entries,
-    })
+    return _ivf_assign(emb).join(_pq_encode(codes), "vec_id")
 
 
 # ---------------------------------------------------------------------------
@@ -678,8 +719,6 @@ def _hits(spark: SparkSession, q, ids: np.ndarray, vecs) -> DataFrame:
     vec_id ASC, as a local (vec_id, cos_sim, rn) frame."""
     import pyarrow as pa
 
-    from ..operators.vector import K
-
     cos = np.zeros(len(ids))
     null = np.zeros(len(ids), dtype=bool)
     if len(ids):
@@ -701,33 +740,29 @@ def _hits(spark: SparkSession, q, ids: np.ndarray, vecs) -> DataFrame:
     return spark.createDataFrame(table, "vec_id bigint, cos_sim double, rn bigint")
 
 
-def query_vector_index(
-    spark: SparkSession, index_path: str, q_emb: DataFrame, q_id: int
+def _probe_vectors(
+    vk: VectorKind, spark: SparkSession, index_path: str, q_emb: DataFrame,
+    q_id: int,
 ) -> DataFrame:
-    """q362's probe against the PERSISTED index, on the driver: probe
-    the IVF_NPROBE cells with the largest query dots (ties to the lower
-    cell), ADC-score their code rows against the query's PQ table, keep
-    the PPQ_SHORTLIST lowest (adc, vec_id) rows and re-rank them by
-    exact cosine. ``q_emb`` holds at most one (vec_id, embedding) row;
-    ``q_id`` is excluded from the answer."""
-    from ..operators.vector import (
-        IVF_NPROBE,
-        PPQ_M,
-        PPQ_SHORTLIST,
-        PPQ_SUB,
-        _ivf_pivots,
-        _pq_codebooks,
-    )
-
+    """A kind's probe against the PERSISTED index, on the driver: its
+    candidate rule picks vec_ids from the cached payload, and the
+    candidates re-rank by exact cosine. ``q_emb`` holds at most one
+    (vec_id, embedding) row; ``q_id`` is excluded from the answer."""
     m = manifest.latest(spark, index_path)
-    codes = _probe_parts(
-        spark, index_path, m, "codes", "vec_id bigint, cell bigint, pqc array<bigint>"
-    )
+    payload = _probe_parts(spark, index_path, m, vk.payload, vk.ddl)
     vectors = _probe_parts(spark, index_path, m, "vectors", _VECTORS_STREAM_SCHEMA)
     q = _query_vector(q_emb)
-    if q is None or not codes or not vectors:
+    if q is None or not payload or not vectors:
         return _hits(spark, q, np.zeros(0, dtype=np.int64), None)
-    qc = _int8_code(q)
+    cand = vk.candidates(payload, _int8_code(q), q_id)
+    return _hits(spark, q, *_stored_vectors(vectors, cand))
+
+
+def _ivfpq_candidates(codes: list, qc: np.ndarray, q_id: int) -> np.ndarray:
+    """q362's shortlist: probe the IVF_NPROBE cells with the largest
+    query dots (ties to the lower cell), ADC-score their code rows
+    against the query's PQ table and keep the PPQ_SHORTLIST lowest
+    (adc, vec_id) rows."""
     qdots = np.array(_ivf_pivots(), dtype=np.int64) @ qc
     probed = np.lexsort((np.arange(len(qdots)), -qdots))[:IVF_NPROBE]
     books = np.array(_pq_codebooks(), dtype=np.int64)  # (M, KSUB, SUB)
@@ -736,8 +771,13 @@ def query_vector_index(
     keep = np.isin(_concat(codes, "cell"), probed) & (vid != q_id)
     vid = vid[keep]
     adc = qt[np.arange(PPQ_M), _concat(codes, "pqc")[keep]].sum(axis=1)
-    shortlist = vid[np.lexsort((vid, adc))[:PPQ_SHORTLIST]]
-    return _hits(spark, q, *_stored_vectors(vectors, shortlist))
+    return vid[np.lexsort((vid, adc))[:PPQ_SHORTLIST]]
+
+
+IVFPQ = VectorKind(
+    "ivfpq", "codes", "vec_id bigint, cell bigint, pqc array<bigint>",
+    _ivfpq_rows, _ivfpq_candidates,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -749,62 +789,19 @@ def query_vector_index(
 # of its own code), so unlike the graph face below, stream-built ==
 # batch-built holds EXACTLY and is asserted at both fixture scales.
 #
-# At-least-once safety (the _vector_index_batch discipline): the
-# incoming micro-batch is vec_id-deduped, absorb is anti-joined
-# against the BUCKET store and commits vectors and buckets in one
-# manifest version.
+# At-least-once safety (the shared vector absorb above): the incoming
+# micro-batch is vec_id-deduped, absorb is anti-joined against the
+# BUCKET store and commits vectors and buckets in one manifest
+# version.
 # Scale: per trigger O(batch) bucket rows appended; a query is a
 # driver-side probe over the cached bucket arrays that scores only the
 # flip neighborhood of the query's buckets — the persisted corpus is
 # never re-read or re-encoded at a stable version.
 # ---------------------------------------------------------------------------
-def _hyperplane_index_batch(batch: DataFrame, index_path: str) -> None:
-    from ..operators.vector import _hyperplane_buckets
-
-    spark = batch.sparkSession
-    emb = batch.select("vec_id", "embedding").dropDuplicates(["vec_id"])
-    buckets = _hyperplane_buckets(emb)
-    m = manifest.latest(spark, index_path)
-    seen = manifest.read(spark, index_path, m, "buckets", "vec_id bigint")
-    seen = seen.select("vec_id").distinct()
-    manifest.write(spark, index_path, "hyperplane", m, {
-        "vectors": emb.join(seen, "vec_id", "left_anti"),
-        "buckets": buckets.join(seen, "vec_id", "left_anti"),
-    })
-
-
-def _seed_hyperplane_index(emb: DataFrame, index_path: str) -> None:
-    """``create_index``'s seed: the persisted buckets/vectors index of
-    an existing corpus, as version 1."""
-    from ..operators.vector import _hyperplane_buckets
-
-    spark = emb.sparkSession
-    emb = emb.select("vec_id", "embedding")
-    _commit(spark, index_path, "hyperplane", {
-        "vectors": emb, "buckets": _hyperplane_buckets(emb),
-    })
-
-
-def query_hyperplane_index(
-    spark: SparkSession, index_path: str, q_emb: DataFrame, q_id: int
-) -> DataFrame:
-    """q320's probe against the PERSISTED bucket table, on the driver:
-    the query's sign bucket in each table expands to its
-    ANN_PROBE_FLIPS neighbourhood, every vector with a bucket row in it
-    is a candidate once, and candidates re-rank by exact cosine.
-    ``q_emb`` holds at most one (vec_id, embedding) row; ``q_id`` is
-    excluded from the answer."""
-    from ..operators.vector import ANN_PLANES, ANN_PROBE_FLIPS, _ann_sign_matrices
-
-    m = manifest.latest(spark, index_path)
-    buckets = _probe_parts(
-        spark, index_path, m, "buckets", "vec_id bigint, tbl int, bucket bigint"
-    )
-    vectors = _probe_parts(spark, index_path, m, "vectors", _VECTORS_STREAM_SCHEMA)
-    q = _query_vector(q_emb)
-    if q is None or not buckets or not vectors:
-        return _hits(spark, q, np.zeros(0, dtype=np.int64), None)
-    qc = _int8_code(q)
+def _hyperplane_candidates(buckets: list, qc: np.ndarray, q_id: int) -> np.ndarray:
+    """q320's candidates: the query's sign bucket in each table expands
+    to its ANN_PROBE_FLIPS neighbourhood, and every vector with a
+    bucket row in it is a candidate once."""
     weights = 1 << np.arange(ANN_PLANES, dtype=np.int64)
     vid, tbl = _concat(buckets, "vec_id"), _concat(buckets, "tbl")
     bucket = _concat(buckets, "bucket")
@@ -812,8 +809,13 @@ def query_hyperplane_index(
     for t, planes in enumerate(_ann_sign_matrices()):
         qb = int(((np.array(planes, dtype=np.int64) @ qc) >= 0) @ weights)
         hit |= (tbl == t) & np.isin(bucket, [qb ^ f for f in ANN_PROBE_FLIPS])
-    cand = np.unique(vid[hit & (vid != q_id)])
-    return _hits(spark, q, *_stored_vectors(vectors, cand))
+    return np.unique(vid[hit & (vid != q_id)])
+
+
+HYPERPLANE = VectorKind(
+    "hyperplane", "buckets", "vec_id bigint, tbl int, bucket bigint",
+    _hyperplane_buckets, _hyperplane_candidates,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -861,8 +863,6 @@ def _graph_index_edges(
     the latest by default."""
     from pyspark.sql import Window
 
-    from ..operators.graph_ann import GRAPH_DEGREE
-
     m = m or manifest.latest(spark, index_path)
     w = Window.partitionBy("src").orderBy(F.col("sim").desc(), F.col("dst"))
     return (
@@ -875,13 +875,6 @@ def _graph_index_edges(
 
 
 def _graph_index_batch(batch: DataFrame, index_path: str) -> None:
-    from ..operators.graph_ann import (
-        GRAPH_DEGREE,
-        _entry_points,
-        _salted_init_pairs,
-        _scored_topg,
-    )
-
     spark = batch.sparkSession
     new = batch.select("vec_id", "embedding").dropDuplicates(["vec_id"])
     m = manifest.latest(spark, index_path)
@@ -930,16 +923,11 @@ def _graph_index_batch(batch: DataFrame, index_path: str) -> None:
     })
 
 
-def _seed_graph_index(emb: DataFrame, index_path: str) -> None:
-    """``create_index``'s seed: the persisted edges/vectors index of an
-    existing corpus via the batch NN-descent build, as version 1."""
-    from ..operators.graph_ann import build_knn_graph
-
-    spark = emb.sparkSession
-    emb = emb.select("vec_id", "embedding")
-    _commit(spark, index_path, "graph", {
-        "vectors": emb, "edges": build_knn_graph(spark, emb),
-    })
+# the seed's payload is the batch NN-descent build over the corpus
+GRAPH = VectorKind(
+    "graph", "edges", "src bigint, dst bigint, sim double",
+    lambda emb: build_knn_graph(emb.sparkSession, emb),
+)
 
 
 def query_graph_index(
@@ -950,8 +938,6 @@ def query_graph_index(
     ``q_emb`` holds at most one (vec_id, embedding) row; ``q_id`` seeds
     the search and is excluded from the answer."""
     from pyspark.sql import types as T
-
-    from ..operators.graph_ann import beam_search
 
     q = _query_vector(q_emb)
     # q_emb's own element type: the float64 widening is exact, and the
@@ -993,7 +979,10 @@ def query_graph_index(
 # away. The merged day frame rides the SAME ab_monitor_from_daily /
 # drift_edetector_from_daily core as the graded batch ops. Integer sums and min/max merge associatively
 # across any batch split, so stream==batch is an EXACT equality
-# (tested at sf0.01 and sf0.1), not an approximation.
+# (tested at sf0.01 and sf0.1), not an approximation. The two kinds
+# share one absorb and one read; a MonitorKind row holds what differs:
+# the partials DDL, the day-frame reduce, the per-day merge and the
+# e-process table.
 #
 # Scale: per trigger the work is O(micro-batch) plus a day-frame
 # recompute over the partials store, which grows with days x batches
@@ -1017,33 +1006,28 @@ def _monitor_src_key():
     )
 
 
-def _monitor_batch(kind, daily_frame, batch: DataFrame, monitor_path: str):
+class MonitorKind(NamedTuple):
+    name: str
+    ddl: str  # the daily_partials DDL
+    daily_frame: Callable[..., DataFrame]  # operators/stats.py's reduce
+    # the per-day aggregations of the partials, built per read: a
+    # Column needs a live SparkContext, which import time lacks
+    merge: Callable[[], list]
+    table: Callable[[DataFrame], DataFrame]  # day frame -> e-process
+
+
+def _absorb_monitor(mk: MonitorKind, batch: DataFrame, monitor_path: str) -> None:
+    spark = batch.sparkSession
     keyed = batch.withColumn("src_file", _monitor_src_key())
-    partials = daily_frame(keyed, extra_keys=("src_file",))
-    _commit(batch.sparkSession, monitor_path, kind, {"daily_partials": partials})
+    partials = mk.daily_frame(keyed, extra_keys=("src_file",))
+    base = manifest.latest(spark, monitor_path)
+    manifest.write(spark, monitor_path, mk.name, base, {"daily_partials": partials})
 
 
-def _ab_monitor_batch(batch: DataFrame, monitor_path: str) -> None:
-    from ..operators.stats import ab_daily_frame
-
-    _monitor_batch("ab_monitor", ab_daily_frame, batch, monitor_path)
-
-
-def _drift_monitor_batch(batch: DataFrame, monitor_path: str) -> None:
-    from ..operators.stats import drift_daily_frame
-
-    _monitor_batch("drift_monitor", drift_daily_frame, batch, monitor_path)
-
-
-AB_PARTIALS_SCHEMA = "src_file string, day string, n bigint, k bigint"
-DRIFT_PARTIALS_SCHEMA = (
-    "src_file string, day string, n bigint, s bigint, mx bigint, mn bigint"
-)
-
-
-def _merged_partials(
-    spark: SparkSession, monitor_path: str, schema: str
+def _read_monitor(
+    mk: MonitorKind, spark: SparkSession, monitor_path: str
 ) -> DataFrame:
+    """The kind's e-process table over everything absorbed so far."""
     # dedup on (src_file, day): re-processing a file under ANY
     # checkpoint re-appends the same deterministic partial row;
     # distinct files legitimately contribute separate partials for
@@ -1054,36 +1038,26 @@ def _merged_partials(
     # written — the contract "empty before any matching event" holds
     # from deployment.
     m = manifest.latest(spark, monitor_path)
-    partials = manifest.read(spark, monitor_path, m, "daily_partials", schema)
-    return partials.dropDuplicates(["src_file", "day"])
+    partials = manifest.read(spark, monitor_path, m, "daily_partials", mk.ddl)
+    daily = partials.dropDuplicates(["src_file", "day"]).groupBy("day").agg(*mk.merge())
+    return mk.table(daily)
 
 
-def read_ab_monitor(spark: SparkSession, monitor_path: str) -> DataFrame:
-    """The q367 e-process table over everything absorbed so far."""
-    from ..operators.stats import ab_monitor_from_daily
-
-    daily = _merged_partials(
-        spark, monitor_path, AB_PARTIALS_SCHEMA
-    ).groupBy("day").agg(
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum("k").cast("bigint").alias("k"),
-    )
-    return ab_monitor_from_daily(daily)
+def _sum(col: str):
+    return F.sum(col).cast("bigint").alias(col)
 
 
-def read_drift_monitor(spark: SparkSession, monitor_path: str) -> DataFrame:
-    """The q368 e-detector table over everything absorbed so far."""
-    from ..operators.stats import drift_edetector_from_daily
-
-    daily = _merged_partials(
-        spark, monitor_path, DRIFT_PARTIALS_SCHEMA
-    ).groupBy("day").agg(
-        F.sum("n").cast("bigint").alias("n"),
-        F.sum("s").cast("bigint").alias("s"),
-        F.max("mx").alias("mx"),
-        F.min("mn").alias("mn"),
-    )
-    return drift_edetector_from_daily(daily)
+AB_MONITOR = MonitorKind(  # q367
+    "ab_monitor", "src_file string, day string, n bigint, k bigint",
+    ab_daily_frame, lambda: [_sum("n"), _sum("k")], ab_monitor_from_daily,
+)
+DRIFT_MONITOR = MonitorKind(  # q368
+    "drift_monitor",
+    "src_file string, day string, n bigint, s bigint, mx bigint, mn bigint",
+    drift_daily_frame,
+    lambda: [_sum("n"), _sum("s"), F.max("mx").alias("mx"), F.min("mn").alias("mn")],
+    drift_edetector_from_daily,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1091,7 +1065,9 @@ def read_drift_monitor(spark: SparkSession, monitor_path: str) -> DataFrame:
 # source schema, the seed create_index runs, the absorb that
 # append_index and each run_index_stream trigger run, and the query
 # face (vector kinds) or the read face (monitor kinds). Seeds and
-# absorbs take (df, index_path); a monitor's seed is its absorb.
+# absorbs take (df, index_path). The vector and monitor rows point at
+# the shared bodies above, bound to their VectorKind or MonitorKind; a
+# monitor's seed is its absorb.
 # ---------------------------------------------------------------------------
 class IndexKind(NamedTuple):
     schema: str
@@ -1101,28 +1077,30 @@ class IndexKind(NamedTuple):
     read: Callable[[SparkSession, str], DataFrame] | None = None
 
 
+def _vector_kind(vk: VectorKind) -> IndexKind:
+    return IndexKind(
+        _VECTORS_STREAM_SCHEMA, partial(_seed_vectors, vk),
+        partial(_absorb_vectors, vk), query=partial(_probe_vectors, vk),
+    )
+
+
+def _monitor_kind(mk: MonitorKind) -> IndexKind:
+    absorb = partial(_absorb_monitor, mk)
+    return IndexKind(
+        _EVENTS_STREAM_SCHEMA, absorb, absorb, read=partial(_read_monitor, mk)
+    )
+
+
 KINDS = {
-    "ivfpq": IndexKind(
-        _VECTORS_STREAM_SCHEMA, _seed_vector_index, _vector_index_batch,
-        query=query_vector_index,
-    ),
-    "hyperplane": IndexKind(
-        _VECTORS_STREAM_SCHEMA, _seed_hyperplane_index, _hyperplane_index_batch,
-        query=query_hyperplane_index,
-    ),
+    "ivfpq": _vector_kind(IVFPQ),
+    "hyperplane": _vector_kind(HYPERPLANE),
     "graph": IndexKind(
-        _VECTORS_STREAM_SCHEMA, _seed_graph_index, _graph_index_batch,
+        _VECTORS_STREAM_SCHEMA, partial(_seed_vectors, GRAPH), _graph_index_batch,
         query=query_graph_index,
     ),
     "neardup": IndexKind(
         "doc_id bigint, text string", _seed_neardup_index, _neardup_batch
     ),
-    "ab_monitor": IndexKind(
-        _EVENTS_STREAM_SCHEMA, _ab_monitor_batch, _ab_monitor_batch,
-        read=read_ab_monitor,
-    ),
-    "drift_monitor": IndexKind(
-        _EVENTS_STREAM_SCHEMA, _drift_monitor_batch, _drift_monitor_batch,
-        read=read_drift_monitor,
-    ),
+    "ab_monitor": _monitor_kind(AB_MONITOR),
+    "drift_monitor": _monitor_kind(DRIFT_MONITOR),
 }

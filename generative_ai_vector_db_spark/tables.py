@@ -22,13 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 from . import TABLE_NAMES
 from .fsutil import read_parquet
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
-def sf_dir_from_env(default: str = DEFAULT_SF_DIR) -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", default)
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")

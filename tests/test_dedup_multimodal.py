@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -63,6 +65,16 @@ def test_simhash_planted_neardups(spark):
     assert ham(0, 100) < 16
     assert ham(0, 102) < 16
     assert ham(1, 2) > 20
+
+
+def test_q45_bands_signature_into_four_quarters(spark, sf_dir):
+    """q45 bands its 64-bit signature into 4 16-bit quarters, q_idx
+    0..3. With q319's 8-band constant in their place, quarters 4-7
+    shift by 64..112 bits, which Java takes mod 64: they repeat 0-3 and
+    double the exploded rows and the self-join matches."""
+    plan = dedup.q45_simhash_neardup(spark, sf_dir)._jdf.queryExecution()
+    q_idx = re.findall(r"q_idx, (\d+)", plan.analyzed().toString())
+    assert sorted(set(q_idx)) == ["0", "1", "2", "3"]
 
 
 def test_dedup_clusters_match_oracle(spark, sf_dir):

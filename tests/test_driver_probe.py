@@ -1,6 +1,7 @@
 """Equivalence lock for the driver-side index probe.
 
-``query_vector_index`` and ``query_hyperplane_index`` answer an ask on
+The ``ivfpq`` and ``hyperplane`` query faces (``KINDS[kind].query``,
+one driver probe with a candidate rule per kind) answer an ask on
 the driver from numpy arrays cached per committed subdirectory. The two
 ``spark_query_*`` functions below are the Spark plans those faces ran
 before, kept verbatim (imports made absolute) as the frozen reference:
@@ -166,8 +167,8 @@ def spark_query_hyperplane_index(
 # Driver answer == Spark reference
 # ---------------------------------------------------------------------------
 KINDS = {
-    "ivfpq": (ist.query_vector_index, spark_query_vector_index),
-    "hyperplane": (ist.query_hyperplane_index, spark_query_hyperplane_index),
+    "ivfpq": (ist.KINDS["ivfpq"].query, spark_query_vector_index),
+    "hyperplane": (ist.KINDS["hyperplane"].query, spark_query_hyperplane_index),
 }
 
 

@@ -221,7 +221,7 @@ def test_vector_index_stream_equals_batch_q362(spark, sf_dir_t2, tmp_path):
     q_emb = emb.where(F.col("vec_id") == vector.BINARY_Q_ID)
     got = [
         (r["vec_id"], r["cos_sim"], r["rn"])
-        for r in ist.query_vector_index(
+        for r in ist.KINDS["ivfpq"].query(
             spark, index, q_emb, vector.BINARY_Q_ID
         ).collect()
     ]
@@ -238,7 +238,7 @@ def test_vector_index_stream_equals_batch_q362(spark, sf_dir_t2, tmp_path):
     assert spark.read.parquet(index + "/codes").count() == n_codes
     again = [
         (r["vec_id"], r["cos_sim"], r["rn"])
-        for r in ist.query_vector_index(
+        for r in ist.KINDS["ivfpq"].query(
             spark, index, q_emb, vector.BINARY_Q_ID
         ).collect()
     ]

@@ -46,7 +46,7 @@ def test_vector_index_batch_dedupes_within_microbatch(
     q_emb = emb.where(F.col("vec_id") == vector.BINARY_Q_ID)
     got = [
         (r["vec_id"], r["cos_sim"], r["rn"])
-        for r in ist.query_vector_index(
+        for r in ist.KINDS["ivfpq"].query(
             spark, index, q_emb, vector.BINARY_Q_ID
         ).collect()
     ]
@@ -125,7 +125,7 @@ def test_hyperplane_stream_equals_batch_both_scales(spark, sf, tmp_path):
     q_emb = emb.where(F.col("vec_id") == vector.BINARY_Q_ID)
     got = [
         (r["vec_id"], r["cos_sim"], r["rn"])
-        for r in ist.query_hyperplane_index(
+        for r in ist.KINDS["hyperplane"].query(
             spark, index, q_emb, vector.BINARY_Q_ID
         ).collect()
     ]
@@ -599,14 +599,14 @@ def test_monitor_streams_equal_batch(spark, sf, tmp_path):
         (
             "ab",
             "ab_monitor",
-            ist.read_ab_monitor,
+            ist.KINDS["ab_monitor"].read,
             stats.q367_anytime_ab_monitor,
             ("day", "n_t", "k_t", "log_e", "rejected"),
         ),
         (
             "drift",
             "drift_monitor",
-            ist.read_drift_monitor,
+            ist.KINDS["drift_monitor"].read,
             stats.q368_drift_edetector,
             ("day", "n_t", "log_e", "rejected"),
         ),
@@ -702,7 +702,7 @@ def test_monitor_stream_before_first_matching_event(spark, tmp_path):
         "append"
     ).parquet(src)
     ix.run_index_stream(spark, root, "mon", src, ck)
-    assert ist.read_ab_monitor(spark, mon).count() == 0
+    assert ist.KINDS["ab_monitor"].read(spark, mon).count() == 0
 
     ev.where(F.col("event_type") != "view").coalesce(1).write.mode(
         "append"
@@ -710,7 +710,7 @@ def test_monitor_stream_before_first_matching_event(spark, tmp_path):
     ix.run_index_stream(spark, root, "mon", src, ck)
     got = [
         (r["day"], r["n_t"], r["k_t"], r["log_e"], r["rejected"])
-        for r in ist.read_ab_monitor(spark, mon).collect()
+        for r in ist.KINDS["ab_monitor"].read(spark, mon).collect()
     ]
     want = [
         (r["day"], r["n_t"], r["k_t"], r["log_e"], r["rejected"])

@@ -678,8 +678,8 @@ def test_monitor_cold_start_zero_files(spark, tmp_path):
         "rejected",
     ]
 
-    ab = ist.read_ab_monitor(spark, str(tmp_path / "ab"))
-    dr = ist.read_drift_monitor(spark, str(tmp_path / "dr"))
+    ab = ist.KINDS["ab_monitor"].read(spark, str(tmp_path / "ab"))
+    dr = ist.KINDS["drift_monitor"].read(spark, str(tmp_path / "dr"))
     assert ab.count() == 0 and dr.count() == 0
 
     # a monitor created from an EMPTY seed reads empty
